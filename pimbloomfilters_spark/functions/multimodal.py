@@ -184,77 +184,6 @@ def decode_image(df: DataFrame, data_col: str = "data",
     )
 
 
-def resize_images(df: DataFrame, out_h: int = 4, out_w: int = 4,
-                  data_col: str = "data") -> DataFrame:
-    """Nearest-neighbor resize of every frame (numpy index math — the real
-    resize kernel would swap in here). Output is re-encoded PBM1 binary."""
-
-    def _resize(batches):
-        for pdf in batches:
-            blobs = []
-            for blob in pdf[data_col]:
-                arr = _decode_fake(bytes(blob))
-                nf, h, w, c = arr.shape
-                yi = (np.arange(out_h) * h // out_h)
-                xi = (np.arange(out_w) * w // out_w)
-                small = arr[:, yi][:, :, xi]
-                blobs.append(struct.pack(_HDR_FMT, out_h, out_w, c) + small.tobytes())
-            res = pdf[["item_id"]].copy()
-            res["data"] = blobs
-            res["width"] = out_w
-            res["height"] = out_h
-            yield res
-
-    return df.select("item_id", data_col).mapInPandas(
-        _resize, "item_id long, data binary, width int, height int"
-    )
-
-
-def sample_frames(df: DataFrame, every: int = 2,
-                  data_col: str = "data") -> DataFrame:
-    """(item_id, frame_idx, frame binary): keep every Nth frame of video
-    payloads — the frame-sampling stage of a video pipeline."""
-
-    def _sample(batches):
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for item, blob in zip(pdf["item_id"], pdf[data_col]):
-                arr = _decode_fake(bytes(blob))
-                h, w, c = arr.shape[1:]
-                for fi in range(0, arr.shape[0], every):
-                    ids.append(int(item))
-                    idxs.append(fi)
-                    frames.append(struct.pack(_HDR_FMT, h, w, c) + arr[fi].tobytes())
-            yield pd.DataFrame({"item_id": ids, "frame_idx": idxs, "frame": frames})
-
-    return df.select("item_id", data_col).mapInPandas(
-        _sample, "item_id long, frame_idx int, frame binary"
-    )
-
-
-def extract_features(df: DataFrame, data_col: str = "data",
-                     dim: int = 16) -> DataFrame:
-    """(item_id, feature array<float>): deterministic per-item feature vector
-    (channel means + downsampled grid) — the stand-in for a real encoder,
-    with the real UDF signature an embedding model would use."""
-
-    def _feat(batches):
-        for pdf in batches:
-            feats = []
-            for blob in pdf[data_col]:
-                arr = _decode_fake(bytes(blob)).astype(np.float64)
-                flat = arr.mean(axis=0).ravel()
-                idx = (np.arange(dim) * max(1, flat.size // dim)) % flat.size
-                feats.append((flat[idx] / 255.0).astype(np.float32).tolist())
-            res = pdf[["item_id"]].copy()
-            res["feature"] = feats
-            yield res
-
-    return df.select("item_id", data_col).mapInPandas(
-        _feat, "item_id long, feature array<float>"
-    )
-
-
 # ------------------------------------------------------------------- WAV
 # RIFF/WAVE PCM is the audio twin of binary netpbm: a standard container
 # decodable with stdlib + numpy alone (chunk-walked per the public RIFF

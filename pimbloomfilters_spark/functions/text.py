@@ -70,19 +70,6 @@ def quality_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Composite quality score in [0,1] from the integer signals (ratios are
-    computed but the catalog exposes the integer signals for exact gating)."""
-    q = quality_counts(df, text_col)
-    return q.withColumn(
-        "quality",
-        (F.least(F.col("n_words") / 200.0, F.lit(1.0)) * 0.5
-         + (1.0 - F.col("n_stopwords") / F.greatest(F.col("n_words"), F.lit(1))) * 0.2
-         + F.least(F.col("n_alnum_tokens") / F.greatest(F.col("n_words"), F.lit(1)),
-                   F.lit(1.0)) * 0.3),
-    )
-
-
 # BPE-ish pre-tokenizer: letter runs | digit runs | single non-alnum glyphs —
 # the usual GPT-2-style split shape, restricted to ASCII classes so Java
 # regex and RE2 (DuckDB) agree exactly. Alternatives cover disjoint character

@@ -1,4 +1,4 @@
-"""Distributed sketch build: per-partition partials + associative merge.
+"""Distributed sketch build: one keyed-partial kernel, one fold.
 
 This is the Spark re-expression of the reference's flagship path,
 ``PimBloomFilter::insert_bulk`` (``src/pim_bloom_filter.cpp:100-212``):
@@ -6,21 +6,31 @@ This is the Spark re-expression of the reference's flagship path,
   reference                                  | here
   -------------------------------------------+--------------------------------
   host worker threads slice the input        | Spark partitions of the DataFrame
-  hash dispatch item -> (rank, DPU)          | not needed: merge is assoc/comm,
-    (``src/pim_bloom_filter.cpp:29-43``)     | any partitioning works
+  hash dispatch item -> (rank, DPU)          | a per-batch ``split`` into int64
+    (``src/pim_bloom_filter.cpp:29-43``)     | codes; one sketch per code run
   2^11-item DPU buckets, async launches      | Arrow batches inside mapInArrow
-  16 tasklet sub-filters + mutexes           | one numpy sketch per partition,
+  16 tasklet sub-filters + mutexes           | one numpy sketch per (task, key),
     (``src/dpu/bloom_filters_dpu.cpp:100``)  | single writer, no locks
-  gather + deterministic-order serialize     | partials sorted by partition_id,
+  gather + deterministic-order serialize     | partials sorted by a key column,
     (``src/pim_bloom_filter.cpp:379-396``)   | then OR/add/max-merged
 
-Partial sketches are small (KB..MB); the default merge collects them and folds
-on the driver (fine to ~1k partitions). ``distributed_merge=True`` switches to
-an RDD ``treeReduce`` so the reduction itself is cluster-parallel — the path
-you'd use at 10^12 rows with tens of thousands of partitions.
+Kernel -> fold. ``keyed_partials`` is the one mapInArrow build: a caller's
+``split`` maps each Arrow batch to int64 codes and a payload, the kernel
+sorts by code once and inserts each run of equal codes into that key's
+sketch, then emits one partial row per (task, key). The builders differ
+only in their split: plain (``build_partials``: no split, one key, no
+sort), grouped (dictionary codes of the group columns), checkpoint (the
+hash bucket, ``operators/checkpoint.py``) and sharded (bit position //
+shard size into a shard-window bitmap, ``operators/sharded.py``).
+``fold_partials`` is the one merge: partial rows in ascending key order.
+It backs ``merge_partial_rows``, the grouped per-group merge, the
+checkpoint fold and the ``treeReduce`` combine; disjoint shards are
+gathered by ``assemble_bloom`` instead.
 
-Per-partition lineage/metrics (rows, values, build_ms) ride along with every
-partial — they feed the checkpoint table (see operators/checkpoint.py).
+``build_ms`` is the time a task spent on one key's partial: flattening its
+runs, inserting them and serializing the sketch. Waiting for input batches
+and the per-batch split and sort are left out, so the sum over partials is
+the build's insert work.
 """
 
 from __future__ import annotations
@@ -33,12 +43,10 @@ import pandas as pd
 import pyarrow as pa
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_type
+from pyspark.sql.types import StructField
 
 from ..sketches import Sketch, sketch_from_bytes
-
-PARTIAL_SCHEMA = (
-    "partition_id int, sketch binary, n_rows long, n_values long, build_ms double"
-)
 
 
 def flatten_arrow(arr: "pa.Array | pa.ChunkedArray") -> np.ndarray:
@@ -57,38 +65,80 @@ def flatten_arrow(arr: "pa.Array | pa.ChunkedArray") -> np.ndarray:
     return np.ascontiguousarray(np_vals, dtype=np.int64)
 
 
+def keyed_partials(df: DataFrame, make: Callable, split=None,
+                   key_fields: Iterable[StructField] = ()) -> DataFrame:
+    """One partial row per (task, key): DataFrame[partition_id int,
+    *key_fields, sketch binary, n_rows long, n_values long, build_ms double].
+
+    ``split(batch) -> (codes, payload, key_of)``: ``codes`` holds one int64
+    per payload row, ``payload`` is an Arrow column (a row is one value or
+    one list of values) or a numpy array (a row is one value), and
+    ``key_of(i)`` is the key tuple of payload row ``i``. Each run of equal
+    codes is inserted into ``make(key)``, a fresh sketch for that key.
+    Without ``split`` the first column of every batch goes whole into the
+    sketch of the key ``()``: no sort, and even an empty partition emits
+    its (empty) partial.
+    """
+    arrow_schema = pa.schema([
+        ("partition_id", pa.int32()),
+        *((f.name, to_arrow_type(f.dataType)) for f in key_fields),
+        ("sketch", pa.binary()), ("n_rows", pa.int64()),
+        ("n_values", pa.int64()), ("build_ms", pa.float64()),
+    ])
+
+    def _runs(batch: pa.RecordBatch):
+        if split is None:
+            yield (), batch.column(0)
+            return
+        codes, payload, key_of = split(batch)
+        if not len(codes):
+            return
+        order = np.argsort(codes, kind="stable")
+        bounds = np.r_[0, np.flatnonzero(np.diff(codes[order])) + 1, len(order)]
+        if isinstance(payload, np.ndarray):
+            payload = payload[order]
+        else:
+            payload = payload.take(pa.array(order))
+        for lo, hi in zip(bounds[:-1], bounds[1:]):
+            yield key_of(int(order[lo])), payload[lo:hi]
+
+    def _partials(batches: Iterable[pa.RecordBatch]) -> Iterable[pa.RecordBatch]:
+        # key -> [sketch, n_rows, n_values, build_ms]
+        parts: dict = {} if split else {(): [make(()), 0, 0, 0.0]}
+        for b in batches:
+            for key, rows in _runs(b):
+                t0 = time.perf_counter()
+                part = parts.get(key)
+                if part is None:
+                    part = parts[key] = [make(key), 0, 0, 0.0]
+                values = rows if isinstance(rows, np.ndarray) else flatten_arrow(rows)
+                part[0].insert_bulk(values)
+                part[1] += len(rows)
+                part[2] += len(values)
+                part[3] += (time.perf_counter() - t0) * 1000.0
+        ctx = TaskContext.get()
+        pid = ctx.partitionId() if ctx is not None else -1
+        out = []
+        for key, (sk, n_rows, n_values, ms) in parts.items():
+            t0 = time.perf_counter()
+            blob = sk.to_bytes()
+            ms += (time.perf_counter() - t0) * 1000.0
+            out.append((pid, *key, blob, n_rows, n_values, ms))
+        if out:
+            yield pa.record_batch(list(zip(*out)), schema=arrow_schema)
+
+    return df.mapInArrow(_partials, from_arrow_schema(arrow_schema))
+
+
 def build_partials(df: DataFrame, col: str, make: Callable[[], Sketch]) -> DataFrame:
-    """One sketch partial per input partition: DataFrame[PARTIAL_SCHEMA].
+    """One sketch partial per input partition: DataFrame[partition_id int,
+    sketch binary, n_rows long, n_values long, build_ms double].
 
     ``make`` must be a picklable zero-arg factory (e.g.
     ``functools.partial(make_sketch, "bloom", size2=24, nb_hash=8)``).
     Runs as mapInArrow: values flow JVM->numpy with no pandas materialization.
     """
-
-    def _partials(batches: Iterable[pa.RecordBatch]) -> Iterable[pa.RecordBatch]:
-        t0 = time.perf_counter()
-        sk = make()
-        n_rows = 0
-        n_values = 0
-        for b in batches:
-            values = flatten_arrow(b.column(0))
-            sk.insert_bulk(values)
-            n_rows += b.num_rows
-            n_values += int(values.size)
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([pid], type=pa.int32()),
-                pa.array([sk.to_bytes()], type=pa.binary()),
-                pa.array([n_rows], type=pa.int64()),
-                pa.array([n_values], type=pa.int64()),
-                pa.array([(time.perf_counter() - t0) * 1000.0], type=pa.float64()),
-            ],
-            names=["partition_id", "sketch", "n_rows", "n_values", "build_ms"],
-        )
-
-    return df.select(col).mapInArrow(_partials, schema=PARTIAL_SCHEMA)
+    return keyed_partials(df.select(col), lambda _key: make())
 
 
 def collect_rows(df: DataFrame) -> list:
@@ -106,16 +156,16 @@ def collect_rows(df: DataFrame) -> list:
     return tbl.to_pylist()
 
 
-def merge_partial_rows(rows) -> tuple[Sketch, dict]:
-    """Driver-side fold of collected partial rows (deterministic order:
-    sorted by partition_id, mirroring the reference's sequential gather at
-    ``src/pim_bloom_filter.cpp:388-394``). Returns (sketch, metrics)."""
-    rows = sorted(rows, key=lambda r: r["partition_id"])
+def fold_partials(rows, key: str) -> tuple[Sketch, dict]:
+    """Merge partial rows in ascending ``key`` order, mirroring the
+    reference's sequential gather (``src/pim_bloom_filter.cpp:388-394``).
+    Returns (sketch, metrics)."""
+    rows = sorted(rows, key=lambda r: r[key])
     if not rows:
         raise ValueError("no partials to merge (empty input DataFrame?)")
-    sk = sketch_from_bytes(rows[0]["sketch"])
+    sk = sketch_from_bytes(bytes(rows[0]["sketch"]))
     for r in rows[1:]:
-        sk.merge(sketch_from_bytes(r["sketch"]))
+        sk.merge(sketch_from_bytes(bytes(r["sketch"])))
     metrics = {
         "n_partitions": len(rows),
         "n_rows": int(sum(r["n_rows"] for r in rows)),
@@ -124,6 +174,12 @@ def merge_partial_rows(rows) -> tuple[Sketch, dict]:
         "build_ms_sum": float(sum(r["build_ms"] for r in rows)),
     }
     return sk, metrics
+
+
+def merge_partial_rows(rows) -> tuple[Sketch, dict]:
+    """Driver-side fold of collected ``build_partials`` rows, in
+    partition_id order. Returns (sketch, metrics)."""
+    return fold_partials(rows, "partition_id")
 
 
 def build_sketch_grouped(df: DataFrame, group_cols, col: str,
@@ -138,112 +194,39 @@ def build_sketch_grouped(df: DataFrame, group_cols, col: str,
     shuffle moves only small sketch blobs, never raw rows — and a relational
     groupBy merges the partials per group. Works for any registered sketch
     kind (merge is associative+commutative); group count is unbounded
-    (output is a DataFrame, nothing driver-side)."""
+    (output is a DataFrame, nothing driver-side). A NULL group value is a
+    group of its own."""
+    import pyarrow.compute as pc
+
     if isinstance(group_cols, str):
         group_cols = [group_cols]
-    dtypes = dict(df.dtypes)
-    gschema = ", ".join(f"{c} {dtypes[c]}" for c in group_cols)
-    out_schema = f"{gschema}, sketch binary, n_rows long, n_values long"
-    partial_schema = out_schema + ", _pid int"
-    n_gcols = len(group_cols)
 
-    def _partials(batches: Iterable[pa.RecordBatch]) -> Iterable[pa.RecordBatch]:
-        # vectorized batch grouping (the checkpoint.py bucket pattern):
-        # dictionary-encode each group column, mix the codes into one int64
-        # key per row, argsort once, slice the Arrow value column per run —
-        # no pandas object rows, values flow zero-copy through flatten_arrow
-        import pyarrow.compute as pc
+    def _split(batch: pa.RecordBatch):
+        # dictionary-encode each group column and mix the codes into one
+        # int64 per row; NULL gets its own code
+        gcols = batch.columns[:-1]
+        codes = np.zeros(batch.num_rows, dtype=np.int64)
+        for c in gcols:
+            d = pc.dictionary_encode(c)
+            idx = pc.fill_null(d.indices, -1).to_numpy(
+                zero_copy_only=False).astype(np.int64)
+            codes = codes * (len(d.dictionary) + 1) + (idx + 1)
+        return (codes, batch.columns[-1],
+                lambda i: tuple(c[i].as_py() for c in gcols))
 
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        sketches: dict = {}
-        stats: dict = {}
-        fields = None
-        for b in batches:
-            if fields is None:
-                fields = [b.schema.field(i).type for i in range(n_gcols)]
-            gcols = [b.column(i) for i in range(n_gcols)]
-            data = b.column(n_gcols)
-            codes = np.zeros(b.num_rows, dtype=np.int64)
-            for c in gcols:
-                d = pc.dictionary_encode(c)
-                idx = pc.fill_null(d.indices, -1).to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-                codes = codes * (len(d.dictionary) + 1) + (idx + 1)
-            order = np.argsort(codes, kind="stable")
-            sc = codes[order]
-            bounds = np.r_[0, np.flatnonzero(np.diff(sc)) + 1, len(sc)]
-            arr = data.take(pa.array(order))
-            for i in range(len(bounds) - 1):
-                lo, hi = int(bounds[i]), int(bounds[i + 1])
-                row0 = int(order[lo])
-                key = tuple(c[row0].as_py() for c in gcols)
-                v = flatten_arrow(arr.slice(lo, hi - lo))
-                sk = sketches.get(key)
-                if sk is None:
-                    sk = sketches[key] = make()
-                    stats[key] = [0, 0]
-                sk.insert_bulk(v)
-                stats[key][0] += hi - lo
-                stats[key][1] += int(v.size)
-        if sketches:
-            ks = list(sketches)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    *(pa.array([k[j] for k in ks], type=fields[j])
-                      for j in range(n_gcols)),
-                    pa.array([sketches[k].to_bytes() for k in ks],
-                             type=pa.binary()),
-                    pa.array([stats[k][0] for k in ks], type=pa.int64()),
-                    pa.array([stats[k][1] for k in ks], type=pa.int64()),
-                    pa.array([pid] * len(ks), type=pa.int32()),
-                ],
-                names=[*group_cols, "sketch", "n_rows", "n_values", "_pid"],
-            )
-
-    partials = df.select(*group_cols, col).mapInArrow(_partials, partial_schema)
+    partials = keyed_partials(df.select(*group_cols, col), lambda _key: make(),
+                              _split, [df.schema[c] for c in group_cols])
 
     def _merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_pid")  # deterministic merge order
-        sk = sketch_from_bytes(bytes(pdf["sketch"].iloc[0]))
-        for blob in pdf["sketch"].iloc[1:]:
-            sk.merge(sketch_from_bytes(bytes(blob)))
+        sk, m = fold_partials(pdf.to_dict("records"), "partition_id")
         res = pdf.iloc[[0]][list(group_cols)].copy()
         res["sketch"] = [sk.to_bytes()]
-        res["n_rows"] = pdf["n_rows"].sum()
-        res["n_values"] = pdf["n_values"].sum()
+        res["n_rows"] = m["n_rows"]
+        res["n_values"] = m["n_values"]
         return res
 
+    out_schema = partials.drop("partition_id", "build_ms").schema
     return partials.groupBy(*group_cols).applyInPandas(_merge, out_schema)
-
-
-def weight_distributed(partials_or_shards: DataFrame,
-                       sketch_col: str = "sketch") -> int:
-    """Popcount as a distributed partial+final SUM — the exact shape of the
-    reference's get_weight (each DPU popcounts its sub-filter, tasklet-0
-    reduces, host sums per rank: ``src/dpu/bloom_filters_dpu.cpp:146-166``,
-    ``src/pim_rankset.cpp:276-290``). Valid on DISJOINT partials (sharded
-    build rows); on overlapping partials the per-partial popcounts
-    over-count shared bits — merge first in that case."""
-    import pyarrow as pa
-    from pyspark.sql import functions as F
-
-    def _pop(batches):
-        total = 0
-        lut = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint32)
-        for b in batches:
-            for blob in b.column(0):
-                raw = np.frombuffer(blob.as_py(), dtype=np.uint8)
-                total += int(lut[raw].sum(dtype=np.int64))
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([total], type=pa.int64())], names=["w"]
-        )
-
-    out = (
-        partials_or_shards.select(sketch_col)
-        .mapInArrow(_pop, "w long").agg(F.sum("w")).collect()[0][0]
-    )
-    return int(out or 0)
 
 
 def build_sketch(
@@ -264,16 +247,15 @@ def build_sketch(
     if not distributed_merge:
         return merge_partial_rows(collect_rows(partials))
 
-    def _merge_bytes(a: bytes, b: bytes) -> bytes:
-        sa = sketch_from_bytes(a)
-        sa.merge(sketch_from_bytes(b))
-        return sa.to_bytes()
+    def _combine(a: dict, b: dict) -> dict:
+        # the combined row keeps the smaller partition_id, so every level of
+        # the tree folds in partition order
+        sk, m = fold_partials([a, b], "partition_id")
+        return {"partition_id": min(a["partition_id"], b["partition_id"]),
+                "sketch": sk.to_bytes(), "n_rows": m["n_rows"],
+                "n_values": m["n_values"], "build_ms": m["build_ms_sum"]}
 
-    blob = (
-        partials.select("sketch").rdd.map(lambda r: bytes(r[0]))
-        .treeReduce(_merge_bytes, depth=tree_depth)
-    )
-    stats = partials.groupBy().sum("n_rows", "n_values").collect()[0]
-    return sketch_from_bytes(blob), {
-        "n_rows": int(stats[0]), "n_values": int(stats[1]),
+    top = partials.rdd.map(lambda r: r.asDict()).treeReduce(_combine, depth=tree_depth)
+    return sketch_from_bytes(bytes(top["sketch"])), {
+        "n_rows": int(top["n_rows"]), "n_values": int(top["n_values"]),
     }

@@ -21,83 +21,20 @@ Design:
 
 from __future__ import annotations
 
-import time
-from typing import Callable, Iterable
+from typing import Callable
 
+import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import IntegerType, StructField
 
-from ..sketches import Sketch, sketch_from_bytes
-from .build import flatten_arrow
+from ..sketches import Sketch
+from .build import collect_rows, fold_partials, keyed_partials
 
 CHECKPOINT_SCHEMA = (
     "build_id string, bucket int, sketch_kind string, sketch binary, "
     "n_rows long, n_values long, build_ms double"
 )
-
-
-def _bucketed(df: DataFrame, key_col: str, n_buckets: int) -> DataFrame:
-    return df.withColumn(
-        "_bucket", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
-    )
-
-
-def _build_bucket_partials(df: DataFrame, col: str, key_col: str,
-                           make: Callable[[], Sketch], build_id: str,
-                           n_buckets: int) -> DataFrame:
-    """One partial row per bucket. Buckets are data-determined (hash of
-    key_col), so partials are reproducible across runs and cluster sizes."""
-
-    kind = make().kind
-
-    def _build(batches: Iterable[pa.RecordBatch]) -> Iterable[pa.RecordBatch]:
-        sketches: dict[int, Sketch] = {}
-        rows: dict[int, int] = {}
-        vals: dict[int, int] = {}
-        ms: dict[int, float] = {}  # per-bucket insert time: build_ms_sum must
-        # total actual work, not partition wall time x buckets-per-partition
-        for b in batches:
-            buckets = b.column(1).to_numpy(zero_copy_only=False)
-            data = b.column(0)
-            # group rows of this Arrow batch by bucket (few per partition)
-            import numpy as np
-
-            order = np.argsort(buckets, kind="stable")
-            sb = buckets[order]
-            bounds = np.r_[0, np.flatnonzero(np.diff(sb)) + 1, len(sb)]
-            arr = data.take(pa.array(order))
-            for i in range(len(bounds) - 1):
-                bk = int(sb[bounds[i]])
-                chunk = arr.slice(bounds[i], bounds[i + 1] - bounds[i])
-                v = flatten_arrow(chunk)
-                sk = sketches.get(bk)
-                if sk is None:
-                    sk = sketches[bk] = make()
-                    rows[bk] = vals[bk] = 0
-                    ms[bk] = 0.0
-                t0 = time.perf_counter()
-                sk.insert_bulk(v)
-                ms[bk] += (time.perf_counter() - t0) * 1000.0
-                rows[bk] += bounds[i + 1] - bounds[i]
-                vals[bk] += int(v.size)
-        if sketches:
-            ks = sorted(sketches)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([build_id] * len(ks), type=pa.string()),
-                    pa.array(ks, type=pa.int32()),
-                    pa.array([kind] * len(ks), type=pa.string()),
-                    pa.array([sketches[k].to_bytes() for k in ks], type=pa.binary()),
-                    pa.array([rows[k] for k in ks], type=pa.int64()),
-                    pa.array([vals[k] for k in ks], type=pa.int64()),
-                    pa.array([ms[k] for k in ks], type=pa.float64()),
-                ],
-                names=["build_id", "bucket", "sketch_kind", "sketch",
-                       "n_rows", "n_values", "build_ms"],
-            )
-
-    bucketed = _bucketed(df, key_col, n_buckets).repartition(n_buckets, "_bucket")
-    return bucketed.select(col, "_bucket").mapInArrow(_build, CHECKPOINT_SCHEMA)
 
 
 def completed_buckets(spark: SparkSession, checkpoint_dir: str,
@@ -129,39 +66,35 @@ def build_with_checkpoint(
     then raise — simulating a mid-build crash.
     """
     done = completed_buckets(spark, checkpoint_dir, build_id)
-    todo_df = _bucketed(df, key_col, n_buckets)
-    if done:
-        todo_df = todo_df.filter(~F.col("_bucket").isin(sorted(done)))
-    partials = _build_bucket_partials(
-        todo_df.drop("_bucket"), col, key_col, make, build_id, n_buckets
-    )
+    todo = df.withColumn(
+        "_bucket", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int"))
+    if done:  # build only the buckets no earlier run persisted
+        todo = todo.filter(~F.col("_bucket").isin(sorted(done)))
+
+    def _split(batch: pa.RecordBatch):
+        buckets = batch.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
+        return buckets, batch.column(0), lambda i: (int(buckets[i]),)
+
+    # one partial per bucket: buckets are a pure function of key_col, so
+    # partials are reproducible across runs and cluster sizes
+    partials = keyed_partials(
+        todo.repartition(n_buckets, "_bucket").select(col, "_bucket"),
+        lambda _key: make(), _split, [StructField("bucket", IntegerType())],
+    ).select(F.lit(build_id).alias("build_id"), "bucket",
+             F.lit(make().kind).alias("sketch_kind"),
+             "sketch", "n_rows", "n_values", "build_ms")
     if fail_after_bucket is not None:
         partials = partials.filter(F.col("bucket") < fail_after_bucket)
-    if done:
-        # only write buckets we actually built this run
-        partials = partials.filter(~F.col("bucket").isin(sorted(done)))
     partials.write.mode("append").parquet(checkpoint_dir)
     if fail_after_bucket is not None:
         raise RuntimeError(f"injected failure after bucket {fail_after_bucket}")
 
-    from .build import collect_rows
-
     cp = spark.read.parquet(checkpoint_dir).filter(F.col("build_id") == build_id)
-    rows = collect_rows(cp)
-    rows.sort(key=lambda r: r["bucket"])
-    seen: set[int] = set()
-    sk = None
-    metrics = {"n_rows": 0, "n_values": 0, "n_buckets": 0, "build_ms_sum": 0.0}
-    for r in rows:
-        if r["bucket"] in seen:  # idempotent re-append safety
-            continue
-        seen.add(r["bucket"])
-        part = sketch_from_bytes(r["sketch"])
-        sk = part if sk is None else sk.merge(part)
-        metrics["n_rows"] += r["n_rows"]
-        metrics["n_values"] += r["n_values"]
-        metrics["n_buckets"] += 1
-        metrics["build_ms_sum"] += r["build_ms"]
-    if sk is None:
+    first: dict = {}
+    for r in collect_rows(cp):
+        first.setdefault(r["bucket"], r)  # idempotent re-append safety
+    if not first:
         raise ValueError(f"no checkpointed partials for build {build_id!r}")
+    sk, metrics = fold_partials(first.values(), "bucket")
+    metrics["n_buckets"] = metrics.pop("n_partitions")
     return sk, metrics

@@ -49,13 +49,14 @@ def ship_sketch(spark, sketch: Sketch) -> str:
     if key in _SHIPPED:
         return name
     path = os.path.join(tempfile.gettempdir(), name)
-    if not os.path.exists(path):
-        # atomic publish: another process writing the same content races
-        # benignly; a partial write is never visible under the final name
-        tmp = path + f".tmp{os.getpid()}"
-        with open(tmp, "wb") as f:
-            f.write(raw)
-        os.replace(tmp, path)
+    # always publish, never trust a file already under this predictable
+    # name: it may be stale or planted. Atomic publish: another process
+    # writing the same content races benignly; a partial write is never
+    # visible under the final name
+    tmp = path + f".tmp{os.getpid()}"
+    with open(tmp, "wb") as f:
+        f.write(raw)
+    os.replace(tmp, path)
     spark.sparkContext.addFile(path)
     _SHIPPED.add(key)
     return name
@@ -215,23 +216,6 @@ def probe_count(df: DataFrame, sketch: Sketch, key_col: str) -> tuple[int, int]:
         .agg(F.sum("n"), F.sum("hits")).collect()[0]
     )
     return int(row[0] or 0), int(row[1] or 0)
-
-
-def cms_count_column(df: DataFrame, sketch: Sketch, key_col: str,
-                     out_col: str = "est_count") -> DataFrame:
-    """Count-min point estimates per row (long)."""
-    name = ship_sketch(df.sparkSession, sketch)
-
-    import pyarrow as pa
-
-    def _query(keys):
-        sk = load_shipped_sketch(name)
-        return _masked_int64(
-            keys, lambda v: np.asarray(sk.query_bulk(v), dtype=np.int64),
-            pa.int64())
-
-    return df.withColumn(out_col,
-                         _scalar_arrow_udf(_query, "long")(F.col(key_col)))
 
 
 def register_sql_functions(spark, sketch: Sketch,

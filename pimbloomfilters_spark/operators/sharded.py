@@ -28,18 +28,16 @@ filter it needs — the filter is never materialized on one machine.
 from __future__ import annotations
 
 import math
-from typing import Iterable
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import IntegerType, StructField
 
 from ..sketches import BlockedBloomFilter
 from ..sketches.bloom import BLOCK_BITS, bloom_positions, scatter_or_bits
-from .build import flatten_arrow
-
-SHARD_SCHEMA = "shard int, sketch binary, n_values long"
+from .build import collect_rows, flatten_arrow, keyed_partials
 
 
 def _shard_expr(col: str, shard_bits: int):
@@ -60,6 +58,20 @@ def _check_routable_seed(seed: int) -> None:
             f"xxhash64 seed, used for JVM-side shard routing); got {seed}. "
             "Use the non-sharded build_sketch path for custom seeds."
         )
+
+
+class _ShardWindow:
+    """The sharded build's partial: one shard's bit range of the filter."""
+
+    def __init__(self, shard: int, size_bits: int):
+        self.offset = shard * size_bits
+        self.words = np.zeros(size_bits // 64, dtype=np.uint64)
+
+    def insert_bulk(self, pos: np.ndarray) -> None:
+        scatter_or_bits(self.words, pos.ravel(), pos_offset=self.offset)
+
+    def to_bytes(self) -> bytes:
+        return self.words.tobytes()
 
 
 def build_bloom_shards(
@@ -100,36 +112,13 @@ def build_bloom_shards(
 
     is_array = str(df.schema[col].dataType).lower().startswith("array")
 
-    def _build(batches: Iterable[pa.RecordBatch]) -> Iterable[pa.RecordBatch]:
-        buf: dict[int, np.ndarray] = {}
-        counts: dict[int, int] = {}
-        for b in batches:
-            values = flatten_arrow(b.column(0))
-            if values.size == 0:
-                continue
-            pos = bloom_positions(values, size2, nb_hash, seed, block_bits)
-            shards = (pos // np.uint64(shard_size_bits)).astype(np.int64)
-            order = np.argsort(shards, kind="stable")
-            pos, shards = pos[order], shards[order]
-            bounds = np.r_[0, np.flatnonzero(np.diff(shards)) + 1, len(shards)]
-            for i in range(len(bounds) - 1):
-                s = int(shards[bounds[i]])
-                words = buf.get(s)
-                if words is None:
-                    words = buf[s] = np.zeros(shard_size_bits // 64, dtype=np.uint64)
-                    counts[s] = 0
-                scatter_or_bits(words, pos[bounds[i]:bounds[i + 1]],
-                                pos_offset=s * shard_size_bits)
-                counts[s] += (bounds[i + 1] - bounds[i]) // nb_hash
-        if buf:
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(list(buf.keys()), type=pa.int32()),
-                    pa.array([w.tobytes() for w in buf.values()], type=pa.binary()),
-                    pa.array([counts[s] for s in buf.keys()], type=pa.int64()),
-                ],
-                names=["shard", "sketch", "n_values"],
-            )
+    def _split(batch: pa.RecordBatch):
+        # hash once per batch; the k positions of a value share one block,
+        # hence one shard, so the value's first position names its shard
+        pos = bloom_positions(flatten_arrow(batch.column(0)), size2, nb_hash,
+                              seed, block_bits).reshape(-1, nb_hash)
+        shards = (pos[:, 0] // np.uint64(shard_size_bits)).astype(np.int64)
+        return shards, pos, lambda i: (int(shards[i]),)
 
     if is_array:
         # route by array element: explode JVM-side, then shard on the element
@@ -145,7 +134,10 @@ def build_bloom_shards(
     # exchange then carries ONLY the 8-byte key — half the shuffle bytes of
     # the old (key, shard) row (guide §2.3: project before the exchange)
     parts = src.repartition(n_partitions, _shard_expr(col, shard_bits))
-    return parts.mapInArrow(_build, schema=SHARD_SCHEMA)
+    return keyed_partials(
+        parts, lambda key: _ShardWindow(key[0], shard_size_bits), _split,
+        [StructField("shard", IntegerType())],
+    ).select("shard", "sketch", "n_values")
 
 
 def assemble_bloom(shards_rows, size2: int, nb_hash: int, seed: int = 42,
@@ -167,8 +159,6 @@ def build_bloom_sharded(df: DataFrame, col: str, size2: int, nb_hash: int,
                         seed: int = 42, block_bits: int = BLOCK_BITS,
                         n_shards: int = 64,
                         n_partitions: int | None = None) -> BlockedBloomFilter:
-    from .build import collect_rows
-
     rows = collect_rows(build_bloom_shards(
         df, col, size2, nb_hash, seed, block_bits, n_shards, n_partitions))
     return assemble_bloom(rows, size2, nb_hash, seed, block_bits, n_shards)
@@ -235,50 +225,4 @@ def probe_bloom_distributed(
         keyed.groupBy("_shard")
         .cogroup(shards.groupBy("shard"))
         .applyInPandas(_probe, schema=out_schema)
-    )
-
-
-def probe_array_distributed(
-    df: DataFrame,
-    shards: DataFrame,
-    id_col: str,
-    tokens_col: str,
-    size2: int,
-    nb_hash: int,
-    seed: int = 42,
-    block_bits: int = BLOCK_BITS,
-    n_shards: int = 64,
-    out_col: str = "member",
-) -> DataFrame:
-    """array<boolean> membership, ELEMENT-ALIGNED with the token array (the
-    reference's bulk-probe contract), against a sharded filter that is never
-    materialized on one node: posexplode -> cogroup probe (positions ride
-    through as passthrough columns) -> regroup per row ordered by position.
-    This is the array-column twin of ``probe_bloom_distributed`` — the shape
-    for probing token sequences against a multi-GB filter.
-
-    Rows whose token array is empty or null survive with ``member = []``
-    (matching the broadcast twin ``probe_array_column``): posexplode emits no
-    rows for them, so the probed results are left-joined back to the full id
-    set and the gap filled with an empty array."""
-    ex = df.select(
-        F.col(id_col),
-        F.posexplode(F.col(tokens_col)).alias("_pos", "_tok"),
-    )
-    probed = probe_bloom_distributed(
-        ex, shards, "_tok", size2, nb_hash, seed, block_bits, n_shards,
-        out_col=out_col, passthrough=(id_col, "_pos"),
-    )
-    regrouped = (
-        probed.groupBy(id_col)
-        .agg(F.array_sort(F.collect_list(F.struct("_pos", out_col))).alias("_s"))
-        .select(
-            id_col,
-            F.transform(F.col("_s"), lambda x: x[out_col]).alias(out_col),
-        )
-    )
-    return (
-        df.select(id_col).join(regrouped, id_col, "left")
-        .withColumn(out_col, F.coalesce(
-            F.col(out_col), F.expr("CAST(array() AS array<boolean>)")))
     )

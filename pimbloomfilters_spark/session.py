@@ -15,6 +15,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(total_bytes: int | None = None) -> str:
+    """Driver heap default: min(32g, half of physical RAM). A heap larger
+    than the machine never feels GC pressure, so an over-full heap ends as a
+    kernel OOM kill of the JVM instead of a Java ``OutOfMemoryError``."""
+    if total_bytes is None:
+        total_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    mib = min(32 << 10, total_bytes // 2 >> 20)
+    return f"{mib >> 10}g" if mib % 1024 == 0 else f"{mib}m"
+
+
 def get_spark(app_name: str = "pimbloomfilters-spark", cpus: int | str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -37,7 +47,8 @@ def get_spark(app_name: str = "pimbloomfilters-spark", cpus: int | str | None = 
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 os.environ.get("SPARK_GRAFT_ARROW_BATCH", "65536"))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM",
+                                                      default_driver_memory()))
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

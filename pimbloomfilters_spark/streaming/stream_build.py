@@ -46,7 +46,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..operators.build import build_partials, merge_partial_rows
+from ..operators.build import build_sketch
 from ..sketches import Sketch, sketch_from_bytes
 
 # driver-side registry of running sketches, keyed by query name
@@ -151,7 +151,7 @@ def sketch_stream_query(
             return  # replay of a batch the loaded snapshot already contains
         if batch_df.isEmpty():
             return
-        partial, _ = merge_partial_rows(build_partials(batch_df, col, make).collect())
+        partial = build_sketch(batch_df, col, make)[0]
         cur = _RUNNING.get(name)
         sk = partial if cur is None else cur.merge(partial)
         _RUNNING[name] = sk
@@ -242,7 +242,6 @@ def dedup_stream_query(
     import functools as _ft
     import time
 
-    from ..operators.build import build_partials, merge_partial_rows
     from ..operators.probe import probe_key_column
     from ..sketches import make_sketch
 
@@ -282,9 +281,7 @@ def dedup_stream_query(
         emitted = not fresh.isEmpty()
         if emitted:
             fresh.write.mode("append").parquet(out_path)
-            partial, _ = merge_partial_rows(
-                build_partials(fresh, key_col, factory).collect()
-            )
+            partial = build_sketch(fresh, key_col, factory)[0]
             seen = partial if seen is None else seen.merge(partial)
         fresh.unpersist()
         if seen is None:
@@ -741,9 +738,6 @@ def session_stream(
         .withColumn("_u", F.col(user_col).cast("long"))
         .select("_u", F.col(ts_col).alias("_ts"))
     )
-
-    def _ts_out(ms: int):
-        return pd.Timestamp(ms, unit="ms")
 
     def _update(key, pdfs, state: GroupState):
         (user,) = key

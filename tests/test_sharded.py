@@ -72,18 +72,6 @@ def test_shard_validation():
         build_bloom_shards(FakeDF(), "x", size2=14, nb_hash=4, n_shards=16)
 
 
-def test_weight_distributed_matches_merged(spark, keys_df):
-    """Partial+final popcount over disjoint shards == merged get_weight
-    (reference get_weight lifecycle, SURVEY.md §3.3). Envelope bytes include
-    a header, so weight_distributed must consume shard PAYLOADS; shard rows
-    carry raw sub-bitmap bytes — exactly what it expects."""
-    from pimbloomfilters_spark.operators.build import weight_distributed
-
-    shards = build_bloom_shards(keys_df, "id", n_shards=16, **CFG)
-    bf = assemble_bloom(shards.collect(), n_shards=16, **CFG)
-    assert weight_distributed(shards) == bf.get_weight()
-
-
 def test_fpr_block_variant_ordering(spark):
     """Block-size variants (the reference's CPU 64-bit-block 'cache' filter
     vs the DPU 512-byte-block filter) at equal (m,k,n): smaller blocks
@@ -106,59 +94,3 @@ def test_fpr_block_variant_ordering(spark):
     # smaller blocks => heavier blocked penalty at equal m,k,n
     assert fprs[64] >= fprs[4096]
 
-
-def test_probe_array_distributed_equals_broadcast(spark, sf_dir):
-    """Element-aligned array probe against sharded bitmaps == the broadcast
-    array probe, row for row, element for element."""
-    from pimbloomfilters_spark.operators.probe import probe_array_column
-    from pimbloomfilters_spark.operators.sharded import (
-        assemble_bloom,
-        build_bloom_shards,
-        probe_array_distributed,
-    )
-    from pimbloomfilters_spark.sources.tables import token_table
-
-    tt = token_table(spark, sf_dir).limit(300).cache()
-    geom = dict(size2=22, nb_hash=8)
-    shards = build_bloom_shards(tt, "tokens", n_shards=16, **geom).cache()
-    bf = assemble_bloom(shards.collect(), n_shards=16, **geom)
-    dist = {
-        r["doc_id"]: r["member"]
-        for r in probe_array_distributed(
-            tt, shards, "doc_id", "tokens", n_shards=16, **geom).collect()
-    }
-    bc = {
-        r["doc_id"]: r["member"]
-        for r in probe_array_column(tt, bf, "tokens").collect()
-    }
-    assert dist == bc and len(dist) == 300
-    assert all(all(m) for m in dist.values()), "no false negatives"
-
-
-def test_probe_array_distributed_empty_and_null_rows(spark):
-    """Empty-array and null-array rows must survive with member = [] —
-    matching the broadcast twin (posexplode alone would drop them)."""
-    from pimbloomfilters_spark.operators.probe import probe_array_column
-    from pimbloomfilters_spark.operators.sharded import (
-        assemble_bloom,
-        build_bloom_shards,
-        probe_array_distributed,
-    )
-
-    df = spark.createDataFrame(
-        [(1, [10, 20, 30]), (2, []), (3, None), (4, [999_999])],
-        "doc_id long, tokens array<long>",
-    )
-    geom = dict(size2=20, nb_hash=8)
-    src = df.filter("doc_id = 1")  # only doc 1's tokens are inserted
-    shards = build_bloom_shards(src, "tokens", n_shards=16, **geom).cache()
-    bf = assemble_bloom(shards.collect(), n_shards=16, **geom)
-    dist = {r["doc_id"]: r["member"]
-            for r in probe_array_distributed(
-                df, shards, "doc_id", "tokens", n_shards=16, **geom).collect()}
-    bc = {r["doc_id"]: r["member"]
-          for r in probe_array_column(df, bf, "tokens").collect()}
-    assert set(dist) == {1, 2, 3, 4}
-    assert dist[1] == [True, True, True]
-    assert dist[2] == [] and dist[3] == []
-    assert dist == bc
