@@ -17,11 +17,27 @@ This is the Spark re-expression of the reference's flagship path,
 Kernel -> fold. ``keyed_partials`` is the one mapInArrow build: a caller's
 ``split`` maps each Arrow batch to int64 codes and a payload, the kernel
 sorts by code once and inserts each run of equal codes into that key's
-sketch, then emits one partial row per (task, key). The builders differ
-only in their split: plain (``build_partials``: no split, one key, no
-sort), grouped (dictionary codes of the group columns), checkpoint (the
-hash bucket, ``operators/checkpoint.py``) and sharded (bit position //
-shard size into a shard-window bitmap, ``operators/sharded.py``).
+sketch, then emits one partial row per (task, key).
+
+Tasks <= slots. The reference's sub-filter count is fixed by hardware (16
+tasklets per DPU), not by how the host threads slice the input. Where the
+input partitioning is the caller's (the plain and grouped builds here,
+``probe_count``), it is coalesced to ``task_slots(df)`` partitions before
+the kernel, so one Python task per core slot runs it and at most that many
+partials per key come out. Each PySpark Python task pays a fixed start-up
+cost before the UDF runs: the worker calls ``importlib.invalidate_caches()``,
+which re-reads the directory of every zip/jar path importer. An input
+sliced finer than the slots therefore paid for a second wave of near-empty
+tasks, and for more partials to collect and fold. ``coalesce`` never adds
+an Exchange and never raises the partition count. The checkpoint and
+sharded builds choose their own width with a ``repartition`` and are not
+coalesced: that width bounds how many sketches one task holds.
+
+The builders differ only in their split: plain (``build_partials``: no
+split, one key, no sort), grouped (dictionary codes of the group columns),
+checkpoint (the hash bucket, ``operators/checkpoint.py``) and sharded (bit
+position // shard size into a shard-window bitmap,
+``operators/sharded.py``).
 ``fold_partials`` is the one merge: partial rows in ascending key order.
 It backs ``merge_partial_rows``, the grouped per-group merge, the
 checkpoint fold and the ``treeReduce`` combine; disjoint shards are
@@ -65,6 +81,15 @@ def flatten_arrow(arr: "pa.Array | pa.ChunkedArray") -> np.ndarray:
     return np.ascontiguousarray(np_vals, dtype=np.int64)
 
 
+def task_slots(df: DataFrame) -> int:
+    """How many tasks ``df``'s session runs at once: its default
+    parallelism, the total executor cores of a local or static cluster.
+    Under dynamic allocation Spark reports max(registered cores, 2), which
+    may be 2 before executors register; set ``spark.default.parallelism``
+    there, since it is what this returns when set."""
+    return df.sparkSession.sparkContext.defaultParallelism
+
+
 def keyed_partials(df: DataFrame, make: Callable, split=None,
                    key_fields: Iterable[StructField] = ()) -> DataFrame:
     """One partial row per (task, key): DataFrame[partition_id int,
@@ -76,8 +101,9 @@ def keyed_partials(df: DataFrame, make: Callable, split=None,
     ``key_of(i)`` is the key tuple of payload row ``i``. Each run of equal
     codes is inserted into ``make(key)``, a fresh sketch for that key.
     Without ``split`` the first column of every batch goes whole into the
-    sketch of the key ``()``: no sort, and even an empty partition emits
-    its (empty) partial.
+    sketch of the key ``()``: no sort, and every task emits its partial,
+    even an empty one. One task runs per partition of ``df``; callers
+    choose that width.
     """
     arrow_schema = pa.schema([
         ("partition_id", pa.int32()),
@@ -131,14 +157,16 @@ def keyed_partials(df: DataFrame, make: Callable, split=None,
 
 
 def build_partials(df: DataFrame, col: str, make: Callable[[], Sketch]) -> DataFrame:
-    """One sketch partial per input partition: DataFrame[partition_id int,
-    sketch binary, n_rows long, n_values long, build_ms double].
+    """One sketch partial per task, at most ``task_slots(df)`` of them:
+    DataFrame[partition_id int, sketch binary, n_rows long, n_values long,
+    build_ms double].
 
     ``make`` must be a picklable zero-arg factory (e.g.
     ``functools.partial(make_sketch, "bloom", size2=24, nb_hash=8)``).
     Runs as mapInArrow: values flow JVM->numpy with no pandas materialization.
     """
-    return keyed_partials(df.select(col), lambda _key: make())
+    return keyed_partials(df.select(col).coalesce(task_slots(df)),
+                          lambda _key: make())
 
 
 def collect_rows(df: DataFrame) -> list:
@@ -190,9 +218,11 @@ def build_sketch_grouped(df: DataFrame, group_cols, col: str,
     The reference is strictly one-filter-per-call; every real use ("distinct
     users per event_type", "a filter per source") needs N sketches from ONE
     job, not a driver loop launching jobs per group. Shape = map-side
-    combine: each task builds a partial per (partition, group) — so the
+    combine: each task builds a partial per (task, group) — so the
     shuffle moves only small sketch blobs, never raw rows — and a relational
-    groupBy merges the partials per group. Works for any registered sketch
+    groupBy merges the partials per group. The input is coalesced to
+    ``task_slots(df)`` partitions, so a task holds the partials of every
+    group its share of the input touches. Works for any registered sketch
     kind (merge is associative+commutative); group count is unbounded
     (output is a DataFrame, nothing driver-side). A NULL group value is a
     group of its own."""
@@ -214,8 +244,9 @@ def build_sketch_grouped(df: DataFrame, group_cols, col: str,
         return (codes, batch.columns[-1],
                 lambda i: tuple(c[i].as_py() for c in gcols))
 
-    partials = keyed_partials(df.select(*group_cols, col), lambda _key: make(),
-                              _split, [df.schema[c] for c in group_cols])
+    partials = keyed_partials(
+        df.select(*group_cols, col).coalesce(task_slots(df)),
+        lambda _key: make(), _split, [df.schema[c] for c in group_cols])
 
     def _merge(pdf: pd.DataFrame) -> pd.DataFrame:
         sk, m = fold_partials(pdf.to_dict("records"), "partition_id")
@@ -238,10 +269,11 @@ def build_sketch(
 ) -> tuple[Sketch, dict]:
     """Build one logical sketch over ``df[col]`` (scalar numeric or array<int>).
 
-    distributed_merge=False: collect partials (small blobs) + driver fold.
+    There is one partial per task and at most ``task_slots(df)`` tasks.
+    distributed_merge=False: collect the partials + driver fold.
     distributed_merge=True: RDD treeReduce — merge work stays on executors;
-    use when partition count is large enough that a driver fold is the
-    bottleneck (the 10^12-row configuration).
+    it only pays when slots x sketch bytes is too large to collect and
+    fold on the driver (many executor cores, a large dense sketch).
     """
     partials = build_partials(df, col, make)
     if not distributed_merge:

@@ -28,6 +28,7 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from ..sketches import Sketch, sketch_from_bytes
+from .build import task_slots
 
 _WORKER_CACHE: dict[str, Sketch] = {}
 # (applicationId, name) pairs already registered via addFile — a sketch is
@@ -188,7 +189,10 @@ def probe_count(df: DataFrame, sketch: Sketch, key_col: str) -> tuple[int, int]:
     booleans never cross the Python/JVM boundary — use for counts/FPR at
     scale (reference analogue: the DPU packs lookup results 64/word before
     transfer, ``src/dpu/bloom_filters_dpu.cpp:224-246``; here we go further
-    and ship only the partial sums)."""
+    and ship only the partial sums). The input is coalesced to
+    ``task_slots(df)`` partitions, so one Python task per core slot sums
+    its share; the row-aligned probes above keep the caller's
+    partitioning instead, since they return the caller's rows."""
     import pyarrow as pa
     from pyspark.sql import functions as F
 
@@ -212,7 +216,8 @@ def probe_count(df: DataFrame, sketch: Sketch, key_col: str) -> tuple[int, int]:
         )
 
     row = (
-        df.select(key_col).mapInArrow(_count, "n long, hits long")
+        df.select(key_col).coalesce(task_slots(df))
+        .mapInArrow(_count, "n long, hits long")
         .agg(F.sum("n"), F.sum("hits")).collect()[0]
     )
     return int(row[0] or 0), int(row[1] or 0)

@@ -37,7 +37,7 @@ from pyspark.sql.types import IntegerType, StructField
 
 from ..sketches import BlockedBloomFilter
 from ..sketches.bloom import BLOCK_BITS, bloom_positions, scatter_or_bits
-from .build import collect_rows, flatten_arrow, keyed_partials
+from .build import collect_rows, flatten_arrow, keyed_partials, task_slots
 
 
 def _shard_expr(col: str, shard_bits: int):
@@ -92,12 +92,12 @@ def build_bloom_shards(
     partitioning is a pure hash of the shard id, so every shard still has
     exactly ONE writer task whatever the partition count — a task simply
     owns several disjoint sub-filters (the reference's rank owning several
-    DPUs). Default = the session's default parallelism (capped at
-    n_shards): measured 2x faster than one-task-per-shard at 10M keys /
-    local[32], because tiny reduce tasks are pure scheduling + Python
-    worker-batch overhead (guide §2.2: fewer, larger reduce partitions).
-    Per-task memory is bounded by (n_shards / n_partitions) x shard bytes
-    = m/8/n_partitions — raise n_partitions for very large m."""
+    DPUs). Default = ``task_slots(df)`` (capped at n_shards): measured 2x
+    faster than one-task-per-shard at 10M keys / local[32], because tiny
+    reduce tasks are pure scheduling + Python worker-batch overhead (guide
+    §2.2: fewer, larger reduce partitions). Per-task memory is bounded by
+    (n_shards / n_partitions) x shard bytes = m/8/n_partitions — raise
+    n_partitions for very large m."""
     _check_routable_seed(seed)
     m_bits = 1 << size2
     if n_shards & (n_shards - 1):
@@ -105,8 +105,7 @@ def build_bloom_shards(
     if m_bits // min(block_bits, m_bits) < n_shards:
         raise ValueError("n_shards must be <= number of blocks (m/block_bits)")
     if n_partitions is None:
-        n_partitions = max(1, min(
-            n_shards, df.sparkSession.sparkContext.defaultParallelism))
+        n_partitions = max(1, min(n_shards, task_slots(df)))
     shard_bits = int(math.log2(n_shards))
     shard_size_bits = m_bits // n_shards
 

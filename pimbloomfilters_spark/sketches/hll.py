@@ -109,7 +109,7 @@ class HyperLogLog(Sketch):
     #                                   with the sparse tag 'S' = 0x53)
     #   b'S' + idx uint32[n] + rho u8[n]  sparse nonzero registers
     # Sparse is chosen automatically when it is smaller (fill < ~20%). This
-    # matters for GROUPED builds: one partial per (partition, group) at p=14
+    # matters for GROUPED builds: one partial per (task, group) at p=14
     # is a 16 KB dense blob; with 10^5-10^6 mostly-empty groups the partial
     # shuffle is tens of GB dense vs KBs sparse (operators/build.py).
     def payload(self) -> bytes:

@@ -82,3 +82,28 @@ def test_hll_checkpoint_matches(spark, tokens_df, tmp_path_factory):
         "h", "h", hll, build_id="b3", checkpoint_dir=cp, n_buckets=8,
     )
     assert sk.payload() == one.payload()
+
+
+def test_checkpoint_runs_one_task_per_bucket_partition(spark, tokens_df,
+                                                       tmp_path_factory):
+    """The checkpoint build keeps its repartition(n_buckets) width even when
+    n_buckets exceeds the task slots, so a task holds about one bucket's
+    sketch instead of n_buckets/slots of them."""
+    from pimbloomfilters_spark.operators.build import task_slots
+
+    cp = str(tmp_path_factory.mktemp("ckpt4") / "sketches")
+    n_buckets = 4 * task_slots(tokens_df)
+    sc = spark.sparkContext
+    sc.setJobGroup("checkpoint-width", "checkpoint build width")
+    try:
+        build_with_checkpoint(
+            spark, tokens_df, "tokens", "doc_id", bloom,
+            build_id="b4", checkpoint_dir=cp, n_buckets=n_buckets)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    widths = {st.getStageInfo(s).numTasks
+              for j in st.getJobIdsForGroup("checkpoint-width")
+              for s in st.getJobInfo(j).stageIds
+              if st.getStageInfo(s) is not None}
+    assert n_buckets in widths

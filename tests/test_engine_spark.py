@@ -64,9 +64,36 @@ def test_distributed_merge_path(spark, tokens_df):
     assert a.payload() == b.payload()
 
 
+def test_partial_build_one_task_per_slot(spark):
+    """An input split finer than the session's task slots still builds one
+    partial per slot. Bloom/HLL/CMS bytes equal a one-partition build; KLL,
+    whose compaction depends on partial boundaries, keeps its rank-error
+    bound of 2.861/k."""
+    from pimbloomfilters_spark.operators import build_partials
+    from pimbloomfilters_spark.operators.build import task_slots
+
+    n = 50_000
+    one = spark.range(0, n, numPartitions=1)
+    slots = task_slots(one)
+    fine = spark.range(0, n, numPartitions=3 * slots)
+    bloom = functools.partial(make_sketch, "bloom", size2=20, nb_hash=8)
+    assert build_partials(fine, "id", bloom).count() == slots
+    for make in (bloom, functools.partial(make_sketch, "hll", p=12),
+                 functools.partial(make_sketch, "cms", eps=1e-3, delta=1e-2)):
+        got, m = build_sketch(fine, "id", make)
+        want, _ = build_sketch(one, "id", make)
+        assert got.to_bytes() == want.to_bytes()
+        assert m["n_partitions"] == slots and m["n_rows"] == n
+    k = 200
+    kll, _ = build_sketch(fine, "id", functools.partial(make_sketch, "kll", k=k))
+    for q in (0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99):
+        # id v has exactly v smaller values: its normalized rank is v / n
+        assert abs(kll.quantile(q) / n - q) <= 2.861 / k, q
+
+
 def test_build_empty_input_with_partitions(spark):
-    """Zero rows over four partitions: every partition still emits its
-    (empty) partial, so the fold returns an empty sketch instead of raising."""
+    """Zero rows over four partitions: every task still emits its (empty)
+    partial, so the fold returns an empty sketch instead of raising."""
     bloom = functools.partial(make_sketch, "bloom", size2=16, nb_hash=4)
     df = spark.range(0, 100, numPartitions=4).filter("id < 0")
     sk, metrics = build_sketch(df, "id", bloom)
@@ -438,3 +465,17 @@ def test_probe_paths_null_and_large_key_safety(spark):
            for r in probe_array_column(arr_df, bf, "toks").collect()}
     assert got[1][0] is True and got[1][1] is None and got[1][2] is True
     assert got[2] == []
+    # probe_count coalesces to the task slots: an input split finer than
+    # the slots, NULL keys included, counts as it does in one partition
+    from pimbloomfilters_spark.operators.build import task_slots
+
+    bf, _ = build_sketch(spark.range(0, 20_000, 2), "id",
+                         functools.partial(make_sketch, "bloom", size2=18,
+                                           nb_hash=6))
+    keys = "IF(id % 7 = 0, NULL, id) AS id"
+    one = spark.range(0, 20_000, numPartitions=1).selectExpr(keys)
+    fine = spark.range(0, 20_000, numPartitions=3 * task_slots(one)
+                       ).selectExpr(keys)
+    n, hits = probe_count(fine, bf, "id")
+    assert (n, hits) == probe_count(one, bf, "id")
+    assert n == 20_000 - len(range(0, 20_000, 7)) and hits >= n // 2

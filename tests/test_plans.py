@@ -54,11 +54,17 @@ def test_probe_adds_no_shuffle(spark, sf_dir):
 
 def test_partial_build_adds_no_shuffle(spark, sf_dir):
     """Plain partial build = one mapInArrow over the scan, no Exchange;
-    the merge is a collect of KB..MB partials, not a shuffle."""
+    the merge is a collect of KB..MB partials, not a shuffle. An input
+    split finer than the task slots is coalesced, never shuffled."""
+    from pimbloomfilters_spark.operators.build import task_slots
+
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    df = build_partials(orders, "o_custkey",
-                        functools.partial(make_sketch, "bloom", size2=16, nb_hash=4))
-    assert "Exchange" not in _plan(df)
+    fine = spark.range(0, 50_000, numPartitions=3 * task_slots(orders))
+    bloom = functools.partial(make_sketch, "bloom", size2=16, nb_hash=4)
+    for df, col in ((orders, "o_custkey"), (fine, "id")):
+        plan = _plan(build_partials(df, col, bloom))
+        assert "Coalesce" in plan
+        assert "Exchange" not in plan
 
 
 def test_sharded_build_single_exchange(spark, sf_dir):
@@ -68,6 +74,8 @@ def test_sharded_build_single_exchange(spark, sf_dir):
     df = build_bloom_shards(orders, "o_custkey", size2=20, nb_hash=4, n_shards=16)
     plan = _plan(df)
     assert plan.count("Exchange hashpartitioning") == 1
+    # the sharded build keeps its own repartition width: no coalesce
+    assert "Coalesce" not in plan
 
 
 def test_scan_prunes_to_build_column(spark, sf_dir):
