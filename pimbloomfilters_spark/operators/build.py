@@ -25,11 +25,12 @@ input partitioning is the caller's (the plain and grouped builds here,
 ``probe_count``), it is coalesced to ``task_slots(df)`` partitions before
 the kernel, so one Python task per core slot runs it and at most that many
 partials per key come out. Each PySpark Python task pays a fixed start-up
-cost before the UDF runs: the worker calls ``importlib.invalidate_caches()``,
-which re-reads the directory of every zip/jar path importer. An input
-sliced finer than the slots therefore paid for a second wave of near-empty
-tasks, and for more partials to collect and fold. ``coalesce`` never adds
-an Exchange and never raises the partition count. The checkpoint and
+cost before the UDF runs. Its largest part, the re-read of every zip/jar
+path importer's directory in the worker's ``importlib.invalidate_caches()``,
+is paid once per worker process, not once per task (``_zipdirs``,
+CPython < 3.12). One task per slot still saves task scheduling, Arrow
+hand-offs and partials to collect and fold. ``coalesce`` never adds an
+Exchange and never raises the partition count. The checkpoint and
 sharded builds choose their own width with a ``repartition`` and are not
 coalesced: that width bounds how many sketches one task holds.
 

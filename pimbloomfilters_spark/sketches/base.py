@@ -98,6 +98,15 @@ class Sketch(ABC):
             )
 
 
+def payload_size_error(kind: str, dense_bytes: int, tags: str, raw: bytes) -> ValueError:
+    """A payload that is neither the geometry's dense form nor a well-formed
+    sparse one: name what was expected and what arrived."""
+    lead = f"0x{raw[0]:02x}" if raw else "none"
+    return ValueError(
+        f"{kind} payload size mismatch: expected {dense_bytes} dense bytes or a "
+        f"sparse payload tagged {tags}, got {len(raw)} bytes with leading byte {lead}")
+
+
 def sketch_from_bytes(raw: bytes) -> Sketch:
     magic, version, code, hdrlen = _ENVELOPE.unpack_from(raw, 0)
     if magic != _MAGIC:

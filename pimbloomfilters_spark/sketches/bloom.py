@@ -21,9 +21,10 @@ Index derivation is xxhash-family double hashing (north rule): the block comes
 from h1's high bits, the k in-block offsets from ``(h1 + i*h2) mod block_bits``
 — replacing the reference's 10-seed hash table (``src/bloom_filter.hpp:271-299``).
 
-All bulk paths are numpy-vectorized: positions are deduped+sorted once per
-batch and OR-folded per 64-bit word with ``np.bitwise_or.reduceat`` (no Python
-loop over items).
+All bulk paths are numpy-vectorized (no Python loop over items): an insert
+ORs a batch's bit positions into the 64-bit words with ``np.bitwise_or.at``
+(``scatter_or_bits``; repeated words need no dedup or sort), and a probe
+gathers each position's word and tests its bit.
 """
 
 from __future__ import annotations
@@ -34,7 +35,7 @@ from typing import Any
 import numpy as np
 
 from ..hashing import DEFAULT_SEED, double_hashes
-from .base import Sketch, register
+from .base import Sketch, payload_size_error, register
 
 BLOCK_BITS = 4096  # = 512 bytes, the DPU variant's block size
 
@@ -241,10 +242,9 @@ class BlockedBloomFilter(Sketch):
             arr = np.frombuffer(raw, dtype=np.uint64)
             self._words = arr.copy()
             return
-        tag = raw[:1]
-        if tag not in (b"S", b"T"):
-            raise ValueError("payload size mismatch for bloom geometry")
-        dt = np.uint32 if tag == b"S" else np.uint64
+        dt = {b"S": np.uint32, b"T": np.uint64}.get(raw[:1])
+        if dt is None or (len(raw) - 1) % np.dtype(dt).itemsize:
+            raise payload_size_error("bloom", n_bytes, "S/T", raw)
         pos = np.frombuffer(raw, dtype=dt, offset=1).astype(np.uint64)
         if pos.size and int(pos.max()) >= self.m_bits:
             raise ValueError("sparse bloom payload position out of range")

@@ -29,7 +29,7 @@ from typing import Any
 import numpy as np
 
 from ..hashing import DEFAULT_SEED
-from .base import Sketch, register
+from .base import Sketch, payload_size_error, register
 from .bloom import BLOCK_BITS, bloom_positions
 
 
@@ -189,8 +189,8 @@ class CountingBloomFilter(Sketch):
             self.n_items = int(np.frombuffer(raw[:8], dtype=np.int64)[0])
             self._counters = np.frombuffer(raw[8:], dtype=np.uint16).copy()
             return
-        if raw[:1] != b"S" or (len(raw) - 9) % 6:
-            raise ValueError("payload size mismatch for countingbloom geometry")
+        if raw[:1] != b"S" or len(raw) < 9 or (len(raw) - 9) % 6:
+            raise payload_size_error("countingbloom", 8 + 2 * m, "S", raw)
         n = (len(raw) - 9) // 6
         self.n_items = int(np.frombuffer(raw, dtype=np.int64,
                                          count=1, offset=1)[0])

@@ -324,3 +324,31 @@ def test_counting_bloom_insert_overflow_cross_chunk():
         assert np.array_equal(cb._counters, before)
     finally:
         CountingBloomFilter._CHUNK = saved
+
+
+
+@pytest.mark.parametrize("case", ["truncated_dense", "foreign_tag", "torn_sparse"])
+@pytest.mark.parametrize("kind, size2, dense, tags", [
+    ("bloom", 12, 512, "S/T"),               # 4096 bits
+    ("countingbloom", 8, 8 + 2 * 256, "S"),  # n_items + 256 uint16 cells
+])
+def test_bad_payload_names_expected_and_received(kind, size2, dense, tags, case):
+    """A payload that is neither the dense form nor a whole sparse one fails
+    with the expected dense size, the accepted tags, the received length and
+    the leading byte."""
+    import re
+
+    from pimbloomfilters_spark.sketches import make_sketch
+
+    sk = make_sketch(kind, size2=size2, nb_hash=4)
+    sk.insert_bulk(np.arange(2_000, dtype=np.int64))
+    dense_payload = sk.payload()
+    assert len(dense_payload) == dense  # the dense form, not a sparse one
+    raw = {"truncated_dense": dense_payload[:-8],
+           "foreign_tag": b"X" + bytes(15),
+           "torn_sparse": b"S" + bytes(2)}[case]
+    want = (f"{kind} payload size mismatch: expected {dense} dense bytes or a "
+            f"sparse payload tagged {tags}, got {len(raw)} bytes with "
+            f"leading byte 0x{raw[0]:02x}")
+    with pytest.raises(ValueError, match=re.escape(want)):
+        make_sketch(kind, size2=size2, nb_hash=4).set_data(raw)

@@ -91,6 +91,50 @@ def test_partial_build_one_task_per_slot(spark):
         assert abs(kll.quantile(q) / n - q) <= 2.861 / k, q
 
 
+def test_warm_worker_rereads_no_zip_directory(spark):
+    """A reused Python worker's ``importlib.invalidate_caches()`` -- called
+    by pyspark before every task -- reads no zip/jar directory once the
+    package is imported there; the stdlib re-reads every zipimporter's
+    archive each time. The driver keeps the stdlib method."""
+    import zipimport
+
+    import pyarrow as pa
+
+    from pimbloomfilters_spark.operators.build import task_slots
+
+    build_sketch(spark.range(0, 10_000), "id", bloom24)  # warm the workers
+
+    def count_reads(batches):
+        import importlib
+        import os
+        import zipimport
+
+        import pimbloomfilters_spark  # noqa: F401 -- as every package UDF does
+
+        stdlib_read, reads = zipimport._read_directory, []
+
+        def counting_read(archive):
+            reads.append(archive)
+            return stdlib_read(archive)
+
+        zipimport._read_directory = counting_read
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = stdlib_read
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({"pid": [os.getpid()], "reads": [len(reads)]})
+
+    # more tasks than slots: the first run passes through every idle worker
+    df = spark.range(0, 1_000, numPartitions=4 * task_slots(spark.range(1)))
+    runs = [df.mapInArrow(count_reads, "pid long, reads long").collect()
+            for _ in range(2)]
+    assert len(runs[1]) == df.rdd.getNumPartitions()
+    assert [r.reads for r in runs[1]] == [0] * len(runs[1]), runs
+    assert zipimport.zipimporter.invalidate_caches.__module__ == "zipimport"
+
+
 def test_build_empty_input_with_partitions(spark):
     """Zero rows over four partitions: every task still emits its (empty)
     partial, so the fold returns an empty sketch instead of raising."""
