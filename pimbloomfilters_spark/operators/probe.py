@@ -22,7 +22,6 @@ from __future__ import annotations
 
 import hashlib
 import os
-import tempfile
 
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
@@ -43,13 +42,20 @@ _SHIPPED: set[tuple[str, str]] = set()
 def ship_sketch(spark, sketch: Sketch) -> str:
     """Register the sketch bytes with ``sc.addFile`` under a content-hash
     name; returns the basename workers resolve via SparkFiles. Mutating a
-    sketch changes its bytes, hence its name — stale reuse is impossible."""
+    sketch changes its bytes, hence its name — stale reuse is impossible.
+
+    The file is published in the driver's SparkFiles root directory: it
+    belongs to this application, and Spark deletes it when the session
+    stops or the driver exits, so no shipped sketch outlives its session.
+    The driver's own ``addFile`` fetch then finds the file in place."""
+    from pyspark import SparkFiles
+
     raw = sketch.to_bytes()
     name = f"pbf_sketch_{hashlib.blake2b(raw, digest_size=16).hexdigest()}.bin"
     key = (spark.sparkContext.applicationId, name)
     if key in _SHIPPED:
         return name
-    path = os.path.join(tempfile.gettempdir(), name)
+    path = os.path.join(SparkFiles.getRootDirectory(), name)
     # always publish, never trust a file already under this predictable
     # name: it may be stale or planted. Atomic publish: another process
     # writing the same content races benignly; a partial write is never

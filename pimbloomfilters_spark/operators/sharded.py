@@ -36,7 +36,8 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import IntegerType, StructField
 
 from ..sketches import BlockedBloomFilter
-from ..sketches.bloom import BLOCK_BITS, bloom_positions, scatter_or_bits
+from ..sketches.bloom import (BLOCK_BITS, bloom_positions, bloom_probe,
+                              scatter_or_bits, word_bits)
 from .build import collect_rows, flatten_arrow, keyed_partials, task_slots
 
 
@@ -209,12 +210,8 @@ def probe_bloom_distributed(
             for blob in right["sketch"].iloc[1:]:
                 words |= np.frombuffer(blob, dtype=np.uint64)
         base = int(right["shard"].iloc[0]) * shard_size_bits
-        pos = bloom_positions(vals, size2, nb_hash, seed, block_bits)
-        pos = pos - np.uint64(base)
-        w = (pos >> np.uint64(6)).astype(np.int64)
-        bits = np.uint64(1) << (pos & np.uint64(63))
-        hit = (words[w] & bits) != 0
-        out[out_col] = hit.reshape(-1, nb_hash).all(axis=1)
+        out[out_col] = bloom_probe(vals, size2, nb_hash, seed, block_bits,
+                                   word_bits(words, base))
         return out
 
     dtypes = dict(probes.dtypes)

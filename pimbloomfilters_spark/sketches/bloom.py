@@ -23,8 +23,12 @@ from h1's high bits, the k in-block offsets from ``(h1 + i*h2) mod block_bits``
 
 All bulk paths are numpy-vectorized (no Python loop over items): an insert
 ORs a batch's bit positions into the 64-bit words with ``np.bitwise_or.at``
-(``scatter_or_bits``; repeated words need no dedup or sort), and a probe
-gathers each position's word and tests its bit.
+(``scatter_or_bits``; repeated words need no dedup or sort). A probe
+(``bloom_probe``) tests one hash at a time over a cache-sized slice of keys
+and drops each key at its first unset bit, so a negative costs one or two
+gathers instead of k. Weight and the dense/sparse payload choice count bits
+with Arrow's popcount over a zero-copy boolean view of the words
+(``_popcount``).
 """
 
 from __future__ import annotations
@@ -33,11 +37,39 @@ import math
 from typing import Any
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from ..hashing import DEFAULT_SEED, double_hashes
 from .base import Sketch, payload_size_error, register
 
 BLOCK_BITS = 4096  # = 512 bytes, the DPU variant's block size
+
+
+# keys per probe slice: the slice's base, offset, step and index columns and
+# the per-hash temporaries (8 bytes a key each) stay near 1 MB, within L2;
+# 2^12..2^17 measured, 2^14 best or tied at 2^24 and 2^26 bits
+_PROBE_SLICE = 1 << 14
+
+
+def _block_hashes(values: np.ndarray, size2: int, seed: int, block_bits: int):
+    """(base, off, step, mask) per item: ``base`` is the first bit of its
+    block (top bits of h1), ``off = h1 mod bb`` its first in-block offset and
+    ``step = h2 mod bb`` the stride. Offset i is ``(off + i*step) mod bb``,
+    equal to ``(h1 + i*h2) mod bb`` because bb divides 2**64."""
+    m_bits = 1 << size2
+    block_bits = min(block_bits, m_bits)
+    n_blocks = m_bits // block_bits
+    h1, h2 = double_hashes(values, seed)
+    if n_blocks > 1:
+        base = (h1 >> np.uint64(64 - int(math.log2(n_blocks)))) \
+            * np.uint64(block_bits)
+    else:
+        base = np.zeros(h1.shape[0], dtype=np.uint64)
+    mask = np.uint64(block_bits - 1)
+    h1 &= mask
+    h2 &= mask
+    return base, h1, h2, mask
 
 
 def bloom_positions(values: np.ndarray, size2: int, nb_hash: int, seed: int,
@@ -46,25 +78,72 @@ def bloom_positions(values: np.ndarray, size2: int, nb_hash: int, seed: int,
 
     Block index = top bits of h1 (so a power-of-two shard count owns a
     contiguous, block-aligned bit range — the basis of the sharded build);
-    in-block offsets = (h1 + i*h2) mod block_bits (double hashing).
-    Module-level so executors can compute positions for a *shard* of the
-    filter without allocating the full bit array.
+    in-block offsets = (h1 + i*h2) mod block_bits (double hashing), one
+    in-place step per hash into row i of a (k, n) buffer, returned
+    key-major. Module-level so executors can compute positions for a
+    *shard* of the filter without allocating the full bit array.
     """
-    m_bits = 1 << size2
-    block_bits = min(block_bits, m_bits)
-    n_blocks = m_bits // block_bits
-    h1, h2 = double_hashes(values, seed)
-    n = h1.shape[0]
-    i = np.arange(nb_hash, dtype=np.uint64)
-    with np.errstate(over="ignore"):
-        if n_blocks > 1:
-            block = h1 >> np.uint64(64 - int(math.log2(n_blocks)))
-            base = block * np.uint64(block_bits)
-        else:
-            base = np.zeros(n, dtype=np.uint64)
-        off = (h1[:, None] + i[None, :] * h2[:, None]) & np.uint64(block_bits - 1)
-        pos = base[:, None] + off
-    return pos.reshape(n * nb_hash)
+    base, off, step, mask = _block_hashes(values, size2, seed, block_bits)
+    pos = np.empty((nb_hash, off.size), dtype=np.uint64)
+    for i in range(nb_hash):
+        if i:
+            off += step
+            off &= mask
+        np.add(base, off, out=pos[i])
+    return pos.T.reshape(-1)
+
+
+def bloom_probe(values: np.ndarray, size2: int, nb_hash: int, seed: int,
+                block_bits: int, cell_test) -> np.ndarray:
+    """Order-preserving membership: result[i] is True iff ``cell_test`` holds
+    at all k positions of values[i]. ``cell_test(pos)`` maps a uint64
+    position array to a bool array (``word_bits`` for a bit filter).
+
+    Per slice of ``_PROBE_SLICE`` keys the hash runs once; then hash j
+    advances the in-block offset in place, tests that one cell, and keeps
+    only the keys that hit. All-positive slices never compact; a negative
+    leaves after its first unset cell."""
+    values = np.asarray(values)
+    out = np.zeros(values.size, dtype=bool)
+    for lo in range(0, values.size, _PROBE_SLICE):
+        base, off, step, mask = _block_hashes(
+            values[lo:lo + _PROBE_SLICE], size2, seed, block_bits)
+        keep = np.arange(lo, lo + off.size)
+        for j in range(nb_hash):
+            if j:
+                off += step
+                off &= mask
+            hit = cell_test(base + off)
+            if not hit.all():
+                keep, base, off, step = keep[hit], base[hit], off[hit], step[hit]
+                if not keep.size:
+                    break
+        out[keep] = True
+    return out
+
+
+def word_bits(words: np.ndarray, offset: int = 0):
+    """Cell test of a bit filter: is bit ``pos - offset`` of ``words`` set
+    (``offset`` is a shard window's first bit)."""
+    def test(pos: np.ndarray) -> np.ndarray:
+        if offset:
+            pos = pos - np.uint64(offset)
+        w = words[(pos >> np.uint64(6)).view(np.int64)]
+        w >>= pos & np.uint64(63)
+        return (w & np.uint64(1)).astype(bool)
+    return test
+
+
+def _bits(words: np.ndarray) -> pa.BooleanArray:
+    """Zero-copy Arrow boolean view of a uint64 word array: bit i of word w
+    is element 64*w + i (little-endian words, LSB-first bitmaps)."""
+    return pa.BooleanArray.from_buffers(
+        pa.bool_(), 64 * words.size, [None, pa.py_buffer(words)])
+
+
+def _popcount(words: np.ndarray) -> int:
+    """Set bits in a uint64 word array (Arrow's hardware popcount)."""
+    return pc.sum(_bits(words), min_count=0).as_py()
 
 
 def scatter_or_bits(words: np.ndarray, pos: np.ndarray, pos_offset: int = 0) -> None:
@@ -115,10 +194,11 @@ class BlockedBloomFilter(Sketch):
         return bloom_positions(values, self.size2, self.nb_hash, self.seed,
                                self.block_bits)
 
-    # chunk bulk ops so the k-wide position matrix stays cache-sized no
-    # matter how many values one Arrow batch flattens to (a 65k-row batch of
-    # 54-token arrays is 3.5M values -> 28M positions -> ~0.7 GB transients
-    # without chunking; measured ~2x slower)
+    # insert in chunks of 2^19 values so the k-wide position matrix and the
+    # scatter's word/bit columns stay near k x 4 MB each, however many values
+    # one Arrow batch flattens to (a 65k-row batch of 54-token arrays is 3.5M
+    # values -> 28M positions -> ~0.7 GB transients without chunking;
+    # measured ~2x slower)
     _CHUNK = 1 << 19
 
     # -- build -------------------------------------------------------------------
@@ -132,38 +212,19 @@ class BlockedBloomFilter(Sketch):
     def contains_bulk(self, values: np.ndarray) -> np.ndarray:
         """Order-preserving bulk probe (reference contract:
         ``src/bloom_filter.hpp:55-58``): result[i] corresponds to values[i]."""
-        values = np.asarray(values)
-        if values.size == 0:
-            return np.zeros(0, dtype=bool)
-        out = np.empty(values.size, dtype=bool)
-        for lo in range(0, values.size, self._CHUNK):
-            chunk = values[lo:lo + self._CHUNK]
-            pos = self._positions(chunk)
-            words = (pos >> np.uint64(6)).astype(np.int64)
-            bits = np.uint64(1) << (pos & np.uint64(63))
-            hit = (self._words[words] & bits) != 0
-            out[lo:lo + chunk.size] = hit.reshape(-1, self.nb_hash).all(axis=1)
-        return out
+        return bloom_probe(values, self.size2, self.nb_hash, self.seed,
+                           self.block_bits, word_bits(self._words))
 
     def contains(self, value) -> bool:
         return bool(self.contains_bulk(np.asarray([value]))[0])
 
     # -- aggregate ------------------------------------------------------------------
-    _POPCNT16 = None  # lazy 64KB LUT shared across instances
-
     def get_weight(self) -> int:
         """Popcount of set bits (reference ``get_weight``,
         ``src/bloom_filter.hpp:62``; partial+final sum on DPU,
-        ``src/dpu/bloom_filters_dpu.cpp:146-166``). 16-bit-LUT popcount: no
-        8x temporary blowup like unpackbits on multi-GB filters."""
-        if hasattr(np, "bitwise_count"):
-            return int(np.bitwise_count(self._words).sum())
-        if BlockedBloomFilter._POPCNT16 is None:
-            BlockedBloomFilter._POPCNT16 = np.array(
-                [bin(i).count("1") for i in range(1 << 16)], dtype=np.uint8
-            )
-        lut = BlockedBloomFilter._POPCNT16
-        return int(lut[self._words.view(np.uint16)].sum(dtype=np.int64))
+        ``src/dpu/bloom_filters_dpu.cpp:146-166``). Arrow counts the bits of
+        a zero-copy boolean view of the words: no temporary, no LUT."""
+        return _popcount(self._words)
 
     # -- merge / set algebra ------------------------------------------------------------
     def merge(self, other: "BlockedBloomFilter") -> "BlockedBloomFilter":
@@ -219,18 +280,13 @@ class BlockedBloomFilter(Sketch):
     # form above; guide §2.3, shuffle/collect fewer bytes).
     def payload(self) -> bytes:
         wi = np.flatnonzero(self._words)
-        if hasattr(np, "bitwise_count"):
-            nbits = int(np.bitwise_count(self._words[wi]).sum())
-        else:  # pragma: no cover — numpy < 2
-            nbits = int(np.unpackbits(
-                self._words[wi].view(np.uint8)).sum(dtype=np.int64))
+        nz = self._words[wi]
+        nbits = _popcount(nz)
         width = 4 if self.size2 <= 32 else 8
         if 1 + width * nbits < self.m_bits // 8:
-            bits = np.unpackbits(
-                self._words[wi].view(np.uint8),
-                bitorder="little").reshape(-1, 64)
-            rows, cols = np.nonzero(bits)
-            pos = wi[rows] * 64 + cols
+            # set bits of the non-zero words, ascending: word wi[r], bit c
+            idx = pc.indices_nonzero(_bits(nz)).to_numpy().view(np.int64)
+            pos = wi[idx >> 6] * 64 + (idx & 63)
             if width == 4:
                 return b"S" + pos.astype(np.uint32).tobytes()
             return b"T" + pos.astype(np.uint64).tobytes()

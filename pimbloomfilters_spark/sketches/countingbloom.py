@@ -10,7 +10,8 @@ addition — exactly associative/commutative, so every existing build path
 contrast cuckoo filters, whose eviction chains make merge order-dependent
 and failable.
 
-Positions reuse ``bloom_positions`` (same double-hashing, same blocked
+Positions reuse ``bloom_positions`` and the probe reuses ``bloom_probe``
+with a ``counter != 0`` cell test (same double-hashing, same blocked
 layout), so FPR follows the same blocked-Bloom bound as the bit version at
 equal (m, k, n) — verified in tests by comparing membership against a
 BlockedBloomFilter built from the same keys.
@@ -30,7 +31,7 @@ import numpy as np
 
 from ..hashing import DEFAULT_SEED
 from .base import Sketch, payload_size_error, register
-from .bloom import BLOCK_BITS, bloom_positions
+from .bloom import BLOCK_BITS, bloom_positions, bloom_probe
 
 
 @register(9)
@@ -111,12 +112,9 @@ class CountingBloomFilter(Sketch):
         self.n_items -= int(values.size)
 
     def contains_bulk(self, values: np.ndarray) -> np.ndarray:
-        values = np.asarray(values)
-        if values.size == 0:
-            return np.zeros(0, dtype=bool)
-        pos = self._positions(values)
-        return (self._counters[pos] > 0).reshape(values.size,
-                                                 self.nb_hash).all(axis=1)
+        return bloom_probe(
+            values, self.size2, self.nb_hash, self.seed, self.block_bits,
+            lambda pos: self._counters[pos.view(np.int64)] != 0)
 
     def contains(self, value) -> bool:
         return bool(self.contains_bulk(np.asarray([value]))[0])

@@ -2,10 +2,20 @@
 (tests/unit_test1.cpp:25-116, unit_test2.cpp:26-145): size2 x nb_hash x
 partition-count sections; weight/no-FN/FPR/order/serialize invariants."""
 
+import math
+
 import numpy as np
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
-from pimbloomfilters_spark.sketches import BlockedBloomFilter, sketch_from_bytes
+from pimbloomfilters_spark.hashing import double_hashes
+from pimbloomfilters_spark.sketches import (
+    BlockedBloomFilter,
+    CountingBloomFilter,
+    sketch_from_bytes,
+)
+from pimbloomfilters_spark.sketches.bloom import _PROBE_SLICE, bloom_positions
 
 NB_ITEMS = 10_000  # mirrors NB_ITEMS at tests/unit_test1.cpp:15
 NB_NEG = 1_000     # mirrors NB_NO_ITEMS at tests/unit_test1.cpp:16
@@ -352,3 +362,132 @@ def test_bad_payload_names_expected_and_received(kind, size2, dense, tags, case)
             f"leading byte 0x{raw[0]:02x}")
     with pytest.raises(ValueError, match=re.escape(want)):
         make_sketch(kind, size2=size2, nb_hash=4).set_data(raw)
+
+
+# -- probe kernel, positions and popcount against the broadcast formulas ------
+# The oracles below are the n x k broadcast forms the one-hash-at-a-time
+# kernel replaced; every output must stay bit-for-bit the same.
+
+_S = _PROBE_SLICE
+
+
+def _oracle_positions(values, size2, k, seed, block_bits):
+    """(n, k) global bit positions: (h1 + i*h2) mod bb inside h1's block."""
+    m = 1 << size2
+    bb = min(block_bits, m)
+    n_blocks = m // bb
+    h1, h2 = double_hashes(values, seed)
+    i = np.arange(k, dtype=np.uint64)
+    with np.errstate(over="ignore"):
+        base = (h1 >> np.uint64(64 - int(math.log2(n_blocks)))) * np.uint64(bb) \
+            if n_blocks > 1 else np.zeros_like(h1)
+        off = (h1[:, None] + i[None, :] * h2[:, None]) & np.uint64(bb - 1)
+    return base[:, None] + off
+
+
+def _oracle_bits(words, pos):
+    w = words[(pos >> np.uint64(6)).astype(np.int64)]
+    return ((w >> (pos & np.uint64(63))) & np.uint64(1)).astype(bool).all(axis=1)
+
+
+def _oracle_payload(words, m_bits):
+    """The dense/sparse payload by unpackbits, as it was written before."""
+    wi = np.flatnonzero(words)
+    bits = np.unpackbits(words[wi].view(np.uint8), bitorder="little")
+    if 1 + 4 * int(bits.sum()) < m_bits // 8:
+        rows, cols = np.nonzero(bits.reshape(-1, 64))
+        return b"S" + (wi[rows] * 64 + cols).astype(np.uint32).tobytes()
+    return words.tobytes()
+
+
+def _popcount_oracle(words):
+    return sum(int(w).bit_count() for w in words[words != 0])
+
+
+@settings(max_examples=60, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(size2=st.integers(3, 28), k=st.integers(1, 9), blocked=st.booleans(),
+       seed=st.integers(0, 2**31), key_seed=st.integers(0, 2**31),
+       n_keys=st.sampled_from([0, 1, 100, 3000]),
+       n_probe=st.sampled_from([0, 1, _S - 1, _S, _S + 1, 2 * _S + 1]))
+def test_probe_kernel_matches_broadcast_formula(size2, k, blocked, seed,
+                                                key_seed, n_keys, n_probe):
+    """Bloom and counting-Bloom membership, positions, weight and payload
+    equal the broadcast oracles at slice boundaries +-1, on empty input and
+    on all-miss batches (an empty filter); inserted keys always hit."""
+    rng = np.random.default_rng(key_seed)
+    keys = rng.integers(-(2**63), 2**63 - 1, n_keys, dtype=np.int64)
+    probes = np.concatenate([
+        keys, rng.integers(-(2**63), 2**63 - 1, n_probe, dtype=np.int64)])
+    rng.shuffle(probes)
+    bf = BlockedBloomFilter(size2=size2, nb_hash=k, seed=seed, blocked=blocked)
+    bf.insert_bulk(keys)
+
+    pos = _oracle_positions(probes, size2, k, seed, bf.block_bits)
+    assert bloom_positions(probes, size2, k, seed, bf.block_bits).tobytes() \
+        == pos.tobytes()
+    got = bf.contains_bulk(probes)
+    assert got.dtype == bool and got.shape == probes.shape
+    assert np.array_equal(got, _oracle_bits(bf._words, pos))
+    assert bf.contains_bulk(keys).all()
+    assert bf.get_weight() == _popcount_oracle(bf._words)
+    assert bf.payload() == _oracle_payload(bf._words, bf.m_bits)
+
+    if size2 <= 22:  # uint16 cells: 2 bytes per bit of the bit filter
+        cb = CountingBloomFilter(size2=size2, nb_hash=k, seed=seed,
+                                 blocked=blocked)
+        cb.insert_bulk(keys)
+        hit = (cb._counters[pos.astype(np.int64)] != 0).all(axis=1)
+        assert np.array_equal(cb.contains_bulk(probes), hit)
+        assert np.array_equal(hit, got)
+
+
+@pytest.mark.parametrize("k", range(1, 10))
+def test_probe_kernel_half_full_filter(k):
+    """At ~50% fill a negative key survives j hashes with probability 2^-j,
+    so every hash index decides some keys: a kernel that skips any one hash,
+    or keeps a key that missed, answers differently from the oracle."""
+    size2 = 16
+    bf = BlockedBloomFilter(size2=size2, nb_hash=k)
+    bf.insert_bulk(np.arange(int((1 << size2) * 0.69 / k), dtype=np.int64))
+    probes = np.arange(10**9, 10**9 + 3 * _S + 7, dtype=np.int64)
+    pos = _oracle_positions(probes, size2, k, bf.seed, bf.block_bits)
+    want = _oracle_bits(bf._words, pos)
+    assert 0 < want.sum() < want.size
+    assert np.array_equal(bf.contains_bulk(probes), want)
+    cb = CountingBloomFilter(size2=size2, nb_hash=k)
+    cb.insert_bulk(np.arange(int((1 << size2) * 0.69 / k), dtype=np.int64))
+    assert np.array_equal(cb.contains_bulk(probes), want)
+
+
+@pytest.mark.parametrize("size2", [3, 4, 5, 6, 7, 12, 20])
+def test_weight_is_popcount(size2):
+    """get_weight and estimate_cardinality count every set bit, including
+    filters smaller than one 64-bit word."""
+    bf = BlockedBloomFilter(size2=size2, nb_hash=3)
+    bf.insert_bulk(np.arange(1 << max(0, size2 - 4), dtype=np.int64))
+    x = _popcount_oracle(bf._words)
+    assert bf.get_weight() == x
+    if x < bf.m_bits:
+        assert bf.estimate_cardinality() == \
+            -(bf.m_bits / 3) * math.log(1.0 - x / bf.m_bits)
+
+
+@pytest.mark.parametrize("size2", [6, 10, 16, 20])
+@pytest.mark.parametrize("shift", [-1, 0, 1])
+def test_payload_at_dense_sparse_boundary(size2, shift):
+    """Payload bytes at the set-bit counts around the switch: sparse while
+    1 + 4*nbits < m/8, dense from there on; both forms round-trip."""
+    m_bytes = (1 << size2) // 8
+    nbits = m_bytes // 4 + shift  # 1 + 4*nbits = m/8 - 3, m/8 + 1, m/8 + 5
+    bf = BlockedBloomFilter(size2=size2, nb_hash=4)
+    rng = np.random.default_rng(size2)
+    pos = rng.choice(bf.m_bits, size=nbits, replace=False).astype(np.uint64)
+    np.bitwise_or.at(bf._words, (pos >> np.uint64(6)).astype(np.int64),
+                     np.uint64(1) << (pos & np.uint64(63)))
+    raw = bf.payload()
+    assert raw == _oracle_payload(bf._words, bf.m_bits)
+    assert (len(raw) == m_bytes) == (1 + 4 * nbits >= m_bytes)
+    back = BlockedBloomFilter(size2=size2, nb_hash=4)
+    back.set_data(raw)
+    assert np.array_equal(back._words, bf._words)

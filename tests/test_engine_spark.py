@@ -167,20 +167,64 @@ def test_ship_sketch_ignores_planted_file(spark):
     planted) is never shipped: ship_sketch always republishes the bytes."""
     import hashlib
     import os
-    import tempfile
+
+    from pyspark import SparkFiles
 
     sk = make_sketch("bloom", size2=16, nb_hash=4)
     keys = np.arange(7_000_000, 7_000_500, dtype=np.int64)
     sk.insert_bulk(keys)
     digest = hashlib.blake2b(sk.to_bytes(), digest_size=16).hexdigest()
-    with open(os.path.join(tempfile.gettempdir(), f"pbf_sketch_{digest}.bin"),
-              "wb") as f:
+    with open(os.path.join(SparkFiles.getRootDirectory(),
+                           f"pbf_sketch_{digest}.bin"), "wb") as f:
         f.write(b"not a sketch")
     probes = np.r_[keys, np.arange(-300, 0)]
     df = spark.createDataFrame([(int(k),) for k in probes], "k long")
     got = {r["k"]: r["member"] for r in probe_key_column(df, sk, "k").collect()}
     assert [got[int(k)] for k in probes] == sk.contains_bulk(probes).tolist()
     assert all(got[int(k)] for k in keys)
+
+
+_SHIP_CHILD = """
+import glob, os, sys
+import numpy as np
+from pimbloomfilters_spark.operators.probe import probe_count
+from pimbloomfilters_spark.session import get_spark
+from pimbloomfilters_spark.sketches import make_sketch
+
+tmp = os.environ["TMPDIR"]
+spark = get_spark("ship-cleanup", cpus=1, shuffle_partitions=1)
+sk = make_sketch("bloom", size2=16, nb_hash=4)
+sk.insert_bulk(np.arange(100, dtype=np.int64))
+assert probe_count(spark.range(200), sk, "id")[1] >= 100
+shipped = glob.glob(os.path.join(tmp, "**", "pbf_sketch_*.bin"), recursive=True)
+assert shipped and not glob.glob(os.path.join(tmp, "pbf_sketch_*")), shipped
+if sys.argv[1] == "stop":
+    spark.stop()
+    assert not glob.glob(os.path.join(tmp, "**", "pbf_sketch_*"),
+                         recursive=True)
+print("probed")
+"""
+
+
+@pytest.mark.parametrize("end", ["stop", "exit"])
+def test_ship_sketch_leaves_no_file_behind(tmp_path, end):
+    """A shipped sketch lives in the application's own directory, not at the
+    top of the temp dir, and is gone once the session stops or the driver
+    exits without stopping it."""
+    import glob
+    import os
+    import subprocess
+    import sys
+
+    env = dict(os.environ, TMPDIR=str(tmp_path),
+               SPARK_LOCAL_DIRS=str(tmp_path / "local"))
+    env.pop("PYSPARK_SUBMIT_ARGS", None)
+    # capture_output waits for the pipes to close, i.e. for the JVM the
+    # child launched to finish its shutdown hooks too
+    proc = subprocess.run([sys.executable, "-c", _SHIP_CHILD, end], env=env,
+                          capture_output=True, text=True, timeout=300)
+    assert "probed" in proc.stdout, proc.stderr[-3000:]
+    assert not glob.glob(str(tmp_path / "**" / "pbf_sketch_*"), recursive=True)
 
 
 def test_probe_key_column_semijoin(spark, sf_dir):

@@ -94,3 +94,37 @@ def test_fpr_block_variant_ordering(spark):
     # smaller blocks => heavier blocked penalty at equal m,k,n
     assert fprs[64] >= fprs[4096]
 
+
+
+@pytest.mark.parametrize("k", [2, 9])
+def test_distributed_probe_matches_broadcast_formula(spark, k):
+    """The cogroup probe tests bits through a shard window's offset. On a
+    half-full filter (every hash index decides some keys), with per-shard
+    groups longer than one probe slice, its membership equals the broadcast
+    n x k formula over the assembled filter, with no false negatives."""
+    from pimbloomfilters_spark.hashing import double_hashes
+    from pimbloomfilters_spark.sketches.bloom import _PROBE_SLICE
+
+    size2, n_shards = 16, 2
+    cfg = dict(size2=size2, nb_hash=k, n_shards=n_shards)
+    n_keys = int((1 << size2) * 0.69 / k)
+    keys = spark.range(0, n_keys, numPartitions=2)
+    shards = build_bloom_shards(keys, "id", **cfg).cache()
+    bf = assemble_bloom(shards.collect(), **cfg)
+    probes = spark.range(0, n_keys + 3 * _PROBE_SLICE, numPartitions=3)
+    got = {r["id"]: r["member"] for r in
+           probe_bloom_distributed(probes, shards, "id", **cfg).collect()}
+    shards.unpersist()
+
+    vals = np.arange(n_keys + 3 * _PROBE_SLICE, dtype=np.int64)
+    h1, h2 = double_hashes(vals, bf.seed)
+    i = np.arange(k, dtype=np.uint64)
+    with np.errstate(over="ignore"):
+        base = (h1 >> np.uint64(64 - 4)) * np.uint64(4096)  # 16 blocks
+        pos = base[:, None] + ((h1[:, None] + i * h2[:, None])
+                               & np.uint64(4095))
+    w = bf._words[(pos >> np.uint64(6)).astype(np.int64)]
+    want = ((w >> (pos & np.uint64(63))) & np.uint64(1)).astype(bool).all(axis=1)
+    assert 0 < want[n_keys:].sum() < want[n_keys:].size
+    assert np.array_equal(np.array([got[int(v)] for v in vals]), want)
+    assert want[:n_keys].all()

@@ -43,7 +43,7 @@ def canon(df: pd.DataFrame) -> tuple[int, list[str], str]:
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = get_spark("check-oracles", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    spark = get_spark("check-oracles")  # local[SPARK_GRAFT_CPUS], else every core
     con = duckdb.connect()
     for t in TABLES:
         path = f"{sf_dir}/{t}.parquet"
