@@ -6,7 +6,7 @@ Mirrors the reference benchmark flow (create -> insert_bulk(n) -> weight ->
 shuffled lookup(n) -> FPR on negatives; benchmarks/benchmark1.cpp:54-73) on
 Spark, plus the oracle-gated catalog queries at $SPARK_GRAFT_SF_DIR.
 
-  python bench.py                 # one run at local[$SPARK_GRAFT_CPUS]
+  python bench.py                 # one run at local[$SPARK_GRAFT_CPUS], else every core
   python bench.py --scaling       # same job at 8 and 32 cores -> BENCH.md
 """
 
@@ -23,7 +23,7 @@ _REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, _REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 N_KEYS = int(os.environ.get("PBF_BENCH_KEYS", str(10_000_000)))
 N_NEG = int(os.environ.get("PBF_BENCH_NEGATIVES", str(1_000_000)))
 SIZE2 = int(os.environ.get("PBF_BENCH_SIZE2", "27"))

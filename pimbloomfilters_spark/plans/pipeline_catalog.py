@@ -1040,14 +1040,13 @@ def q_sample_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("long").alias("doc_id"), "source")
     base = tempfile.mkdtemp(prefix="pbf_sampgate_")
-    # one parallel write / one availableNow batch: bottom-k by md5 priority
-    # is mergeable ACROSS ANY batch boundaries (the operator's contract, and
-    # what the pytest parity suite drives multi-batch), so the held sample
-    # is byte-identical however the replay is batched — the old two
-    # coalesce(1) single-task writes bought nothing but wall clock
-    docs.write.mode("append").parquet(base)
+    # two files, one per micro-batch: bottom-k by md5 priority is mergeable
+    # across any batch boundary, so the held sample (and the oracle hash)
+    # is the same as one batch would give, and the gate still covers the
+    # runner's snapshot handoff from one micro-batch to the next
+    docs.repartition(2).write.mode("append").parquet(base)
     stream = (spark.readStream.schema("doc_id long, source string")
-              .parquet(base))
+              .option("maxFilesPerTrigger", 1).parquet(base))
     name = "sampgate_" + uuid.uuid4().hex[:10]
     ckpt = tempfile.mkdtemp(prefix="pbf_sampckpt_")
     q = sample_stream_query(stream, "doc_id", 50, name, ckpt)

@@ -7,11 +7,13 @@ partition-parallel: associative, commutative merge.
 
 Shapes:
 
-1. ``sketch_stream_query`` / ``dedup_stream_query`` — foreachBatch: every
-   micro-batch builds partials with the batch engine and merges them into a
-   running sketch, snapshotted durably per batch next to the checkpoint and
-   reloaded on start (driver restarts lossless; replayed batches already in
-   the snapshot are skipped — exactly-once for every sketch kind).
+1. ``sketch_stream_query`` / ``dedup_stream_query`` / ``profile_stream_query``
+   / ``sample_stream_query`` — foreachBatch through one runner
+   (``_fold_query``): every micro-batch is folded into a driver-held state
+   (a sketch, a dedup filter pair, a profile, a bottom-k sample) that is
+   snapshotted durably per batch next to the checkpoint and reloaded on
+   start (driver restarts lossless; replayed batches already in the
+   snapshot are skipped — exactly-once for every kind).
 
 2. ``sharded_dedup_stream`` — the filter lives EXECUTOR-side as per-shard
    GroupState in the state store (nothing re-ships per batch, restart-safe
@@ -29,11 +31,16 @@ Shapes:
 
 from __future__ import annotations
 
-import os
+import copy
+import io
+import struct
+import threading
 from typing import Callable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -48,86 +55,77 @@ from pyspark.sql.types import (
 
 from ..operators.build import build_sketch
 from ..sketches import Sketch, sketch_from_bytes
+from ._snapshot import SnapshotStore
 
-# driver-side registry of running sketches, keyed by query name
-_RUNNING: dict[str, Sketch] = {}
-# highest batch id whose contribution is already inside the persisted snapshot
-_PERSISTED_BATCH: dict[str, int] = {}
-# which query KIND owns each name this session: the sketch/dedup/profile
-# registries above are keyed by name, so a name reused across kinds would
-# cross-contaminate the replay-skip watermark and silently skip batches
-_KIND: dict[str, str] = {}
+# -- foreachBatch fold queries ------------------------------------------------
+# sketch_stream_query, dedup_stream_query, profile_stream_query and
+# sample_stream_query differ only in their fold and their payload codec;
+# ``_fold_query`` does the rest once. It loads the newest snapshot on start,
+# skips replayed batches (``batch_id <=`` the snapshot's, which makes CMS/KLL
+# replays exactly-once as well) and empty ones, folds each new batch, saves
+# its snapshot and publishes the new state here.
+#
+# query name -> (kind, state). foreachBatch runs on a streaming thread while
+# get_stream_* is polled from the driver thread: a fold never mutates a
+# published state, and the entry is replaced whole under the lock, so a
+# reader never sees a half-applied batch. The kind is the claim: a name
+# reused across kinds would hand one query's snapshot state to another.
+_QUERIES: dict[str, tuple[str, object]] = {}
+_LOCK = threading.Lock()
 
 
-def _claim(name: str, kind: str) -> None:
-    prev = _KIND.get(name)
-    if prev is not None and prev != kind:
-        raise ValueError(
-            f"stream query name {name!r} already belongs to a {prev} query "
-            f"in this session; use a distinct name per query kind")
-    _KIND[name] = kind
+def _published(name: str, kind: str):
+    with _LOCK:
+        entry = _QUERIES.get(name)
+    return entry[1] if entry is not None and entry[0] == kind else None
+
+
+def _fold_query(stream_df: DataFrame, name: str, kind: str,
+                checkpoint_dir: str, fold: Callable, encode: Callable,
+                decode: Callable, trigger_available_now: bool):
+    """Start the foreachBatch query ``name``: ``fold(state, batch_df)``
+    returns the next state (state is None before the first batch) without
+    mutating its argument; ``encode``/``decode`` are the kind's payload
+    codec."""
+    store = SnapshotStore(checkpoint_dir)
+    with _LOCK:
+        prev = _QUERIES.get(name)
+        if prev is not None and prev[0] != kind:
+            raise ValueError(
+                f"stream query name {name!r} already belongs to a {prev[0]} "
+                f"query in this session; use a distinct name per query kind")
+        payload, done = store.load()
+        state = None if payload is None else decode(payload)
+        _QUERIES[name] = (kind, state)
+
+    def _step(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal state, done
+        if batch_id <= done or batch_df.isEmpty():
+            return  # a replay the loaded snapshot already holds, or nothing
+        new = fold(state, batch_df)
+        store.save(batch_id, encode(new))
+        state, done = new, batch_id
+        with _LOCK:
+            _QUERIES[name] = (kind, new)
+
+    writer = (
+        stream_df.writeStream.foreachBatch(_step)
+        .queryName(name)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
+    )
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _merged(cur: Sketch | None, partial: Sketch) -> Sketch:
+    """cur ∪ partial without touching the published ``cur``."""
+    return partial if cur is None else copy.deepcopy(cur).merge(partial)
 
 
 def get_stream_sketch(name: str) -> Sketch | None:
-    return _RUNNING.get(name)
-
-
-# -- durable sketch snapshots -------------------------------------------------
-# Structured Streaming durably commits batch OFFSETS to checkpointLocation;
-# the running sketch must be equally durable or a driver restart resumes past
-# committed batches with an empty sketch (silently losing every prior key).
-# Snapshot-per-batch next to the checkpoint dir: write temp + atomic rename,
-# reload the newest on start, and skip re-merging any replayed batch whose id
-# is already covered by the loaded snapshot (making CMS/KLL replays exactly-
-# once as well). Local-filesystem checkpoints only (this sandbox); an object-
-# store deployment would swap these two helpers for put/list calls.
-
-def _state_dir(checkpoint_dir: str) -> str:
-    return os.path.join(checkpoint_dir.removeprefix("file:"), "sketch_state")
-
-
-def load_persisted_sketch(checkpoint_dir: str) -> tuple[Sketch | None, int]:
-    """(sketch, batch_id) of the newest snapshot, or (None, -1)."""
-    d = _state_dir(checkpoint_dir)
-    best, path = -1, None
-    try:
-        names = os.listdir(d)
-    except FileNotFoundError:
-        return None, -1
-    for f in names:
-        if f.startswith("batch_") and f.endswith(".bin"):
-            bid = int(f[6:-4])
-            if bid > best:
-                best, path = bid, os.path.join(d, f)
-    if path is None:
-        return None, -1
-    with open(path, "rb") as fh:
-        return sketch_from_bytes(fh.read()), best
-
-
-def persist_sketch(checkpoint_dir: str, batch_id: int, sk: Sketch) -> None:
-    d = _state_dir(checkpoint_dir)
-    os.makedirs(d, exist_ok=True)
-    tmp = os.path.join(d, f".batch_{batch_id}.tmp")
-    with open(tmp, "wb") as fh:
-        fh.write(sk.to_bytes())
-    os.replace(tmp, os.path.join(d, f"batch_{batch_id:012d}.bin"))
-    stale = sorted(
-        f for f in os.listdir(d) if f.startswith("batch_") and f.endswith(".bin")
-    )[:-2]  # keep the two newest snapshots
-    for f in stale:
-        try:
-            os.remove(os.path.join(d, f))
-        except OSError:
-            pass
-
-
-def _resume_state(name: str, checkpoint_dir: str) -> None:
-    _RUNNING.pop(name, None)
-    sk, bid = load_persisted_sketch(checkpoint_dir)
-    _PERSISTED_BATCH[name] = bid
-    if sk is not None:
-        _RUNNING[name] = sk
+    return _published(name, "sketch")
 
 
 def sketch_stream_query(
@@ -143,68 +141,31 @@ def sketch_stream_query(
     snapshotted per batch next to the checkpoint and reloaded on start, so a
     driver restart resumes with all prior keys; replayed batches already in
     the snapshot are skipped (exactly-once for every sketch kind)."""
-    _claim(name, "sketch")
-    _resume_state(name, checkpoint_dir)
-
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= _PERSISTED_BATCH.get(name, -1):
-            return  # replay of a batch the loaded snapshot already contains
-        if batch_df.isEmpty():
-            return
-        partial = build_sketch(batch_df, col, make)[0]
-        cur = _RUNNING.get(name)
-        sk = partial if cur is None else cur.merge(partial)
-        _RUNNING[name] = sk
-        persist_sketch(checkpoint_dir, batch_id, sk)
-        _PERSISTED_BATCH[name] = batch_id
-
-    writer = (
-        stream_df.writeStream.foreachBatch(_fold)
-        .queryName(name)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _fold_query(
+        stream_df, name, "sketch", checkpoint_dir,
+        lambda cur, batch_df: _merged(cur, build_sketch(batch_df, col,
+                                                        make)[0]),
+        lambda sk: sk.to_bytes(), sketch_from_bytes, trigger_available_now)
 
 
-# TTL companions to the single-sketch snapshot: previous-generation blob +
-# generation-start timestamp, written atomically next to batch_N.bin. Only
-# the TTL'd dedup stream reads/writes these; the non-TTL paths are untouched.
-_PREV: dict[str, Sketch | None] = {}
-_GEN_START: dict[str, int] = {}
+# dedup payload: gen_start_ms, len(seen blob), seen blob, prev blob; an
+# absent generation is an empty blob
+_DEDUP_HEAD = struct.Struct("<qQ")
 
 
-def _persist_ttl_extras(checkpoint_dir: str, batch_id: int,
-                        prev: Sketch | None, gen_start_ms: int) -> None:
-    d = _state_dir(checkpoint_dir)
-    os.makedirs(d, exist_ok=True)
-    blob = prev.to_bytes() if prev is not None else b""
-    tmp = os.path.join(d, f".batch_{batch_id}.ttl.tmp")
-    with open(tmp, "wb") as fh:
-        fh.write(gen_start_ms.to_bytes(8, "little") + blob)
-    os.replace(tmp, os.path.join(d, f"batch_{batch_id:012d}.ttl"))
-    stale = sorted(f for f in os.listdir(d) if f.endswith(".ttl"))[:-2]
-    for f in stale:
-        try:
-            os.remove(os.path.join(d, f))
-        except OSError:
-            pass
+def _dedup_blob(state) -> bytes:
+    seen, prev, gen_start = state
+    sb = seen.to_bytes() if seen is not None else b""
+    pb = prev.to_bytes() if prev is not None else b""
+    return _DEDUP_HEAD.pack(gen_start, len(sb)) + sb + pb
 
 
-def _load_ttl_extras(checkpoint_dir: str,
-                     batch_id: int) -> tuple[Sketch | None, int]:
-    """(prev_generation, gen_start_ms) persisted with snapshot batch_id."""
-    path = os.path.join(_state_dir(checkpoint_dir),
-                        f"batch_{batch_id:012d}.ttl")
-    try:
-        with open(path, "rb") as fh:
-            raw = fh.read()
-    except FileNotFoundError:
-        return None, 0
-    gen_start = int.from_bytes(raw[:8], "little")
-    return (sketch_from_bytes(raw[8:]) if len(raw) > 8 else None), gen_start
+def _dedup_from_blob(raw: bytes):
+    gen_start, n = _DEDUP_HEAD.unpack_from(raw)
+    sb, pb = raw[_DEDUP_HEAD.size:_DEDUP_HEAD.size + n], \
+        raw[_DEDUP_HEAD.size + n:]
+    return (sketch_from_bytes(sb) if sb else None,
+            sketch_from_bytes(pb) if pb else None, gen_start)
 
 
 def dedup_stream_query(
@@ -225,42 +186,31 @@ def dedup_stream_query(
     first occurrence with probability = FPR, the standard approximate-dedup
     trade — size the filter for the expected key cardinality).
 
-    The 'seen' filter is snapshotted per batch and reloaded on restart (see
-    the durable-snapshot helpers above), so resumed streams keep deduping
-    against everything already emitted. A batch replayed after its parquet
-    write but before the offset commit can still duplicate output rows —
-    standard foreachBatch at-least-once for the sink side.
+    The dedup state is snapshotted per batch and reloaded on restart (see
+    ``_fold_query``), so resumed streams keep deduping against everything
+    already emitted. A batch replayed after its parquet write but before the
+    offset commit can still duplicate output rows — standard foreachBatch
+    at-least-once for the sink side.
 
     ``ttl_ms`` bounds memory on an unbounded key universe by rotating
     generations (the same scheme as ``sharded_dedup_stream``): the filter
     pair (current, previous) remembers a key for >= ttl and <= 2*ttl after
     its generation started, then re-admits it. Each generation is a COMPLETE
     filter for the keys first seen in it, so membership is the OR of two
-    independent probes — no bits-split-across-generations hazard. Rotation
-    state survives restarts via a sidecar snapshot (.ttl) written atomically
-    with each batch snapshot."""
+    independent probes — no bits-split-across-generations hazard. The
+    state ``(seen, prev, gen_start_ms)`` is ONE snapshot file per batch, so
+    a restart restores the previous generation and the rotation clock
+    together with the filter they belong to."""
     import functools as _ft
     import time
 
     from ..operators.probe import probe_key_column
     from ..sketches import make_sketch
 
-    _claim(name, "dedup")
-    _resume_state(name, checkpoint_dir)
-    _PREV.pop(name, None), _GEN_START.pop(name, None)
-    if ttl_ms is not None and _PERSISTED_BATCH.get(name, -1) >= 0:
-        prev, gen_start = _load_ttl_extras(checkpoint_dir,
-                                           _PERSISTED_BATCH[name])
-        _PREV[name], _GEN_START[name] = prev, gen_start
     factory = _ft.partial(make_sketch, "bloom", size2=size2, nb_hash=nb_hash)
 
-    def _step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= _PERSISTED_BATCH.get(name, -1):
-            return
-        if batch_df.isEmpty():
-            return
-        seen = _RUNNING.get(name)
-        prev, gen_start = _PREV.get(name), _GEN_START.get(name, 0)
+    def _fold(state, batch_df: DataFrame):
+        seen, prev, gen_start = state or (None, None, 0)
         if ttl_ms is not None:
             now = int(time.time() * 1000)
             if gen_start == 0:
@@ -278,29 +228,14 @@ def dedup_stream_query(
         # exact within-batch dedup (the filter only learns keys after the
         # whole batch); cross-batch dedup is the Bloom's job
         fresh = fresh.dropDuplicates([key_col]).persist()
-        emitted = not fresh.isEmpty()
-        if emitted:
+        if not fresh.isEmpty():
             fresh.write.mode("append").parquet(out_path)
-            partial = build_sketch(fresh, key_col, factory)[0]
-            seen = partial if seen is None else seen.merge(partial)
+            seen = _merged(seen, build_sketch(fresh, key_col, factory)[0])
         fresh.unpersist()
-        if seen is None:
-            return  # nothing learned yet and no rotation to record
-        _RUNNING[name] = seen
-        _PREV[name], _GEN_START[name] = prev, gen_start
-        persist_sketch(checkpoint_dir, batch_id, seen)
-        if ttl_ms is not None:
-            _persist_ttl_extras(checkpoint_dir, batch_id, prev, gen_start)
-        _PERSISTED_BATCH[name] = batch_id
+        return seen, prev, gen_start
 
-    return (
-        stream_df.writeStream.foreachBatch(_step)
-        .queryName(name)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _fold_query(stream_df, name, "dedup", checkpoint_dir, _fold,
+                       _dedup_blob, _dedup_from_blob, True)
 
 
 _HH_OUT = StructType([
@@ -338,6 +273,10 @@ def windowed_heavy_hitters_stream(
     with_window = (
         stream_df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
         .withWatermark(ts_col, watermark)
+        # NULL keys still advance the watermark above but are no item: the
+        # batch build drops them too, and pandas would read a nullable
+        # long column as float64 (NaN -> int64 min, keys > 2^53 rounded)
+        .filter(F.col(key_col).isNotNull())
         .withColumn("_w", F.window(F.col(ts_col), window, slide or window)
                     .getField("start"))
         .withColumn("_k", F.col(key_col).cast("long"))
@@ -644,6 +583,10 @@ def windowed_distinct_stream(
     with_window = (
         stream_df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
         .withWatermark(ts_col, watermark)
+        # NULL keys still advance the watermark above but are not a
+        # distinct value (xxhash64 would hash NULL as one); the batch build
+        # drops them too
+        .filter(F.col(key_col).isNotNull())
         .withColumn("_w", F.window(F.col(ts_col), window, slide or window)
                     .getField("start"))
         .withColumn("_k", F.xxhash64(F.col(key_col).cast("string")))
@@ -871,17 +814,7 @@ def stream_interval_join(left_stream: DataFrame, right_stream: DataFrame,
 # ``with_sketch=True``) applied to unbounded input: per micro-batch, profile
 # the batch and merge counts + per-column HLLs into a running profile — the
 # data-quality monitor of an ingest stream (null-rate spikes, cardinality
-# drift) with the same durable-snapshot/replay-skip recipe as
-# ``sketch_stream_query``.
-
-_PROFILES: dict[str, dict] = {}
-# foreachBatch runs on a streaming thread while get_stream_profile is
-# polled from the driver thread (the live-monitoring mode): guard every
-# read/mutation of _PROFILES so a poll never sees a half-applied batch
-# (n_rows updated, n_nulls not) or a dict mutated mid-iteration
-import threading as _threading
-
-_PROFILE_LOCK = _threading.Lock()
+# drift). State: {column: [n_rows, n_nulls, hll, stats]}.
 
 
 def get_stream_profile(name: str) -> dict | None:
@@ -889,24 +822,23 @@ def get_stream_profile(name: str) -> dict | None:
     running profile — a consistent snapshot (never reflects a
     partially-folded batch). Numeric columns additionally carry
     "min"/"max" and, for integral ones, exact "sum"/"sumsq" ints."""
-    with _PROFILE_LOCK:
-        prof = _PROFILES.get(name)
-        if prof is None:
-            return None
-        out = {}
-        for c, v in prof.items():
-            d = {"n_rows": v[0], "n_nulls": v[1],
-                 # NaN for not-estimable (map-typed) columns, matching the
-                 # batch profiler's surface exactly
-                 "ndv_est": float(v[2].estimate()) if v[2] is not None
-                 else float("nan")}
-            st = v[3] if len(v) > 3 else None
-            if st is not None:
-                d["min"], d["max"] = st[1], st[2]
-                if st[0] == "i":
-                    d["sum"], d["sumsq"] = st[3], st[4]
-            out[c] = d
-        return out
+    prof = _published(name, "profile")
+    if prof is None:
+        return None
+    out = {}
+    for c, v in prof.items():
+        d = {"n_rows": v[0], "n_nulls": v[1],
+             # NaN for not-estimable (map-typed) columns, matching the
+             # batch profiler's surface exactly
+             "ndv_est": float(v[2].estimate()) if v[2] is not None
+             else float("nan")}
+        st = v[3] if len(v) > 3 else None
+        if st is not None:
+            d["min"], d["max"] = st[1], st[2]
+            if st[0] == "i":
+                d["sum"], d["sumsq"] = st[3], st[4]
+        out[c] = d
+    return out
 
 
 _PROFILE_BLOB_V2 = -2  # magic: v2 snapshots carry a per-column stats field
@@ -914,7 +846,6 @@ _PROFILE_BLOB_V2 = -2  # magic: v2 snapshots carry a per-column stats field
 
 def _profile_blob(prof: dict) -> bytes:
     import json
-    import struct
 
     out = [struct.pack("<qq", _PROFILE_BLOB_V2, len(prof))]
     for c, (n, nn, sk, st) in prof.items():
@@ -931,7 +862,6 @@ def _profile_blob(prof: dict) -> bytes:
 def _parse_profile_records(raw: bytes, off: int, n_cols: int,
                            five_fields: bool) -> dict:
     import json
-    import struct
 
     prof = {}
     for _ in range(n_cols):
@@ -957,8 +887,6 @@ def _parse_profile_records(raw: bytes, off: int, n_cols: int,
 
 
 def _profile_from_blob(raw: bytes) -> dict:
-    import struct
-
     (head,) = struct.unpack_from("<q", raw, 0)
     if head == _PROFILE_BLOB_V2:
         (n_cols,) = struct.unpack_from("<q", raw, 8)
@@ -966,14 +894,15 @@ def _profile_from_blob(raw: bytes) -> dict:
     # Headerless (pre-v2) snapshots are refused outright rather than
     # sniffed: two headerless layouts once existed and disambiguating by
     # try-parsing could, on a length coincidence, silently load a
-    # corrupted profile. Those snapshots only ever lived in short-lived
-    # tmp checkpoints, so there is no migration path to keep — delete the
-    # profile_*.bin snapshot files and re-run; the stream re-folds from
-    # its own checkpointed source replay.
+    # corrupted profile. Deleting only the snapshot files is no way out:
+    # Spark never replays the batches its checkpoint has committed, so the
+    # profile would restart short of them. Only a fresh checkpoint
+    # rebuilds it from the source.
     raise ValueError(
-        "unrecognized profile snapshot format (pre-v2 headerless snapshot "
-        "or corrupt blob): delete the profile_*.bin files next to the "
-        "checkpoint and restart the query to rebuild the profile")
+        "unrecognized profile snapshot format (pre-v2 headerless "
+        "profile_*.bin blob or corrupt payload): stop the query and delete "
+        "its whole checkpoint directory, then restart it to rebuild the "
+        "profile from the source")
 
 
 def stream_profile_rows(spark, name: str) -> DataFrame:
@@ -985,12 +914,10 @@ def stream_profile_rows(spark, name: str) -> DataFrame:
     merge bit-exactly). Raises KeyError for an unknown profile name."""
     from ..operators.profile import _PROFILE_SCHEMA, _agg_to_rows
 
-    with _PROFILE_LOCK:
-        prof = _PROFILES.get(name)
-        rows = None if prof is None else _agg_to_rows(
-            {c: tuple(v) for c, v in prof.items()}, False)
-    if rows is None:
+    prof = _published(name, "profile")
+    if prof is None:
         raise KeyError(f"no stream profile named {name!r}")
+    rows = _agg_to_rows({c: tuple(v) for c, v in prof.items()}, False)
     return spark.createDataFrame(rows, _PROFILE_SCHEMA)
 
 
@@ -1008,75 +935,26 @@ def profile_stream_query(
     running profile equals a batch ``profile_table`` over everything seen.
     Snapshot-per-batch next to the checkpoint; a driver restart reloads the
     newest snapshot and skips replayed batches (exactly-once)."""
-    _claim(name, "profile")
-    # the replay-skip watermark lives in the shared _PERSISTED_BATCH dict;
-    # namespace the key so even a kind-registry bypass can't collide with a
-    # sketch/dedup query of the same name
-    wkey = f"profile:{name}"
-    d = _state_dir(checkpoint_dir)
-    with _PROFILE_LOCK:
-        _PROFILES.pop(name, None)
-    best, path = -1, None
-    try:
-        for f in os.listdir(d):
-            if f.startswith("profile_") and f.endswith(".bin"):
-                bid = int(f[8:-4])
-                if bid > best:
-                    best, path = bid, os.path.join(d, f)
-    except FileNotFoundError:
-        pass
-    _PERSISTED_BATCH[wkey] = best
-    if path is not None:
-        with open(path, "rb") as fh:
-            loaded = _profile_from_blob(fh.read())
-        with _PROFILE_LOCK:
-            _PROFILES[name] = loaded
+    from ..operators.profile import merge_stats, profile_agg
 
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
+    def _fold(prof, batch_df: DataFrame) -> dict:
         # profile_agg returns the driver accumulator dict directly — no
         # DataFrame round trip, no extra sketch (de)serialization on the
         # per-batch hot path
-        from ..operators.profile import profile_agg
-
-        if batch_id <= _PERSISTED_BATCH.get(wkey, -1):
-            return
-        if batch_df.isEmpty():
-            return
         batch_agg = profile_agg(batch_df, columns=columns, hll_p=hll_p)
-        with _PROFILE_LOCK:
-            from ..operators.profile import merge_stats
+        out = {c: list(v) for c, v in (prof or {}).items()}
+        for c, (n, nn, sk, st) in batch_agg.items():
+            slot = out.setdefault(c, [0, 0, None, None])
+            slot[0] += n
+            slot[1] += nn
+            if sk is not None:
+                slot[2] = _merged(slot[2], sk)
+            slot[3] = merge_stats(slot[3], st)
+        return out
 
-            prof = _PROFILES.setdefault(name, {})
-            for c, (n, nn, sk, st) in batch_agg.items():
-                slot = prof.setdefault(c, [0, 0, None, None])
-                slot[0] += n
-                slot[1] += nn
-                if sk is not None:
-                    slot[2] = sk if slot[2] is None else slot[2].merge(sk)
-                slot[3] = merge_stats(slot[3], st)
-            blob = _profile_blob(prof)
-        os.makedirs(d, exist_ok=True)
-        tmp = os.path.join(d, f".profile_{batch_id}.tmp")
-        with open(tmp, "wb") as fh:
-            fh.write(blob)
-        os.replace(tmp, os.path.join(d, f"profile_{batch_id:012d}.bin"))
-        for f in sorted(x for x in os.listdir(d)
-                        if x.startswith("profile_") and x.endswith(".bin"))[:-2]:
-            try:
-                os.remove(os.path.join(d, f))
-            except OSError:
-                pass
-        _PERSISTED_BATCH[wkey] = batch_id
-
-    writer = (
-        stream_df.writeStream.foreachBatch(_fold)
-        .queryName(name)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _fold_query(stream_df, name, "profile", checkpoint_dir, _fold,
+                       _profile_blob, _profile_from_blob,
+                       trigger_available_now)
 
 
 # -- streaming deterministic uniform sample -----------------------------------
@@ -1084,30 +962,20 @@ def profile_stream_query(
 # equals bottom-k of the per-part bottom-ks, so the held sample after any
 # micro-batch sequence is byte-identical to the batch ``uniform_sample``
 # over everything seen — regardless of batch boundaries, arrival order, or
-# restarts. State is k rows (an Arrow table snapshotted per batch).
-
-import io
-
-import pyarrow as pa
-import pyarrow.compute as pc
-
-_SAMPLE_LOCK = _threading.Lock()
-_SAMPLE_TABLES: dict[str, "pa.Table"] = {}
+# restarts. State is k rows (an Arrow table, snapshotted as Arrow IPC).
 
 
 def get_stream_sample(name: str):
     """The running bottom-k sample as a pyarrow Table (priority column
     ``_pri`` first, then the stream's columns), or None."""
-    with _SAMPLE_LOCK:
-        return _SAMPLE_TABLES.get(name)
+    return _published(name, "sample")
 
 
 def stream_sample_rows(spark, name: str) -> DataFrame:
     """The running sample as a DataFrame in the stream's schema (the rows
     batch ``uniform_sample(k)`` over everything folded so far would
     return). Raises KeyError for an unknown sample name."""
-    with _SAMPLE_LOCK:
-        t = _SAMPLE_TABLES.get(name)
+    t = _published(name, "sample")
     if t is None:
         raise KeyError(f"no stream sample named {name!r}")
     return spark.createDataFrame(t.to_pandas().drop(columns=["_pri"]))
@@ -1141,67 +1009,18 @@ def sample_stream_query(
     asserts. Snapshot-per-batch next to the checkpoint (Arrow IPC, k
     rows); restarts reload the newest snapshot and skip replayed batches
     (exactly-once)."""
-    _claim(name, "sample")
-    wkey = f"sample:{name}"
-    d = _state_dir(checkpoint_dir)
-    with _SAMPLE_LOCK:
-        _SAMPLE_TABLES.pop(name, None)
-    best, path = -1, None
-    try:
-        for f in os.listdir(d):
-            if f.startswith("sample_") and f.endswith(".bin"):
-                bid = int(f[7:-4])
-                if bid > best:
-                    best, path = bid, os.path.join(d, f)
-    except FileNotFoundError:
-        pass
-    _PERSISTED_BATCH[wkey] = best
-    if path is not None:
-        with open(path, "rb") as fh:
-            loaded = _sample_from_blob(fh.read())
-        with _SAMPLE_LOCK:
-            _SAMPLE_TABLES[name] = loaded
 
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= _PERSISTED_BATCH.get(wkey, -1):
-            return
-        if batch_df.isEmpty():
-            return
+    def _fold(cur, batch_df: DataFrame):
         part = (batch_df
                 .withColumn("_pri", F.md5(F.col(key_col).cast("string")))
                 .select("_pri", *batch_df.columns)
                 .orderBy("_pri").limit(k))
-        batch_top = pa.Table.from_pandas(part.toPandas(),
-                                         preserve_index=False)
-        with _SAMPLE_LOCK:
-            cur = _SAMPLE_TABLES.get(name)
-            merged = (batch_top if cur is None
-                      else pa.concat_tables([cur, batch_top],
-                                            promote_options="none"))
-            order = pc.sort_indices(merged,
-                                    sort_keys=[("_pri", "ascending")])
-            merged = merged.take(order[:k])
-            _SAMPLE_TABLES[name] = merged
-            blob = _sample_blob(merged)
-        os.makedirs(d, exist_ok=True)
-        tmp = os.path.join(d, f".sample_{batch_id}.tmp")
-        with open(tmp, "wb") as fh:
-            fh.write(blob)
-        os.replace(tmp, os.path.join(d, f"sample_{batch_id:012d}.bin"))
-        for f in sorted(x for x in os.listdir(d)
-                        if x.startswith("sample_") and x.endswith(".bin"))[:-2]:
-            try:
-                os.remove(os.path.join(d, f))
-            except OSError:
-                pass
-        _PERSISTED_BATCH[wkey] = batch_id
+        merged = pa.Table.from_pandas(part.toPandas(), preserve_index=False)
+        if cur is not None:
+            merged = pa.concat_tables([cur, merged], promote_options="none")
+        order = pc.sort_indices(merged, sort_keys=[("_pri", "ascending")])
+        return merged.take(order[:k])
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_fold)
-        .queryName(name)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _fold_query(stream_df, name, "sample", checkpoint_dir, _fold,
+                       _sample_blob, _sample_from_blob,
+                       trigger_available_now)

@@ -4,6 +4,7 @@ import functools
 
 import numpy as np
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from pimbloomfilters_spark.operators import build_sketch
@@ -60,8 +61,7 @@ def test_stream_resume_after_restart(spark, tmp_path_factory):
 
     _run()
     # simulate a driver restart: in-memory state gone, checkpoint + snapshots remain
-    stream_build._RUNNING.pop("t_resume", None)
-    stream_build._PERSISTED_BATCH.pop("t_resume", None)
+    stream_build._QUERIES.pop("t_resume", None)
     second = generate_token_sequences(spark, 400, num_partitions=2, start_id=400)
     second.write.mode("append").parquet(data_dir)
     _run()
@@ -800,8 +800,7 @@ def test_sample_stream_equals_batch_and_restarts(spark, tmp_path_factory):
         sorted(r["id"] for r in batch1.collect())
 
     # driver restart: wipe in-memory state, append more data, rerun
-    stream_build._SAMPLE_TABLES.pop("t_sample", None)
-    stream_build._PERSISTED_BATCH.pop("sample:t_sample", None)
+    stream_build._QUERIES.pop("t_sample", None)
     spark.range(5000, 6500).withColumn(
         "src", (F.col("id") % 3).cast("string")
     ).repartition(3).write.mode("append").parquet(data_dir)
@@ -815,3 +814,156 @@ def test_sample_stream_equals_batch_and_restarts(spark, tmp_path_factory):
     assert set(got2.columns) == {"id", "src"}
     with pytest.raises(KeyError):
         stream_sample_rows(spark, "no_such_sample")
+
+
+def test_windowed_streams_drop_null_keys(spark, tmp_path_factory):
+    """NULL keys are no item and no distinct value: heavy hitters never
+    report int64-min (pandas reads a nullable long column as float64 and
+    NaN casts to -2^63), HLL does not count NULL as one more value, and
+    n_rows counts only keyed rows — as the batch build, which drops NULLs."""
+    from pimbloomfilters_spark.streaming import (
+        windowed_distinct_stream, windowed_heavy_hitters_stream)
+
+    data_dir = str(tmp_path_factory.mktemp("null_in"))
+    rows = [(f"2024-01-01 10:{i % 60:02d}:00", None if i % 3 == 0 else i % 5)
+            for i in range(300)]
+    spark.createDataFrame(rows, "ts string, user_id long") \
+        .coalesce(1).write.mode("overwrite").parquet(data_dir)
+    src = spark.read.parquet(data_dir)
+    n_keyed = src.filter("user_id IS NOT NULL").count()
+    exact = src.agg(F.countDistinct("user_id")).first()[0]
+    assert (n_keyed, exact) == (200, 5)
+
+    def _drain(out, sink):
+        q = (out.writeStream.format("memory").queryName(sink)
+             .outputMode("update").trigger(availableNow=True).start())
+        q.awaitTermination(180)
+        return spark.sql(f"select * from {sink}").collect()
+
+    stream = spark.readStream.schema("ts string, user_id long")
+    hh = _drain(windowed_heavy_hitters_stream(
+        stream.parquet(data_dir), "ts", "user_id", window="1 hour",
+        watermark="1 hour"), "null_hh")
+    assert hh and {r["item"] for r in hh} <= set(range(5)), hh
+    assert max(r["n_rows"] for r in hh) == n_keyed
+
+    hll = _drain(windowed_distinct_stream(
+        stream.parquet(data_dir), "ts", "user_id", window="1 hour",
+        watermark="1 hour", hll_p=12), "null_hll")
+    last = max(hll, key=lambda r: r["n_rows"])
+    assert last["n_rows"] == n_keyed
+    assert abs(last["estimate"] - exact) <= 4 * 1.04 / (2**12) ** 0.5 * exact
+
+
+_DAMAGE = ("truncate", "flip", "trailing", "empty", "unframed")
+
+
+@settings(max_examples=60, deadline=None)
+@given(older=st.binary(max_size=64), newest=st.binary(max_size=256),
+       bid=st.integers(1, 10**9), how=st.sampled_from(_DAMAGE),
+       where=st.integers(0, 1 << 16))
+def test_snapshot_store_damaged_newest_raises(older, newest, bid, how, where):
+    """A short, bit-flipped, over-long, empty or unframed newest snapshot
+    raises ValueError naming the file and its batch id; load() never hands
+    back the older, intact snapshot instead."""
+    import os
+    import tempfile
+
+    from pimbloomfilters_spark.streaming._snapshot import SnapshotStore
+
+    with tempfile.TemporaryDirectory() as ckpt:
+        store = SnapshotStore(ckpt)
+        assert store.load() == (None, -1)
+        store.save(bid - 1, older)
+        store.save(bid, newest)
+        assert store.load() == (newest, bid)
+        path = os.path.join(store.dir, f"batch_{bid:012d}.bin")
+        with open(path, "rb") as fh:
+            raw = fh.read()
+        if how == "truncate":
+            raw = raw[:where % len(raw)]
+        elif how == "flip":
+            i = where % (8 * len(raw))
+            raw = bytearray(raw)
+            raw[i // 8] ^= 1 << (i % 8)
+            raw = bytes(raw)
+        elif how == "trailing":
+            raw += bytes([where & 0xFF]) * (1 + where % 9)
+        elif how == "empty":
+            raw = b""
+        else:
+            raw = newest
+        with open(path, "wb") as fh:
+            fh.write(raw)
+        with pytest.raises(ValueError) as err:
+            store.load()
+        assert path in str(err.value) and f"batch {bid})" in str(err.value)
+        assert "delete its whole checkpoint directory" in str(err.value)
+
+
+def test_snapshot_store_keeps_two_newest(tmp_path):
+    from pimbloomfilters_spark.streaming._snapshot import SnapshotStore
+
+    store = SnapshotStore("file:" + str(tmp_path))
+    for bid in range(5):
+        store.save(bid, b"state %d" % bid)
+    assert sorted(p.name for p in (tmp_path / "sketch_state").iterdir()) == \
+        ["batch_000000000003.bin", "batch_000000000004.bin"]
+    assert store.load() == (b"state 4", 4)
+
+
+@pytest.mark.parametrize("kind", ["sketch", "dedup", "profile", "sample"])
+def test_damaged_snapshot_refuses_every_query_kind(spark, tmp_path, kind):
+    """Each foreachBatch query kind loads through the one store: a torn
+    newest snapshot stops the query at start, naming file and batch."""
+    from pimbloomfilters_spark.streaming import (
+        dedup_stream_query, profile_stream_query, sample_stream_query)
+    from pimbloomfilters_spark.streaming._snapshot import SnapshotStore
+
+    ckpt = str(tmp_path / "ckpt")
+    store = SnapshotStore(ckpt)
+    store.save(6, b"x" * 40)
+    store.save(7, b"y" * 40)
+    path = tmp_path / "ckpt" / "sketch_state" / "batch_000000000007.bin"
+    path.write_bytes(path.read_bytes()[:-4])
+    (tmp_path / "in").mkdir()
+    stream = spark.readStream.schema("id long").parquet(str(tmp_path / "in"))
+    name = f"torn_{kind}"
+    start = {
+        "sketch": lambda: sketch_stream_query(
+            stream, "id", functools.partial(make_sketch, "bloom", size2=16,
+                                          nb_hash=4),
+            name, ckpt),
+        "dedup": lambda: dedup_stream_query(
+            stream, "id", str(tmp_path / "out"), ckpt, size2=16, name=name),
+        "profile": lambda: profile_stream_query(stream, name, ckpt),
+        "sample": lambda: sample_stream_query(stream, "id", 5, name, ckpt),
+    }[kind]
+    with pytest.raises(ValueError, match=r"batch_000000000007\.bin \(batch 7\)"):
+        start()
+
+
+def test_truncated_sparse_bloom_snapshot_fails_restart(spark, tmp_path):
+    """A sparse Bloom snapshot cut short by 4 bytes used to load as a
+    different filter (one set bit gone: a false negative). The restart must
+    refuse it instead of resuming from it or from the older snapshot."""
+    data_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "ckpt")
+    bloom = functools.partial(make_sketch, "bloom", size2=24, nb_hash=4)
+    for lo in (0, 50, 100):
+        spark.range(lo, lo + 50).coalesce(1).write.mode("append") \
+            .parquet(data_dir)
+
+    def _run():
+        stream = (spark.readStream.schema("id long")
+                  .option("maxFilesPerTrigger", 1).parquet(data_dir))
+        sketch_stream_query(stream, "id", bloom, "torn_sparse",
+                            ckpt).awaitTermination(120)
+
+    _run()
+    sk = get_stream_sketch("torn_sparse")
+    assert sk.get_weight() == 600 and sk.payload()[:1] == b"S"  # sparse
+    snaps = sorted((tmp_path / "ckpt" / "sketch_state").glob("batch_*.bin"))
+    newest = snaps[-1]
+    newest.write_bytes(newest.read_bytes()[:-4])
+    with pytest.raises(ValueError, match=newest.name):
+        _run()
