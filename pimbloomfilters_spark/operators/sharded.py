@@ -179,7 +179,8 @@ def probe_bloom_distributed(
     """Probe WITHOUT materializing the filter anywhere: cogroup probe keys
     with the one shard bitmap that covers them. The filter can be arbitrarily
     large — each task touches m/n_shards bits. Missing shard bitmap (no
-    inserts landed there) => definitely-absent => member=false.
+    inserts landed there) => definitely-absent => member=false. A NULL key
+    keeps its row with member NULL, as in ``probe_key_column``.
     ``passthrough`` columns of ``probes`` ride along unchanged (row-aligned),
     e.g. (doc_id, pos) when probing exploded token arrays."""
     _check_routable_seed(seed)
@@ -190,15 +191,22 @@ def probe_bloom_distributed(
 
     # cast to long BEFORE hashing: JVM xxhash64 of an INT column hashes 4
     # bytes, numpy's xxh64_u64 hashes the 8-byte value — an int32 key column
-    # would otherwise route to the wrong shard
+    # would otherwise route to the wrong shard. NULL keys go to shard -1,
+    # which no bitmap has: pandas reads a key column holding a NULL as
+    # float64 (NaN -> -2^63, keys above 2^53 rounded), so no other group may
+    # hold one
     keyed = probes.select(
         F.col(key_col).cast("long").alias(key_col), *passthrough
-    ).withColumn("_shard", _shard_expr(key_col, shard_bits).cast("int"))
+    ).withColumn("_shard", F.when(F.col(key_col).isNull(), F.lit(-1))
+                 .otherwise(_shard_expr(key_col, shard_bits)).cast("int"))
 
     def _probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         out = left[[key_col, *passthrough]].copy()
         if left.empty:
             out[out_col] = np.zeros(0, bool)
+            return out
+        if left["_shard"].iloc[0] < 0:  # NULL keys: membership unknown
+            out[out_col] = pd.array([None] * len(left), dtype="boolean")
             return out
         vals = left[key_col].to_numpy(dtype=np.int64)
         if right.empty:

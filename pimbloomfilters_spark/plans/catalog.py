@@ -577,18 +577,22 @@ def q_profile_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import profile_stream_query, stream_profile_rows
 
     cust = load_table(spark, sf_dir, "customer")
-    base = tempfile.mkdtemp(prefix="pbf_profgate_in_")
-    # one PARALLEL write (the old two coalesce(1) writes serialized the
-    # table through single tasks just to force two micro-batches; the fold
-    # is batch-boundary-invariant by the operator's contract — counts add,
-    # HLLs merge — and the multi-batch fold stays pytest-verified, so the
-    # gate replays as a single availableNow batch)
-    cust.write.mode("append").parquet(base)
-    ckpt = tempfile.mkdtemp(prefix="pbf_profgate_ck_")
-    name = "profgate_" + uuid.uuid4().hex[:10]
-    stream = spark.readStream.schema(cust.schema).parquet(base)
-    q = profile_stream_query(stream, name, ckpt)
-    q.awaitTermination(300)
+    # the folded profile is held in memory: input and checkpoint go once
+    # the query has ended
+    with tempfile.TemporaryDirectory(prefix="pbf_profgate_") as tmp:
+        base = f"{tmp}/in"
+        # one PARALLEL write (the old two coalesce(1) writes serialized the
+        # table through single tasks just to force two micro-batches; the
+        # fold is batch-boundary-invariant by the operator's contract —
+        # counts add, HLLs merge — and the multi-batch fold stays
+        # pytest-verified, so the gate replays as a single availableNow
+        # batch)
+        cust.write.mode("append").parquet(base)
+        name = "profgate_" + uuid.uuid4().hex[:10]
+        stream = spark.readStream.schema(cust.schema).parquet(base)
+        q = profile_stream_query(stream, name, f"{tmp}/ckpt")
+        q.awaitTermination(300)
+        q.stop()
     return _profile_contract(spark, cust, stream_profile_rows(spark, name))
 
 
@@ -1934,17 +1938,18 @@ def q_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     tt = token_table(spark, sf_dir)
     bloom = functools.partial(make_sketch, "bloom", **_GATED_BLOOM)
     oneshot, _ = build_sketch(tt, "tokens", bloom)
-    cp = tempfile.mkdtemp(prefix="pbf_ckpt_") + "/sketches"
-    try:
-        build_with_checkpoint(spark, tt, "tokens", "doc_id", bloom,
-                              build_id="gate", checkpoint_dir=cp,
-                              n_buckets=8, fail_after_bucket=3)
-    except RuntimeError:
-        pass
-    resumed, metrics = build_with_checkpoint(
-        spark, tt, "tokens", "doc_id", bloom,
-        build_id="gate", checkpoint_dir=cp, n_buckets=8,
-    )
+    with tempfile.TemporaryDirectory(prefix="pbf_ckpt_") as tmp:
+        cp = f"{tmp}/sketches"
+        try:
+            build_with_checkpoint(spark, tt, "tokens", "doc_id", bloom,
+                                  build_id="gate", checkpoint_dir=cp,
+                                  n_buckets=8, fail_after_bucket=3)
+        except RuntimeError:
+            pass
+        resumed, metrics = build_with_checkpoint(
+            spark, tt, "tokens", "doc_id", bloom,
+            build_id="gate", checkpoint_dir=cp, n_buckets=8,
+        )
     return spark.createDataFrame(
         [(resumed.payload() == oneshot.payload(), metrics["n_buckets"] == 8)],
         "resume_equal boolean, all_buckets boolean",

@@ -193,30 +193,33 @@ def q_session_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id").cast("long").alias("user_id"),
         F.col("ts").cast("timestamp").alias("ts"))
     max_ts = ev.agg(F.max("ts")).collect()[0][0]
-    base = tempfile.mkdtemp(prefix="pbf_sessgate_")
-    # ONE parallel write of events + the far-future sentinel (user -1):
-    # the old shape was two coalesce(1) writes (a single task funnelling
-    # the whole table, ~4.6 s of the gate at sf0.1) to force the sentinel
-    # into a second micro-batch. That is unnecessary: with everything in
-    # one availableNow data batch, the batch's own max event time advances
-    # the watermark past every real session, and the trailing no-data
-    # micro-batch (event-time timeouts) emits exactly the same closed
-    # session set — emission depends only on the final watermark, not on
-    # batch boundaries (the operator's documented finality rule).
-    sentinel = spark.createDataFrame([(-1,)], "user_id long").select(
-        "user_id",
-        (F.lit(max_ts).cast("timestamp") +
-         F.expr("INTERVAL 30 DAYS")).alias("ts"))
-    ev.unionByName(sentinel).write.mode("append").parquet(base)
+    # the closed sessions land in a memory sink: the input goes once the
+    # query has ended
+    with tempfile.TemporaryDirectory(prefix="pbf_sessgate_") as base:
+        # ONE parallel write of events + the far-future sentinel (user -1):
+        # the old shape was two coalesce(1) writes (a single task funnelling
+        # the whole table, ~4.6 s of the gate at sf0.1) to force the sentinel
+        # into a second micro-batch. That is unnecessary: with everything in
+        # one availableNow data batch, the batch's own max event time advances
+        # the watermark past every real session, and the trailing no-data
+        # micro-batch (event-time timeouts) emits exactly the same closed
+        # session set — emission depends only on the final watermark, not on
+        # batch boundaries (the operator's documented finality rule).
+        sentinel = spark.createDataFrame([(-1,)], "user_id long").select(
+            "user_id",
+            (F.lit(max_ts).cast("timestamp") +
+             F.expr("INTERVAL 30 DAYS")).alias("ts"))
+        ev.unionByName(sentinel).write.mode("append").parquet(base)
 
-    stream = (spark.readStream.schema("user_id long, ts timestamp")
-              .parquet(base))
-    out = session_stream(stream, "ts", "user_id", gap="30 minutes",
-                         watermark="1 minute")
-    qname = "sessgate_" + uuid.uuid4().hex[:10]
-    q = (out.writeStream.format("memory").queryName(qname)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(300)
+        stream = (spark.readStream.schema("user_id long, ts timestamp")
+                  .parquet(base))
+        out = session_stream(stream, "ts", "user_id", gap="30 minutes",
+                             watermark="1 minute")
+        qname = "sessgate_" + uuid.uuid4().hex[:10]
+        q = (out.writeStream.format("memory").queryName(qname)
+             .outputMode("append").trigger(availableNow=True).start())
+        q.awaitTermination(300)
+        q.stop()
     return (spark.table(qname).filter(F.col("user_id") >= 0)
             .groupBy("user_id")
             .agg(F.count("*").alias("n_sessions"),

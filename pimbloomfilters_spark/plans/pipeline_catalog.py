@@ -1039,18 +1039,22 @@ def q_sample_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("long").alias("doc_id"), "source")
-    base = tempfile.mkdtemp(prefix="pbf_sampgate_")
-    # two files, one per micro-batch: bottom-k by md5 priority is mergeable
-    # across any batch boundary, so the held sample (and the oracle hash)
-    # is the same as one batch would give, and the gate still covers the
-    # runner's snapshot handoff from one micro-batch to the next
-    docs.repartition(2).write.mode("append").parquet(base)
-    stream = (spark.readStream.schema("doc_id long, source string")
-              .option("maxFilesPerTrigger", 1).parquet(base))
-    name = "sampgate_" + uuid.uuid4().hex[:10]
-    ckpt = tempfile.mkdtemp(prefix="pbf_sampckpt_")
-    q = sample_stream_query(stream, "doc_id", 50, name, ckpt)
-    q.awaitTermination(300)
+    # the sample is held in memory: input and checkpoint go once the query
+    # has ended
+    with tempfile.TemporaryDirectory(prefix="pbf_sampgate_") as tmp:
+        base = f"{tmp}/in"
+        # two files, one per micro-batch: bottom-k by md5 priority is
+        # mergeable across any batch boundary, so the held sample (and the
+        # oracle hash) is the same as one batch would give, and the gate
+        # still covers the runner's snapshot handoff from one micro-batch to
+        # the next
+        docs.repartition(2).write.mode("append").parquet(base)
+        stream = (spark.readStream.schema("doc_id long, source string")
+                  .option("maxFilesPerTrigger", 1).parquet(base))
+        name = "sampgate_" + uuid.uuid4().hex[:10]
+        q = sample_stream_query(stream, "doc_id", 50, name, f"{tmp}/ckpt")
+        q.awaitTermination(300)
+        q.stop()
     return stream_sample_rows(spark, name)
 
 

@@ -17,11 +17,15 @@ Shapes:
 
 2. ``sharded_dedup_stream`` — the filter lives EXECUTOR-side as per-shard
    GroupState in the state store (nothing re-ships per batch, restart-safe
-   transactionally with the offsets, memory scales out with n_shards).
+   transactionally with the offsets, memory scales out with n_shards). Its
+   shards are probed and written with the batch Bloom kernels, and its TTL
+   is the one rotation rule (``_ttl_rotation``) ``dedup_stream_query``
+   applies too.
 
 3. ``windowed_distinct_stream`` / ``windowed_heavy_hitters_stream`` /
-   ``windowed_quantiles_stream`` — applyInPandasWithState: per event-time
-   window (tumbling or sliding) an HLL / Misra–Gries / KLL is GroupState;
+   ``windowed_quantiles_stream`` — one runner (``_window_stream``): per
+   event-time window (tumbling or sliding) an HLL / Misra–Gries / KLL of
+   the non-NULL values is GroupState of applyInPandasWithState;
    EventTimeTimeout evicts window state once the watermark passes.
 
 4. ``session_stream`` — gap-based sessionization as per-user GroupState:
@@ -32,6 +36,7 @@ Shapes:
 from __future__ import annotations
 
 import copy
+import functools
 import io
 import struct
 import threading
@@ -45,8 +50,6 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
-    DoubleType,
     LongType,
     StructField,
     StructType,
@@ -168,6 +171,28 @@ def _dedup_from_blob(raw: bytes):
             sketch_from_bytes(pb) if pb else None, gen_start)
 
 
+def _ttl_rotation(gen_start: int, now: int, ttl_ms: int) -> tuple[str, int]:
+    """The rotating-generation TTL rule of both dedup streams: the step for
+    the (current, previous) filter pair at time ``now``, and the new
+    generation start. Bits cannot be deleted, so a filter forgets by
+    generations: inserts go to the current one, membership checks both.
+    No clock yet (``gen_start == 0``): "keep", starting it at ``now``;
+    ``ttl_ms`` old: "rotate" (current becomes previous, the old previous is
+    dropped); ``2*ttl_ms`` old: "drop" both.
+
+    Bound: a key is never re-admitted sooner than ``ttl_ms`` after its
+    insert (its generation rotates only once ``ttl_ms`` old, and the next
+    one must be ``ttl_ms`` old before the pair drops it). How much longer
+    it is remembered depends on when batches or timers next apply the
+    rule."""
+    if not gen_start:
+        return "keep", now
+    age = now - gen_start
+    if age < ttl_ms:
+        return "keep", gen_start
+    return ("rotate" if age < 2 * ttl_ms else "drop"), now
+
+
 def dedup_stream_query(
     stream_df: DataFrame,
     key_col: str,
@@ -193,32 +218,28 @@ def dedup_stream_query(
     at-least-once for the sink side.
 
     ``ttl_ms`` bounds memory on an unbounded key universe by rotating
-    generations (the same scheme as ``sharded_dedup_stream``): the filter
-    pair (current, previous) remembers a key for >= ttl and <= 2*ttl after
-    its generation started, then re-admits it. Each generation is a COMPLETE
-    filter for the keys first seen in it, so membership is the OR of two
-    independent probes — no bits-split-across-generations hazard. The
-    state ``(seen, prev, gen_start_ms)`` is ONE snapshot file per batch, so
-    a restart restores the previous generation and the rotation clock
+    generations on the wall clock (``_ttl_rotation``, the rule
+    ``sharded_dedup_stream`` uses too): a key is never re-admitted sooner
+    than ttl_ms after its insert. Each generation is a COMPLETE filter for
+    the keys first seen in it, so membership is the OR of two independent
+    probes — no bits-split-across-generations hazard. The state
+    ``(seen, prev, gen_start_ms)`` is ONE snapshot file per batch, so a
+    restart restores the previous generation and the rotation clock
     together with the filter they belong to."""
-    import functools as _ft
     import time
 
     from ..operators.probe import probe_key_column
     from ..sketches import make_sketch
 
-    factory = _ft.partial(make_sketch, "bloom", size2=size2, nb_hash=nb_hash)
+    factory = functools.partial(make_sketch, "bloom", size2=size2, nb_hash=nb_hash)
 
     def _fold(state, batch_df: DataFrame):
         seen, prev, gen_start = state or (None, None, 0)
         if ttl_ms is not None:
-            now = int(time.time() * 1000)
-            if gen_start == 0:
-                gen_start = now  # first batch of a fresh query
-            elif now - gen_start >= ttl_ms:
-                # rotate; two+ TTLs idle -> both generations are stale
-                prev = None if now - gen_start >= 2 * ttl_ms else seen
-                seen, gen_start = None, now
+            step, gen_start = _ttl_rotation(gen_start, int(time.time() * 1000),
+                                            ttl_ms)
+            if step != "keep":
+                seen, prev = None, seen if step == "rotate" else None
         fresh = batch_df
         for gen in (seen, prev):
             if gen is not None:
@@ -238,161 +259,6 @@ def dedup_stream_query(
                        _dedup_blob, _dedup_from_blob, True)
 
 
-_HH_OUT = StructType([
-    StructField("window_start", TimestampType()),
-    StructField("item", LongType()),
-    StructField("est_count", LongType()),
-    StructField("n_rows", LongType()),
-])
-_HH_STATE = StructType(
-    [StructField("mg", BinaryType()), StructField("n_rows", LongType())]
-)
-
-
-def windowed_heavy_hitters_stream(
-    stream_df: DataFrame,
-    ts_col: str,
-    key_col: str,
-    window: str = "1 minute",
-    watermark: str = "2 minutes",
-    slide: str | None = None,
-    k: int = 256,
-    top: int = 10,
-) -> DataFrame:
-    """Per-event-time-window streaming heavy hitters via a Misra–Gries
-    summary held as GroupState: each update emits the window's current top
-    items with their (one-sided under-) estimates; any item whose true count
-    exceeds n/(k+1) is guaranteed present. State is evicted once the
-    watermark passes window_end + watermark (EventTimeTimeout), same
-    discipline as ``windowed_distinct_stream``."""
-    from ..sketches import MisraGries
-
-    window_ms = _duration_ms(window)
-    watermark_ms = _duration_ms(watermark)
-
-    with_window = (
-        stream_df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-        .withWatermark(ts_col, watermark)
-        # NULL keys still advance the watermark above but are no item: the
-        # batch build drops them too, and pandas would read a nullable
-        # long column as float64 (NaN -> int64 min, keys > 2^53 rounded)
-        .filter(F.col(key_col).isNotNull())
-        .withColumn("_w", F.window(F.col(ts_col), window, slide or window)
-                    .getField("start"))
-        .withColumn("_k", F.col(key_col).cast("long"))
-        .select("_w", "_k", ts_col)
-    )
-
-    def _update(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        (wstart,) = key
-        if state.exists:
-            blob, n = state.get
-            mg = sketch_from_bytes(bytes(blob))
-        else:
-            mg, n = MisraGries(k=k), 0
-        for pdf in pdfs:
-            vals = pdf["_k"].to_numpy(dtype=np.int64)
-            mg.insert_bulk(vals)
-            n += len(vals)
-        state.update((mg.to_bytes(), n))
-        end_ms = int(pd.Timestamp(wstart).value // 1_000_000) + window_ms
-        state.setTimeoutTimestamp(end_ms + watermark_ms)
-        hh = mg.heavy_hitters()[:top]
-        yield pd.DataFrame({
-            "window_start": [wstart] * len(hh),
-            "item": [item for item, _ in hh],
-            "est_count": [est for _, est in hh],
-            "n_rows": [n] * len(hh),
-        })
-
-    return with_window.groupBy("_w").applyInPandasWithState(
-        _update,
-        outputStructType=_HH_OUT,
-        stateStructType=_HH_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-_QT_OUT = StructType([
-    StructField("window_start", TimestampType()),
-    StructField("p50", DoubleType()),
-    StructField("p95", DoubleType()),
-    StructField("n_rows", LongType()),
-])
-_QT_STATE = StructType(
-    [StructField("kll", BinaryType()), StructField("n_rows", LongType())]
-)
-
-
-def windowed_quantiles_stream(
-    stream_df: DataFrame,
-    ts_col: str,
-    value_col: str,
-    window: str = "1 minute",
-    watermark: str = "2 minutes",
-    slide: str | None = None,
-    kll_k: int = 200,
-) -> DataFrame:
-    """Per-event-time-window streaming quantiles (p50/p95) via a KLL sketch
-    held as GroupState — completes the streaming trio next to distinct (HLL)
-    and heavy hitters (Misra–Gries). Window state is evicted once the
-    watermark passes window_end + watermark (EventTimeTimeout), so the state
-    store stays bounded; each update re-emits the window's current estimates
-    (update mode). Estimates carry KLL's O(1/k) normalized rank error."""
-    from ..sketches import KLLSketch
-
-    window_ms = _duration_ms(window)
-    watermark_ms = _duration_ms(watermark)
-
-    with_window = (
-        stream_df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-        .withWatermark(ts_col, watermark)
-        .withColumn("_w", F.window(F.col(ts_col), window, slide or window)
-                    .getField("start"))
-        .withColumn("_v", F.col(value_col).cast("double"))
-        .select("_w", "_v", ts_col)
-    )
-
-    def _update(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        (wstart,) = key
-        if state.exists:
-            blob, n = state.get
-            kll = sketch_from_bytes(bytes(blob))
-        else:
-            kll, n = KLLSketch(k=kll_k), 0
-        for pdf in pdfs:
-            vals = pdf["_v"].to_numpy(dtype=np.float64)
-            # nulls arrive as NaN and would sort to the top of the KLL
-            # buffers, permanently poisoning the window's upper quantiles
-            vals = vals[np.isfinite(vals)]
-            kll.insert_bulk(vals)
-            n += len(vals)
-        state.update((kll.to_bytes(), n))
-        end_ms = int(pd.Timestamp(wstart).value // 1_000_000) + window_ms
-        state.setTimeoutTimestamp(end_ms + watermark_ms)
-        yield pd.DataFrame({
-            "window_start": [wstart],
-            "p50": [kll.quantile(0.5)],
-            "p95": [kll.quantile(0.95)],
-            "n_rows": [n],
-        })
-
-    return with_window.groupBy("_w").applyInPandasWithState(
-        _update,
-        outputStructType=_QT_OUT,
-        stateStructType=_QT_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
 def sharded_dedup_stream(
     stream_df: DataFrame,
     key_col: str,
@@ -410,7 +276,11 @@ def sharded_dedup_stream(
     Keys are cast to long BEFORE routing (JVM xxhash64 of an int32 column
     hashes 4 bytes; the numpy path hashes the 8-byte value — an uncast int
     key would land in the wrong shard's state, see probe_bloom_distributed);
-    the emitted key column is therefore always long.
+    the emitted key column is therefore always long. NULL keys are dropped
+    before routing: they are no key, and the batch build drops them too.
+    A shard's bitmap is probed and written with the batch kernels
+    (``bloom_probe``, ``scatter_or_bits``), so with no TTL it is
+    byte-identical to ``build_bloom_shards`` over the same keys.
 
     vs ``dedup_stream_query`` (foreachBatch + driver-held filter): nothing is
     re-shipped per batch (the foreachBatch path addFile's a fresh filter
@@ -421,24 +291,23 @@ def sharded_dedup_stream(
     occurrence with p = FPR, the standard approximate-dedup trade.
 
     ``ttl_ms=None``: dedup state never expires (NoTimeout) — right for
-    bounded key domains. ``ttl_ms=N``: ROTATING-GENERATION expiry, the
-    standard Bloom-TTL construction (bits cannot be deleted, so the filter
-    keeps two generations): inserts go to the current generation, membership
-    checks current OR previous, and when a generation is older than
-    ``ttl_ms`` it is demoted to previous (the old previous is dropped). A key
-    is remembered for at least ttl_ms and at most 2*ttl_ms after insertion;
-    a long-idle shard's whole state is evicted via ProcessingTimeTimeout.
-    State per shard doubles (two bitmaps) but stays bounded forever. Note:
-    processing-time timers keep scheduling batches, so a TTL'd query under
+    bounded key domains. ``ttl_ms=N``: ROTATING-GENERATION expiry by
+    ``_ttl_rotation`` (the rule ``dedup_stream_query`` uses too) on the
+    processing-time clock, per shard: inserts go to the current generation,
+    membership checks current OR previous, and a key is never re-admitted
+    sooner than ttl_ms after its insert; a shard idle for 2*ttl_ms drops its
+    whole state via ProcessingTimeTimeout. State per shard doubles (two
+    bitmaps) but stays bounded forever. Note: processing-time timers keep
+    scheduling batches, so a TTL'd query under
     ``trigger(availableNow=True)`` does not self-terminate — run it with a
     processing-time trigger (it's for long-lived streams), or drain with
     ``processAllAvailable()`` + ``stop()`` in tests."""
     import math as _math
 
-    from pyspark.sql.types import StructField as _SF, StructType as _ST
-
+    from ..hashing import DEFAULT_SEED
     from ..operators.sharded import _shard_expr
-    from ..sketches.bloom import BLOCK_BITS, bloom_positions
+    from ..sketches.bloom import (BLOCK_BITS, bloom_positions, bloom_probe,
+                                  scatter_or_bits, word_bits)
 
     if n_shards & (n_shards - 1):
         raise ValueError("n_shards must be a power of two")
@@ -450,68 +319,50 @@ def sharded_dedup_stream(
     out_schema = StructType([StructField(key_col, LongType())])
     # ttl_ms=None keeps the original 2-field state schema so pre-TTL
     # checkpoints restart cleanly (Spark rejects a state-schema change on
-    # resume); the TTL variant is a NEW query shape with its own schema
-    if ttl_ms is None:
-        state_schema = _ST([_SF("bitmap", BinaryType()),
-                            _SF("n_seen", LongType())])
-    else:
-        state_schema = _ST([
-            _SF("bitmap", BinaryType()),       # current generation
-            _SF("bitmap_prev", BinaryType()),  # previous generation
-            _SF("gen_start_ms", LongType()),
-            _SF("n_seen", LongType()),
-        ])
-    empty = b""
+    # resume); the TTL variant is a NEW query shape with its own schema:
+    # current generation, previous generation, rotation clock
+    state_schema = "bitmap binary, n_seen long" if ttl_ms is None else \
+        "bitmap binary, bitmap_prev binary, gen_start_ms long, n_seen long"
 
-    def _positions(vals: np.ndarray, base: int) -> tuple[np.ndarray, np.ndarray]:
-        pos = bloom_positions(vals, size2, nb_hash, 42, BLOCK_BITS) \
-            - np.uint64(base)
-        return (pos >> np.uint64(6)).astype(np.int64), \
-            np.uint64(1) << (pos & np.uint64(63))
+    def _probe(vals: np.ndarray, words: np.ndarray, base: int) -> np.ndarray:
+        return bloom_probe(vals, size2, nb_hash, DEFAULT_SEED, BLOCK_BITS,
+                           word_bits(words, base))
 
     def _update(key, pdfs, state: GroupState):
-        if state.hasTimedOut:  # idle shard past TTL: drop everything
+        if state.hasTimedOut:  # idle shard past 2*TTL: drop everything
             state.remove()
             return
         (shard,) = key
-        now = state.getCurrentProcessingTimeMs() if ttl_ms is not None else 0
-        prev = None
-        if state.exists:
-            if ttl_ms is None:
-                blob, n_seen = state.get
-                gen_start = 0
-            else:
-                blob, blob_prev, gen_start, n_seen = state.get
-                prev = (np.frombuffer(bytes(blob_prev), dtype=np.uint64).copy()
-                        if blob_prev else None)
-            words = np.frombuffer(bytes(blob), dtype=np.uint64).copy()
-        else:
-            words, gen_start, n_seen = \
-                np.zeros(n_words, dtype=np.uint64), now, 0
-        if ttl_ms is not None and now - gen_start >= ttl_ms:
-            # rotate; two+ TTLs idle -> both generations are stale
-            prev = None if now - gen_start >= 2 * ttl_ms else words
-            words = np.zeros(n_words, dtype=np.uint64)
-            gen_start = now
+        blob, blob_prev, gen_start, n_seen = (
+            (b"", b"", 0, 0) if not state.exists
+            else (state.get[0], b"", 0, state.get[1]) if ttl_ms is None
+            else state.get)
+        words = np.frombuffer(bytes(blob), dtype=np.uint64).copy() if blob \
+            else np.zeros(n_words, dtype=np.uint64)
+        prev = np.frombuffer(bytes(blob_prev), dtype=np.uint64) \
+            if blob_prev else None
+        if ttl_ms is not None:
+            step, gen_start = _ttl_rotation(
+                gen_start, state.getCurrentProcessingTimeMs(), ttl_ms)
+            if step != "keep":
+                prev = words if step == "rotate" else None
+                words = np.zeros(n_words, dtype=np.uint64)
         base = shard * shard_size_bits
         out = []
         for pdf in pdfs:
             vals = pd.unique(pdf[key_col].to_numpy())  # in-batch exact dedup
-            vals = np.asarray(vals, dtype=np.int64)
-            w, bits = _positions(vals, base)
-            # a key is seen iff ALL k bits are set in ONE generation —
-            # OR-ing per-position hits across generations before the
-            # all-reduce would count bits-split-across-generations as a
-            # (false) member and drop first occurrences far above p = FPR
-            seen = ((words[w] & bits) != 0).reshape(-1, nb_hash).all(axis=1)
+            # each generation is probed on its own: a key is seen iff all k
+            # bits are set in ONE generation (bits split across generations
+            # would drop first occurrences far above p = FPR)
+            seen = _probe(vals, words, base)
             if prev is not None:
-                seen |= ((prev[w] & bits) != 0).reshape(
-                    -1, nb_hash).all(axis=1)
+                unseen = np.flatnonzero(~seen)
+                seen[unseen] = _probe(vals[unseen], prev, base)
             fresh = vals[~seen]
-            if fresh.size:  # reuse the probe positions for the insert
-                fw = w.reshape(-1, nb_hash)[~seen].ravel()
-                fbits = bits.reshape(-1, nb_hash)[~seen].ravel()
-                np.bitwise_or.at(words, fw, fbits)
+            if fresh.size:
+                scatter_or_bits(words, bloom_positions(
+                    fresh, size2, nb_hash, DEFAULT_SEED, BLOCK_BITS),
+                    pos_offset=base)
                 n_seen += int(fresh.size)
                 out.append(fresh)
         if ttl_ms is None:
@@ -519,16 +370,17 @@ def sharded_dedup_stream(
         else:
             state.update((
                 words.tobytes(),
-                prev.tobytes() if prev is not None else empty,
+                prev.tobytes() if prev is not None else b"",
                 int(gen_start), int(n_seen),
             ))
             state.setTimeoutDuration(2 * ttl_ms)
         if out:
             yield pd.DataFrame({key_col: np.concatenate(out)})
 
-    keyed = stream_df.select(
-        F.col(key_col).cast("long").alias(key_col)
-    ).withColumn("_shard", _shard_expr(key_col, shard_bits).cast("int"))
+    keyed = (stream_df.select(F.col(key_col).cast("long").alias(key_col))
+             .filter(F.col(key_col).isNotNull())
+             .withColumn("_shard",
+                         _shard_expr(key_col, shard_bits).cast("int")))
     return keyed.groupBy("_shard").applyInPandasWithState(
         _update,
         outputStructType=out_schema,
@@ -549,16 +401,69 @@ def _duration_ms(s: str) -> int:
     return int(n) * _UNIT_MS[unit.rstrip("s")]
 
 
-_WINDOW_OUT = StructType(
-    [
-        StructField("window_start", TimestampType()),
-        StructField("estimate", LongType()),
-        StructField("n_rows", LongType()),
-    ]
-)
-_WINDOW_STATE = StructType(
-    [StructField("hll", BinaryType()), StructField("n_rows", LongType())]
-)
+# -- event-time window streams ------------------------------------------------
+# windowed_distinct_stream, windowed_heavy_hitters_stream and
+# windowed_quantiles_stream differ only in their sketch, the value they
+# insert and the row they emit; ``_window_stream`` does the rest once.
+
+
+def _window_stream(stream_df: DataFrame, ts_col: str, value, window: str,
+                   watermark: str, slide: str | None,
+                   make: Callable[[], Sketch], field: str, out_schema: str,
+                   emit: Callable) -> DataFrame:
+    """Fold ``value`` (a column expression; NULL = no value) per event-time
+    window (tumbling, or sliding by ``slide``) into the sketch ``make()``,
+    held as GroupState ``(<field> binary, n_rows long)``. Each update emits
+    ``emit(window_start, sketch, n_rows)``, a dict of output columns (update
+    mode: the window's current estimate). Window state is evicted via
+    EventTimeTimeout once the watermark passes window_end + watermark, so
+    the state store stays bounded on a long-running stream."""
+    window_ms = _duration_ms(window)
+    watermark_ms = _duration_ms(watermark)
+    with_window = (
+        stream_df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+        .withWatermark(ts_col, watermark)
+        # NULL values still advance the watermark above but are no value:
+        # the batch build drops them too, and pandas would read a nullable
+        # long column as float64 (NaN -> int64 min, keys > 2^53 rounded)
+        .withColumn("_v", value)
+        .filter(F.col("_v").isNotNull())
+        .withColumn("_w", F.window(F.col(ts_col), window, slide or window)
+                    .getField("start"))
+        # the watermarked ts column must survive the projection or the
+        # analyzer rejects EventTimeTimeout ("no watermark")
+        .select("_w", "_v", ts_col)
+    )
+
+    def _update(key, pdfs, state: GroupState):
+        if state.hasTimedOut:  # watermark passed window end: evict
+            state.remove()
+            return
+        (wstart,) = key
+        if state.exists:
+            blob, n = state.get
+            sk = sketch_from_bytes(bytes(blob))
+        else:
+            sk, n = make(), 0
+        for pdf in pdfs:
+            vals = pdf["_v"].to_numpy()
+            sk.insert_bulk(vals)
+            n += len(vals)
+        state.update((sk.to_bytes(), n))
+        end_ms = int(pd.Timestamp(wstart).value // 1_000_000) + window_ms
+        state.setTimeoutTimestamp(end_ms + watermark_ms)
+        yield pd.DataFrame(emit(wstart, sk, n))
+
+    return with_window.groupBy("_w").applyInPandasWithState(
+        _update,
+        outputStructType=out_schema,
+        stateStructType=f"{field} binary, n_rows long",
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    )
+
+
+_WINDOW_OUT = "window_start timestamp, estimate long, n_rows long"
 
 
 def windowed_distinct_stream(
@@ -574,59 +479,86 @@ def windowed_distinct_stream(
     applyInPandasWithState. Late data beyond the watermark is dropped by
     Spark; window state IS evicted via EventTimeTimeout once the watermark
     passes window_end + watermark, so the state store stays bounded on a
-    long-running stream."""
+    long-running stream. NULL keys are no distinct value."""
     from ..sketches import HyperLogLog
 
-    window_ms = _duration_ms(window)
-    watermark_ms = _duration_ms(watermark)
+    key = F.col(key_col)
+    # xxhash64 would hash NULL as one more value: keep it NULL
+    value = F.when(key.isNotNull(), F.xxhash64(key.cast("string")))
+    return _window_stream(
+        stream_df, ts_col, value, window, watermark, slide,
+        functools.partial(HyperLogLog, p=hll_p), "hll", _WINDOW_OUT,
+        lambda wstart, hll, n: {"window_start": [wstart],
+                                "estimate": [int(round(hll.estimate()))],
+                                "n_rows": [n]})
 
-    with_window = (
-        stream_df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-        .withWatermark(ts_col, watermark)
-        # NULL keys still advance the watermark above but are not a
-        # distinct value (xxhash64 would hash NULL as one); the batch build
-        # drops them too
-        .filter(F.col(key_col).isNotNull())
-        .withColumn("_w", F.window(F.col(ts_col), window, slide or window)
-                    .getField("start"))
-        .withColumn("_k", F.xxhash64(F.col(key_col).cast("string")))
-        # the watermarked ts column must survive the projection or the
-        # analyzer rejects EventTimeTimeout ("no watermark")
-        .select("_w", "_k", ts_col)
-    )
 
-    def _update(key, pdfs, state: GroupState):
-        if state.hasTimedOut:  # watermark passed window end: evict
-            state.remove()
-            return
-        (wstart,) = key
-        if state.exists:
-            blob, n = state.get
-            hll = sketch_from_bytes(bytes(blob))
-        else:
-            hll, n = HyperLogLog(p=hll_p), 0
-        for pdf in pdfs:
-            vals = pdf["_k"].to_numpy(dtype=np.int64)
-            hll.insert_bulk(vals)
-            n += len(vals)
-        state.update((hll.to_bytes(), n))
-        end_ms = int(pd.Timestamp(wstart).value // 1_000_000) + window_ms
-        state.setTimeoutTimestamp(end_ms + watermark_ms)
-        yield pd.DataFrame(
-            {
-                "window_start": [wstart],
-                "estimate": [int(round(hll.estimate()))],
-                "n_rows": [n],
-            }
-        )
+_HH_OUT = "window_start timestamp, item long, est_count long, n_rows long"
 
-    return with_window.groupBy("_w").applyInPandasWithState(
-        _update,
-        outputStructType=_WINDOW_OUT,
-        stateStructType=_WINDOW_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
+
+def windowed_heavy_hitters_stream(
+    stream_df: DataFrame,
+    ts_col: str,
+    key_col: str,
+    window: str = "1 minute",
+    watermark: str = "2 minutes",
+    slide: str | None = None,
+    k: int = 256,
+    top: int = 10,
+) -> DataFrame:
+    """Per-event-time-window streaming heavy hitters via a Misra–Gries
+    summary held as GroupState: each update emits the window's current top
+    items with their (one-sided under-) estimates; any item whose true count
+    exceeds n/(k+1) is guaranteed present. State is evicted once the
+    watermark passes window_end + watermark (EventTimeTimeout), same
+    discipline as ``windowed_distinct_stream``. NULL keys are no item."""
+    from ..sketches import MisraGries
+
+    def _emit(wstart, mg, n):
+        hh = mg.heavy_hitters()[:top]
+        return {"window_start": [wstart] * len(hh),
+                "item": [item for item, _ in hh],
+                "est_count": [est for _, est in hh],
+                "n_rows": [n] * len(hh)}
+
+    return _window_stream(
+        stream_df, ts_col, F.col(key_col).cast("long"), window, watermark,
+        slide, functools.partial(MisraGries, k=k), "mg", _HH_OUT, _emit)
+
+
+_QT_OUT = "window_start timestamp, p50 double, p95 double, n_rows long"
+
+
+def windowed_quantiles_stream(
+    stream_df: DataFrame,
+    ts_col: str,
+    value_col: str,
+    window: str = "1 minute",
+    watermark: str = "2 minutes",
+    slide: str | None = None,
+    kll_k: int = 200,
+) -> DataFrame:
+    """Per-event-time-window streaming quantiles (p50/p95) via a KLL sketch
+    held as GroupState — completes the streaming trio next to distinct (HLL)
+    and heavy hitters (Misra–Gries). Window state is evicted once the
+    watermark passes window_end + watermark (EventTimeTimeout), so the state
+    store stays bounded; each update re-emits the window's current estimates
+    (update mode). Estimates carry KLL's O(1/k) normalized rank error. NULL,
+    NaN and ±inf values are no value and are not counted in n_rows."""
+    from ..sketches import KLLSketch
+
+    v = F.col(value_col).cast("double")
+    # NaN and ±inf would sort to the ends of the KLL buffers, permanently
+    # poisoning the window's extreme quantiles: make them NULL (Spark orders
+    # NaN above +inf, so the test is false for all three)
+    value = F.when(F.abs(v) < float("inf"), v)
+    return _window_stream(
+        stream_df, ts_col, value, window, watermark, slide,
+        functools.partial(KLLSketch, k=kll_k), "kll", _QT_OUT,
+        lambda wstart, kll, n: {"window_start": [wstart],
+                                "p50": [kll.quantile(0.5)],
+                                "p95": [kll.quantile(0.95)],
+                                "n_rows": [n]})
 
 
 _SESS_OUT = StructType([
@@ -738,7 +670,9 @@ def session_stream(
             state.setTimeoutTimestamp(max(int(k_e.min()) + gap_ms, wm + 1))
         if is_ripe.any():
             yield pd.DataFrame({
-                "user_id": np.full(int(is_ripe.sum()), user, dtype=np.int64),
+                # a NULL user is one NULL group, as in the batch PARTITION BY
+                "user_id": pd.array([user] * int(is_ripe.sum()),
+                                    dtype="Int64"),
                 "session_start": pd.to_datetime(m_s[is_ripe], unit="ms"),
                 "session_end": pd.to_datetime(m_e[is_ripe], unit="ms"),
                 "n_events": m_c[is_ripe]})
@@ -859,19 +793,28 @@ def _profile_blob(prof: dict) -> bytes:
     return b"".join(out)
 
 
-def _parse_profile_records(raw: bytes, off: int, n_cols: int,
-                           five_fields: bool) -> dict:
+def _profile_from_blob(raw: bytes) -> dict:
     import json
 
-    prof = {}
+    (head,) = struct.unpack_from("<q", raw, 0)
+    if head != _PROFILE_BLOB_V2:
+        # Headerless (pre-v2) snapshots are refused outright rather than
+        # sniffed: two headerless layouts once existed and disambiguating by
+        # try-parsing could, on a length coincidence, silently load a
+        # corrupted profile. Deleting only the snapshot files is no way out:
+        # Spark never replays the batches its checkpoint has committed, so
+        # the profile would restart short of them. Only a fresh checkpoint
+        # rebuilds it from the source.
+        raise ValueError(
+            "unrecognized profile snapshot format (pre-v2 headerless "
+            "profile_*.bin blob or corrupt payload): stop the query and "
+            "delete its whole checkpoint directory, then restart it to "
+            "rebuild the profile from the source")
+    (n_cols,) = struct.unpack_from("<q", raw, 8)
+    prof, off = {}, 16
     for _ in range(n_cols):
-        if five_fields:
-            lc, n, nn, lp, ls = struct.unpack_from("<qqqqq", raw, off)
-            off += 40
-        else:
-            lc, n, nn, lp = struct.unpack_from("<qqqq", raw, off)
-            ls = 0
-            off += 32
+        lc, n, nn, lp, ls = struct.unpack_from("<qqqqq", raw, off)
+        off += 40
         if not (0 < lc <= 4096) or lp < 0 or ls < 0 \
                 or off + lc + lp + ls > len(raw):
             raise ValueError("implausible profile record")
@@ -884,25 +827,6 @@ def _parse_profile_records(raw: bytes, off: int, n_cols: int,
     if off != len(raw):
         raise ValueError("trailing bytes in profile snapshot")
     return prof
-
-
-def _profile_from_blob(raw: bytes) -> dict:
-    (head,) = struct.unpack_from("<q", raw, 0)
-    if head == _PROFILE_BLOB_V2:
-        (n_cols,) = struct.unpack_from("<q", raw, 8)
-        return _parse_profile_records(raw, 16, n_cols, True)
-    # Headerless (pre-v2) snapshots are refused outright rather than
-    # sniffed: two headerless layouts once existed and disambiguating by
-    # try-parsing could, on a length coincidence, silently load a
-    # corrupted profile. Deleting only the snapshot files is no way out:
-    # Spark never replays the batches its checkpoint has committed, so the
-    # profile would restart short of them. Only a fresh checkpoint
-    # rebuilds it from the source.
-    raise ValueError(
-        "unrecognized profile snapshot format (pre-v2 headerless "
-        "profile_*.bin blob or corrupt payload): stop the query and delete "
-        "its whole checkpoint directory, then restart it to rebuild the "
-        "profile from the source")
 
 
 def stream_profile_rows(spark, name: str) -> DataFrame:

@@ -46,14 +46,27 @@ def test_sharded_array_column(spark):
 
 
 def test_distributed_probe_matches_broadcast(spark, keys_df):
-    shards = build_bloom_shards(keys_df, "id", n_shards=16, **CFG).cache()
+    """Cogroup probe == broadcast probe, NULL keys and keys above 2^53
+    included: a NULL key keeps its row with member NULL, and 2^60+1 is
+    probed as itself, not as its float64 neighbour 2^60."""
+    big = 1 << 60
+    extra = spark.createDataFrame([(big,)], "id long")
+    shards = build_bloom_shards(keys_df.union(extra), "id", n_shards=16,
+                                **CFG).cache()
     bf = assemble_bloom(shards.collect(), n_shards=16, **CFG)
-    probes = spark.range(0, 60_000, numPartitions=4)  # 50k positives + 10k unknown
+    # 50k positives + 10k unknown, 5 NULLs and the pair 2^60 (in), 2^60+1
+    probes = spark.range(0, 60_000, numPartitions=4).union(
+        spark.createDataFrame([(None,)] * 5 + [(big,), (big + 1,)],
+                              "id long"))
     dist = probe_bloom_distributed(probes, shards, "id", n_shards=16, **CFG)
     bcast = probe_key_column(probes, bf, "id")
-    d = {r["id"]: r["member"] for r in dist.collect()}
-    b = {r["id"]: r["member"] for r in bcast.collect()}
+    dist_rows, bcast_rows = dist.collect(), bcast.collect()
+    assert len(dist_rows) == len(bcast_rows) == 60_007
+    assert [r["member"] for r in dist_rows if r["id"] is None] == [None] * 5
+    d = {r["id"]: r["member"] for r in dist_rows}
+    b = {r["id"]: r["member"] for r in bcast_rows}
     assert d == b
+    assert d[big] is True and d[big + 1] is False
     assert all(d[i] for i in range(0, 50_000, 997))  # no FN spot-check
 
 

@@ -458,15 +458,18 @@ def test_session_stream_matches_batch_sessions(spark, tmp_path_factory):
                 rows.append((u, t))
                 t += dt.timedelta(minutes=10)
             t += dt.timedelta(minutes=50)  # gap > 30min closes the session
+    # NULL-user events are one more user: one session of 3 events, grouped
+    # under user_id NULL as PARTITION BY groups them in batch
+    for e in range(3):
+        rows.append((None, base + dt.timedelta(minutes=7 * e)))
     # sentinel far in the future so the watermark passes every real session
     rows.append((999, base + dt.timedelta(days=30)))
     df = spark.createDataFrame(rows, "user_id long, ts timestamp")
+    sentinel = F.col("user_id").eqNullSafe(999)
     data_dir = str(tmp_path_factory.mktemp("sess_in"))
     # two files -> two micro-batches; the watermark advances between them
-    df.filter(F.col("user_id") != 999).coalesce(1) \
-      .write.mode("append").parquet(data_dir)
-    df.filter(F.col("user_id") == 999).coalesce(1) \
-      .write.mode("append").parquet(data_dir)
+    df.filter(~sentinel).coalesce(1).write.mode("append").parquet(data_dir)
+    df.filter(sentinel).coalesce(1).write.mode("append").parquet(data_dir)
 
     stream = (spark.readStream.schema("user_id long, ts timestamp")
               .option("maxFilesPerTrigger", 1).parquet(data_dir))
@@ -480,7 +483,7 @@ def test_session_stream_matches_batch_sessions(spark, tmp_path_factory):
 
     w = Window.partitionBy("user_id").orderBy("ts")
     batch = (
-        df.filter(F.col("user_id") != 999)
+        df.filter(~sentinel)
         .withColumn("prev", F.lag("ts").over(w))
         .withColumn("new_sess", (F.col("prev").isNull()) | (
             F.col("ts").cast("long") - F.col("prev").cast("long") > 1800))
@@ -491,7 +494,8 @@ def test_session_stream_matches_batch_sessions(spark, tmp_path_factory):
     )
     expect = {(r["user_id"], r["session_start"], r["session_end"], r["n_events"])
               for r in batch.collect()}
-    assert got == expect and len(expect) == 15
+    assert got == expect and len(expect) == 16
+    assert (None, base, base + dt.timedelta(minutes=14), 3) in got
 
 
 def test_session_stream_late_event_extends_start(spark, tmp_path_factory):
@@ -820,19 +824,32 @@ def test_windowed_streams_drop_null_keys(spark, tmp_path_factory):
     """NULL keys are no item and no distinct value: heavy hitters never
     report int64-min (pandas reads a nullable long column as float64 and
     NaN casts to -2^63), HLL does not count NULL as one more value, and
-    n_rows counts only keyed rows — as the batch build, which drops NULLs."""
+    n_rows counts only keyed rows — as the batch build, which drops NULLs.
+    For quantiles NULL, NaN, +inf and -inf are no value: they never reach
+    the KLL (NaN would sort to the top of its buffers), n_rows counts only
+    the finite values, and p50/p95 are those of the finite-only input."""
+    from pimbloomfilters_spark.sketches import KLLSketch
     from pimbloomfilters_spark.streaming import (
-        windowed_distinct_stream, windowed_heavy_hitters_stream)
+        windowed_distinct_stream, windowed_heavy_hitters_stream,
+        windowed_quantiles_stream)
 
     data_dir = str(tmp_path_factory.mktemp("null_in"))
-    rows = [(f"2024-01-01 10:{i % 60:02d}:00", None if i % 3 == 0 else i % 5)
+    special = (None, float("nan"), float("inf"), float("-inf"))
+    rows = [(f"2024-01-01 10:{i % 60:02d}:00", None if i % 3 == 0 else i % 5,
+             special[i // 2 % 4] if i % 2 == 0 else float(i * 7 % 101))
             for i in range(300)]
-    spark.createDataFrame(rows, "ts string, user_id long") \
+    schema = "ts string, user_id long, v double"
+    spark.createDataFrame(rows, schema) \
         .coalesce(1).write.mode("overwrite").parquet(data_dir)
     src = spark.read.parquet(data_dir)
     n_keyed = src.filter("user_id IS NOT NULL").count()
     exact = src.agg(F.countDistinct("user_id")).first()[0]
     assert (n_keyed, exact) == (200, 5)
+    finite = np.array([v for *_, v in rows if v is not None
+                       and np.isfinite(v)])
+    assert finite.size == 150  # < kll_k: the KLL is exact
+    kll = KLLSketch(k=200)
+    kll.insert_bulk(finite)
 
     def _drain(out, sink):
         q = (out.writeStream.format("memory").queryName(sink)
@@ -840,7 +857,7 @@ def test_windowed_streams_drop_null_keys(spark, tmp_path_factory):
         q.awaitTermination(180)
         return spark.sql(f"select * from {sink}").collect()
 
-    stream = spark.readStream.schema("ts string, user_id long")
+    stream = spark.readStream.schema(schema)
     hh = _drain(windowed_heavy_hitters_stream(
         stream.parquet(data_dir), "ts", "user_id", window="1 hour",
         watermark="1 hour"), "null_hh")
@@ -853,6 +870,49 @@ def test_windowed_streams_drop_null_keys(spark, tmp_path_factory):
     last = max(hll, key=lambda r: r["n_rows"])
     assert last["n_rows"] == n_keyed
     assert abs(last["estimate"] - exact) <= 4 * 1.04 / (2**12) ** 0.5 * exact
+
+    qt = _drain(windowed_quantiles_stream(
+        stream.parquet(data_dir), "ts", "v", window="1 hour",
+        watermark="1 hour", kll_k=200), "null_qt")
+    last = max(qt, key=lambda r: r["n_rows"])
+    assert last["n_rows"] == finite.size
+    assert (last["p50"], last["p95"]) == (kll.quantile(0.5),
+                                          kll.quantile(0.95))
+
+
+def test_sharded_dedup_stream_state_is_batch_build(spark, tmp_path):
+    """Two micro-batches through sharded_dedup_stream (no TTL) emit exactly
+    the distinct non-NULL keys — NULLs dropped, 2^60 and 2^60+1 kept apart
+    — and each shard's state-store bitmap is byte-identical to the batch
+    sharded build over the same keys."""
+    from pimbloomfilters_spark.operators.sharded import build_bloom_shards
+    from pimbloomfilters_spark.streaming import sharded_dedup_stream
+
+    big = 1 << 60
+    cfg = dict(size2=16, nb_hash=4, n_shards=4)
+    batches = [list(range(0, 300)) + [None] * 5 + [big, 7, 7],
+               list(range(200, 500)) + [None] * 3 + [big + 1, big]]
+    data_dir, out_dir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ck"))
+    for keys in batches:
+        spark.createDataFrame([(k,) for k in keys], "id long").coalesce(1) \
+            .write.mode("append").parquet(data_dir)
+    stream = (spark.readStream.schema("id long")
+              .option("maxFilesPerTrigger", 1).parquet(data_dir))
+    q = (sharded_dedup_stream(stream, "id", **cfg)
+         .writeStream.format("parquet").option("path", out_dir)
+         .option("checkpointLocation", ckpt)
+         .outputMode("append").trigger(availableNow=True).start())
+    q.awaitTermination(180)
+
+    got = sorted(r["id"] for r in spark.read.parquet(out_dir).collect())
+    want = sorted({k for keys in batches for k in keys if k is not None})
+    assert got == want and big + 1 in got
+
+    state = {r["key"]["_shard"]: bytes(r["value"]["groupState"]["bitmap"])
+             for r in spark.read.format("statestore").load(ckpt).collect()}
+    batch = {r["shard"]: bytes(r["sketch"]) for r in build_bloom_shards(
+        spark.read.parquet(data_dir), "id", **cfg).collect()}
+    assert state == batch and len(state) == 4
 
 
 _DAMAGE = ("truncate", "flip", "trailing", "empty", "unframed")
@@ -967,3 +1027,20 @@ def test_truncated_sparse_bloom_snapshot_fails_restart(spark, tmp_path):
     newest.write_bytes(newest.read_bytes()[:-4])
     with pytest.raises(ValueError, match=newest.name):
         _run()
+
+
+@pytest.mark.parametrize("gate", ["profile_stream_parity",
+                                  "session_stream_parity",
+                                  "sample_stream_parity", "checkpoint_resume"])
+def test_gate_removes_its_temp_dirs(spark, sf_dir, tmp_path, monkeypatch,
+                                    gate):
+    """The gates that stage input or a checkpoint on disk return rows held
+    in memory, so none of their files outlives the call."""
+    import os
+    import tempfile
+
+    from pimbloomfilters_spark.plans import CATALOG
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert len(CATALOG[gate].fn(spark, sf_dir).toPandas())
+    assert os.listdir(tmp_path) == []
