@@ -17,6 +17,11 @@ Scale notes: the shingle join explodes |doc|x|grams| — at 100 TB you run
 MinHash banding FIRST (cost ~ O(corpus) + O(bucket^2) within tiny buckets)
 and the exact verify only on candidates, which is precisely the composition
 implemented by ``minhash_near_dup_pairs``.
+
+Every window pass here (char grams for MinHash/SimHash, token shingles,
+token n-gram KR codes for ExactSubstr and decontamination) codes its
+windows with the one window coder in ``_windows.py``, which reads string
+and list columns straight from their Arrow buffers.
 """
 
 from __future__ import annotations
@@ -26,6 +31,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from ..hashing import splitmix64, xxh64_u64
+from ._windows import char_grams, distinct_token_kr, token_kr, token_shingles
 
 _GAMMA = np.uint64(0x9E3779B97F4A7C15)  # splitmix64 stream increment
 
@@ -36,105 +42,6 @@ def _check_gram_n(n: int) -> None:
     task failure after cluster resources were spent."""
     if not (1 <= n <= 8):
         raise ValueError(f"char n-gram width must be 1..8 bytes, got {n}")
-
-
-def _batch_distinct_list_shingles(col, shingle: int):
-    """Distinct packed token-id shingles for every row of an Arrow LIST
-    batch column — the tokens-array twin of ``_batch_distinct_grams``.
-    One flat pass over the Arrow buffers (never per-row Python):
-
-    - values/offsets come straight off the list array (zero-copy);
-    - every length-``shingle`` sliding window over the flat values, windows
-      crossing a row boundary masked out;
-    - windows packed base-2^32: an exact BIJECTION shingle <-> uint64 for
-      shingle <= 2 over int32 token ids (the same ``a*2^32 + b`` coding the
-      relational bigram queries use), so distinct packed shingles == distinct
-      shingle tuples and intersections count tuple-intersections exactly;
-    - per-row distinct via one lexsort.
-
-    Returns (packed, starts, doc_idx) with the same contract as
-    ``_batch_distinct_grams``. Null token arrays behave as empty.
-    """
-    if not (1 <= shingle <= 2):
-        raise ValueError(
-            f"token shingle width must be 1 or 2 (base-2^32 packing), got {shingle}")
-    offs = np.asarray(col.offsets, dtype=np.int64)
-    vals = np.asarray(col.values, dtype=np.int64)
-    # a sliced batch's offsets needn't start at 0; normalize to the window
-    vals = vals[offs[0]:offs[-1]]
-    offs = offs - offs[0]
-    lens = np.diff(offs)
-    rows = len(lens)
-    if vals.size < shingle:
-        return (np.empty(0, np.uint64), np.empty(0, np.int64),
-                np.empty(0, np.int64))
-    if vals.size and (vals.min() < 0 or vals.max() >= 1 << 32):
-        raise ValueError("token ids must be in [0, 2^32) for shingle packing")
-    w = np.lib.stride_tricks.sliding_window_view(vals, shingle)
-    packed = np.zeros(w.shape[0], dtype=np.uint64)
-    for i in range(shingle):
-        packed = (packed << np.uint64(32)) | w[:, i].astype(np.uint64)
-    pos = np.arange(w.shape[0], dtype=np.int64)
-    doc = np.repeat(np.arange(rows, dtype=np.int64), lens)[:w.shape[0]]
-    valid = pos + shingle <= offs[1:][doc]
-    packed, doc = packed[valid], doc[valid]
-    if packed.size == 0:
-        return (np.empty(0, np.uint64), np.empty(0, np.int64),
-                np.empty(0, np.int64))
-    order = np.lexsort((packed, doc))
-    doc, packed = doc[order], packed[order]
-    keep = np.r_[True, (doc[1:] != doc[:-1]) | (packed[1:] != packed[:-1])]
-    doc, packed = doc[keep], packed[keep]
-    starts = np.r_[0, np.flatnonzero(doc[1:] != doc[:-1]) + 1]
-    return packed, starts, doc[starts]
-
-
-def _batch_distinct_grams(texts: list, n: int):
-    """Distinct packed char n-grams for EVERY doc of a batch in one
-    vectorized pass (no per-doc Python):
-
-    - concatenate all texts into one flat byte array;
-    - take every length-n sliding window, mask out windows that cross a
-      document boundary;
-    - pack each window's bytes into a uint64 (Horner, base 256: an exact
-      BIJECTION gram-bytes <-> uint64 for n <= 8, so distinct packed grams ==
-      distinct gram strings and set intersections over packed grams are the
-      string-gram intersections, exactly — the verify stage counts on this);
-    - per-doc distinct via one lexsort over (doc, packed).
-
-    Returns (packed, starts, doc_idx): packed distinct grams grouped by doc,
-    ``starts`` the start offset of each present doc's gram run (for
-    ``np.ufunc.reduceat``), ``doc_idx`` the batch-local row index of each run.
-    Docs shorter than n bytes simply have no run.
-    """
-    if n > 8:
-        raise ValueError("char n-gram packing supports n <= 8 bytes")
-    enc = [(t or "").encode("utf-8", "ignore") for t in texts]
-    lens = np.array([len(e) for e in enc], dtype=np.int64)
-    total = int(lens.sum())
-    if total < n:
-        return (np.empty(0, np.uint64), np.empty(0, np.int64),
-                np.empty(0, np.int64))
-    flat = np.frombuffer(b"".join(enc), dtype=np.uint8)
-    ends = np.cumsum(lens)
-    w = np.lib.stride_tricks.sliding_window_view(flat, n)
-    packed = np.zeros(w.shape[0], dtype=np.uint64)
-    for i in range(n):  # n is tiny (3): n vectorized column ops
-        packed = (packed << np.uint64(8)) | w[:, i].astype(np.uint64)
-    # doc of each window start; keep only windows fully inside one doc
-    pos = np.arange(w.shape[0], dtype=np.int64)
-    doc = np.repeat(np.arange(len(enc), dtype=np.int64), lens)[:w.shape[0]]
-    valid = pos + n <= ends[doc]
-    packed, doc = packed[valid], doc[valid]
-    if packed.size == 0:
-        return (np.empty(0, np.uint64), np.empty(0, np.int64),
-                np.empty(0, np.int64))
-    order = np.lexsort((packed, doc))
-    doc, packed = doc[order], packed[order]
-    keep = np.r_[True, (doc[1:] != doc[:-1]) | (packed[1:] != packed[:-1])]
-    doc, packed = doc[keep], packed[keep]
-    starts = np.r_[0, np.flatnonzero(doc[1:] != doc[:-1]) + 1]
-    return packed, starts, doc[starts]
 
 
 # --------------------------------------------------------------- exact
@@ -262,35 +169,53 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", n: int = 3,
 
 
 # ------------------------------------------------------------- MinHash
-def _minhash_record_batch(ids, rows: int, packed, starts, doc_idx,
-                          num_hashes: int, seed: int, with_grams: bool):
-    """Assemble one output RecordBatch from a batch's distinct-gram runs —
-    shared by the char-gram and token-shingle signature passes. The j-th
-    hash of gram g is ``splitmix64(xxh64(g, seed) + j*gamma)`` (splitmix64
-    parallel streams: one base xxh64 pass + one cheap mix per stream); the
-    per-doc minimum of each stream is one ``np.minimum.reduceat`` over the
-    doc runs. Rows without grams get the all-MAX signature (empty set)."""
-    sig = np.full((rows, num_hashes), np.iinfo(np.int64).max, dtype=np.int64)
-    if packed.size:
-        h0 = xxh64_u64(packed, seed)
-        with np.errstate(over="ignore"):
-            for j in range(num_hashes):
-                hj = splitmix64(h0 + _GAMMA * np.uint64(j))
-                sig[doc_idx, j] = np.minimum.reduceat(hj, starts).view(np.int64)
-    offsets = np.arange(0, (rows + 1) * num_hashes, num_hashes, dtype=np.int32)
-    sig_col = pa.ListArray.from_arrays(pa.array(offsets), pa.array(sig.ravel()))
-    cols, names = [ids, sig_col], ["doc_id", "sig"]
+def _minhash_signatures(df: DataFrame, id_col: str, col_name: str, coder,
+                        num_hashes: int, seed: int,
+                        with_grams: bool) -> DataFrame:
+    """(doc_id, sig[, grams]) over ``df``'s (``id_col``, ``col_name``): the
+    one mapInArrow body of every MinHash signature pass (char grams, token
+    shingles, k-mers). ``coder(column)`` gives each row's distinct codes as
+    runs, ``(codes, starts, rows)``. The j-th hash of code g is
+    ``splitmix64(xxh64(g, seed) + j*gamma)`` (splitmix64 parallel streams:
+    one base xxh64 pass + one cheap mix per stream); the per-row minimum of
+    each stream is one ``np.minimum.reduceat`` over the runs. Rows without
+    a code get the all-MAX signature (empty set)."""
+
+    def _sig(batches):
+        for b in batches:
+            col = b.column(1)
+            rows = len(col)
+            packed, starts, doc_idx = coder(col)
+            sig = np.full((rows, num_hashes), np.iinfo(np.int64).max,
+                          dtype=np.int64)
+            if packed.size:
+                h0 = xxh64_u64(packed, seed)
+                with np.errstate(over="ignore"):
+                    for j in range(num_hashes):
+                        hj = splitmix64(h0 + _GAMMA * np.uint64(j))
+                        sig[doc_idx, j] = np.minimum.reduceat(
+                            hj, starts).view(np.int64)
+            offsets = np.arange(0, (rows + 1) * num_hashes, num_hashes,
+                                dtype=np.int32)
+            sig_col = pa.ListArray.from_arrays(pa.array(offsets),
+                                               pa.array(sig.ravel()))
+            cols, names = [b.column(0), sig_col], ["doc_id", "sig"]
+            if with_grams:
+                # per-row code counts -> list offsets (rows w/o codes: empty)
+                cnt = np.zeros(rows, dtype=np.int64)
+                if packed.size:
+                    cnt[doc_idx] = np.diff(np.r_[starts, packed.size])
+                goff = np.zeros(rows + 1, dtype=np.int32)
+                np.cumsum(cnt, out=goff[1:])
+                cols.append(pa.ListArray.from_arrays(
+                    pa.array(goff), pa.array(packed.view(np.int64))))
+                names.append("grams")
+            yield pa.RecordBatch.from_arrays(cols, names=names)
+
+    schema = f"doc_id {dict(df.dtypes)[id_col]}, sig array<long>"
     if with_grams:
-        # per-row gram counts -> list offsets (rows w/o grams: empty)
-        cnt = np.zeros(rows, dtype=np.int64)
-        if packed.size:
-            cnt[doc_idx] = np.diff(np.r_[starts, packed.size])
-        goff = np.zeros(rows + 1, dtype=np.int32)
-        np.cumsum(cnt, out=goff[1:])
-        cols.append(pa.ListArray.from_arrays(
-            pa.array(goff), pa.array(packed.view(np.int64))))
-        names.append("grams")
-    return pa.RecordBatch.from_arrays(cols, names=names)
+        schema += ", grams array<long>"
+    return df.select(id_col, col_name).mapInArrow(_sig, schema)
 
 
 def minhash_signatures(df: DataFrame, text_col: str = "text", n: int = 3,
@@ -299,12 +224,9 @@ def minhash_signatures(df: DataFrame, text_col: str = "text", n: int = 3,
     """(doc_id, sig array<long>): MinHash over distinct char n-grams.
 
     Fully batch-vectorized (no per-doc Python loop): distinct grams for the
-    whole batch come from one flat-array pass (``_batch_distinct_grams``);
-    the j-th hash of gram g is ``splitmix64(xxh64(g, seed) + j*gamma)`` —
-    the splitmix64 parallel-stream construction, one base xxh64 pass plus one
-    cheap mix per seed — and the per-doc minimum of each stream is a single
-    ``np.minimum.reduceat`` over the doc runs. Docs shorter than n get the
-    all-MAX signature (no grams -> empty set).
+    whole batch come from one flat pass over the Arrow string buffers
+    (``_windows.char_grams``), signatures from ``_minhash_signatures``.
+    Docs shorter than n get the all-MAX signature (no grams -> empty set).
 
     ``with_grams=True`` additionally emits each doc's distinct packed grams
     as a sorted ``grams array<long>`` column — the SAME scan that computes
@@ -312,20 +234,9 @@ def minhash_signatures(df: DataFrame, text_col: str = "text", n: int = 3,
     over the corpus (packing is a bijection for n <= 8, so intersection /
     union sizes over packed grams equal those over gram strings exactly)."""
     _check_gram_n(n)
-
-    def _sig(batches):
-        for b in batches:
-            texts = b.column(1).to_pylist()
-            packed, starts, doc_idx = _batch_distinct_grams(texts, n)
-            yield _minhash_record_batch(b.column(0), len(texts), packed,
-                                        starts, doc_idx, num_hashes, seed,
-                                        with_grams)
-
-    id_type = dict(df.dtypes)["doc_id"]
-    schema = f"doc_id {id_type}, sig array<long>"
-    if with_grams:
-        schema += ", grams array<long>"
-    return df.select("doc_id", text_col).mapInArrow(_sig, schema)
+    return _minhash_signatures(df, "doc_id", text_col,
+                               lambda col: char_grams(col, n), num_hashes,
+                               seed, with_grams)
 
 
 def minhash_signatures_tokens(df: DataFrame, tokens_col: str = "tokens",
@@ -343,20 +254,9 @@ def minhash_signatures_tokens(df: DataFrame, tokens_col: str = "tokens",
     if not (1 <= shingle <= 2):  # fail at plan-build time, not mid-job
         raise ValueError(
             f"token shingle width must be 1 or 2 (base-2^32 packing), got {shingle}")
-
-    def _sig(batches):
-        for b in batches:
-            col = b.column(1)
-            packed, starts, doc_idx = _batch_distinct_list_shingles(col, shingle)
-            yield _minhash_record_batch(b.column(0), len(col), packed,
-                                        starts, doc_idx, num_hashes, seed,
-                                        with_grams)
-
-    id_type = dict(df.dtypes)["doc_id"]
-    schema = f"doc_id {id_type}, sig array<long>"
-    if with_grams:
-        schema += ", grams array<long>"
-    return df.select("doc_id", tokens_col).mapInArrow(_sig, schema)
+    return _minhash_signatures(df, "doc_id", tokens_col,
+                               lambda col: token_shingles(col, shingle),
+                               num_hashes, seed, with_grams)
 
 
 def minhash_lsh_candidates(sig_df: DataFrame, bands: int = 16) -> DataFrame:
@@ -487,9 +387,8 @@ def simhash_signatures(df: DataFrame, text_col: str = "text", n: int = 3,
         bitcols = (np.uint64(1) << np.arange(64, dtype=np.uint64))
         for b in batches:
             ids = b.column(0)
-            texts = b.column(1).to_pylist()
-            out = np.zeros(len(texts), dtype=np.int64)
-            packed, starts, doc_idx = _batch_distinct_grams(texts, n)
+            out = np.zeros(len(ids), dtype=np.int64)
+            packed, starts, doc_idx = char_grams(b.column(1), n)
             if packed.size:
                 h = xxh64_u64(packed, seed)
                 # int32 vote counters: a doc may legitimately carry up to
@@ -674,7 +573,7 @@ def embedding_near_dup_lsh(df: DataFrame, vec_col: str = "embedding",
     reverse for cost (candidates/table ~ n^2/2^bits on random data).
     Exactness is NOT guaranteed (that is ``embedding_near_dup_pairs``);
     recall on planted duplicates is pinned by tests/test_functions.py."""
-    from .similarity import lsh_bucket_ids
+    from .similarity import _cosine, lsh_bucket_ids
 
     cands = None
     for t in range(tables):
@@ -688,12 +587,9 @@ def embedding_near_dup_lsh(df: DataFrame, vec_col: str = "embedding",
     vecs = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
     va = vecs.select(F.col("_id").alias("doc_a"), F.col("_v").alias("_va"))
     vb = vecs.select(F.col("_id").alias("doc_b"), F.col("_v").alias("_vb"))
-    dot = F.aggregate(F.zip_with("_va", "_vb", lambda a, b: a * b),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    nrm = lambda c: F.sqrt(F.aggregate(c, F.lit(0.0), lambda a, x: a + x * x))
     return (
         cands.join(va, "doc_a").join(vb, "doc_b")
-        .withColumn("cos", F.try_divide(dot, nrm(F.col("_va")) * nrm(F.col("_vb"))))
+        .withColumn("cos", _cosine("_va", "_vb"))
         .filter(F.col("cos") >= threshold)
         .select(F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b"), "cos")
     )
@@ -726,7 +622,7 @@ def semantic_dedup(df: DataFrame, threshold: float = 0.7,
     Reference analogue: none (SURVEY §2.4 — the reference has no corpus
     operators); this extends the LLM-pipeline dedup family
     (``minhash_near_dup_pairs``, ``embedding_near_dup_lsh``)."""
-    from .similarity import _batch_matrix, _normalize, ivf_centroids
+    from .similarity import _batch_matrix, _cosine, _normalize, ivf_centroids
 
     if centroids is None:
         centroids = ivf_centroids(df, vec_col, id_col, n_clusters, iters)
@@ -752,14 +648,9 @@ def semantic_dedup(df: DataFrame, threshold: float = 0.7,
                          F.col("_v").alias("_va"))
     vb = assigned.select(F.col("_id").alias("id_b"), "cluster",
                          F.col("_v").alias("_vb"))
-    dot = F.aggregate(F.zip_with("_va", "_vb", lambda a, b: a * b),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    nrm = lambda col: F.sqrt(
-        F.aggregate(col, F.lit(0.0), lambda a, x: a + x * x))
     drops = (
         va.join(vb, "cluster").filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos", F.try_divide(
-            dot, nrm(F.col("_va")) * nrm(F.col("_vb"))))
+        .withColumn("cos", _cosine("_va", "_vb"))
         .filter(F.col("cos") >= threshold)
         .select(F.col("id_b").alias("_id")).distinct()
         .withColumn("_drop", F.lit(True))
@@ -772,73 +663,6 @@ def semantic_dedup(df: DataFrame, threshold: float = 0.7,
 
 
 # ------------------------------------------- token n-gram decontamination
-_EMPTY3 = (np.empty(0, np.int64), np.empty(0, np.int64),
-           np.empty(0, np.int64))
-
-
-def _flat_window_codes(col, n: int, want_pos: bool = True):
-    """(codes, pos_in_doc_1based, row_index) of EVERY valid length-``n``
-    token window of an Arrow LIST batch column — the shared flat-scan +
-    Horner-KR + boundary-mask core (handles sliced arrays: offsets need
-    not start at 0). Both n-gram coders derive from this; the sliced-
-    batch property tests protect exactly this code. ``want_pos=False``
-    skips the position gather/materialization for callers that discard
-    it (the distinct-codes hot path)."""
-    from .text import _FP_BASE, _FP_MOD
-
-    if n < 1:
-        raise ValueError(f"ngram width must be >= 1, got {n}")
-    offs = np.asarray(col.offsets, dtype=np.int64)
-    vals = np.asarray(col.values, dtype=np.int64)
-    vals = vals[offs[0]:offs[-1]]
-    offs = offs - offs[0]
-    lens = np.diff(offs)
-    rows = len(lens)
-    if vals.size < n:
-        return _EMPTY3
-    if vals.min() < 0 or vals.max() >= 1 << 31:
-        raise ValueError("token ids must be in [0, 2^31) for KR coding")
-    n_win = vals.size - n + 1
-    acc = np.zeros(n_win, dtype=np.int64)
-    for i in range(n):  # Horner: n vectorized passes, intermediates < 2^40
-        acc = (acc * _FP_BASE + vals[i:i + n_win]) % _FP_MOD
-    pos = np.arange(n_win, dtype=np.int64)
-    doc = np.repeat(np.arange(rows, dtype=np.int64), lens)[:n_win]
-    valid = pos + n <= offs[1:][doc]
-    if not want_pos:
-        return acc[valid], np.empty(0, np.int64), doc[valid]
-    pos_in_doc = pos - offs[:-1][doc] + 1  # 1-based, oracle convention
-    return acc[valid], pos_in_doc[valid], doc[valid]
-
-
-def _batch_distinct_token_ngram_codes(col, n: int):
-    """Distinct Karp-Rabin codes (mod 2^31-1, base 257 — the SQL-exact
-    coding ``text._batch_window_hashes`` uses over bytes) of every
-    length-``n`` token window per row of an Arrow LIST batch column. Same
-    return contract as ``_batch_distinct_list_shingles``
-    ((values, group_starts, group_rows)); unlike the shingle packer this
-    is NOT a bijection (n > 2 exceeds exact packing), but collisions are
-    SYMMETRIC — any engine computing the identical code sees the
-    identical collision — so code-set comparisons stay exact
-    cross-engine."""
-    acc, _pos, doc = _flat_window_codes(col, n, want_pos=False)
-    if acc.size == 0:
-        return _EMPTY3
-    order = np.lexsort((acc, doc))
-    doc, acc = doc[order], acc[order]
-    keep = np.r_[True, (doc[1:] != doc[:-1]) | (acc[1:] != acc[:-1])]
-    doc, acc = doc[keep], acc[keep]
-    starts = np.r_[0, np.flatnonzero(doc[1:] != doc[:-1]) + 1]
-    return acc, starts, doc[starts]
-
-
-def _batch_token_ngram_pos_codes(col, n: int):
-    """Positional twin of ``_batch_distinct_token_ngram_codes``: every
-    window's KR code WITH its 1-based start position — NO dedup (span
-    chaining needs every occurrence)."""
-    return _flat_window_codes(col, n)
-
-
 def token_ngram_pos_codes(df: DataFrame, n: int = 13,
                           tokens_col: str = "tokens",
                           id_col: str = "doc_id") -> DataFrame:
@@ -849,8 +673,7 @@ def token_ngram_pos_codes(df: DataFrame, n: int = 13,
 
     def _codes(batches):
         for b in batches:
-            codes, pos, doc_rows = _batch_token_ngram_pos_codes(
-                b.column(1), n)
+            codes, pos, doc_rows = token_kr(b.column(1), n)
             if codes.size == 0:
                 continue
             ids = b.column(0).take(pa.array(doc_rows))
@@ -952,22 +775,27 @@ def _global_dup_positions(df: DataFrame, k: int,
     Ordering of (doc, pos) uses the natural ordering of ``id_col``'s type
     — cast string ids to long first if numeric order is intended.
 
-    Shape: representative + count come from window aggregates over the
-    code partition, so the occurrence stream is coded ONCE (one corpus
-    scan) and shuffled ONCE (on code) — no groupBy + self-join re-scan.
-    WindowExec buffers one code group at a time: a code in f documents
-    is an f-row buffer, linear."""
+    Shape: the representative is one window aggregate over the code
+    partition (``_flag_first``), so the occurrence stream is coded ONCE
+    (one corpus scan) and shuffled ONCE (on code). An occurrence that is
+    not its code's first implies an earlier one, so no count is needed."""
+    occ = token_ngram_pos_codes(df, k, tokens_col, id_col)
+    return _flag_first(occ, id_col).filter(~F.col("_first")).select(
+        id_col, "pos")
+
+
+def _flag_first(occ: DataFrame, id_col: str) -> DataFrame:
+    """``occ`` (id, pos, code, ...) plus ``_first``: whether the row is its
+    code's lowest-(id, pos) occurrence. ONE window aggregate over the code
+    partition, no groupBy + self-join re-scan; WindowExec buffers one code
+    group at a time, so a code in f documents is an f-row buffer."""
     from pyspark.sql import Window
 
-    occ = token_ngram_pos_codes(df, k, tokens_col, id_col)
-    wc = Window.partitionBy("code")
     me = F.struct(F.col(id_col).alias("d"), F.col("pos").alias("p"))
-    return (occ.withColumn("_rep", F.min(me).over(wc))
-            .withColumn("_cnt", F.count(F.lit(1)).over(wc))
-            .filter((F.col("_cnt") > 1) &
-                    ((F.col(id_col) != F.col("_rep.d")) |
-                     (F.col("pos") != F.col("_rep.p"))))
-            .select(id_col, "pos"))
+    rep = F.min(me).over(Window.partitionBy("code"))
+    return occ.withColumn("_rep", rep).withColumn(
+        "_first", (F.col(id_col) == F.col("_rep.d"))
+        & (F.col("pos") == F.col("_rep.p")))
 
 
 def dedup_against(df_new: DataFrame, df_old: DataFrame,
@@ -1044,18 +872,11 @@ def ngram_novelty(df: DataFrame, k: int = 13,
     doc id. Counts are exact integers; the fraction is ONE int division —
     bit-identical cross-engine. Reference analogue: none (SURVEY §2.4 —
     the reference has no corpus ops)."""
-    from pyspark.sql import Window
-
     occ = token_ngram_pos_codes(df, k, tokens_col, id_col)
-    wc = Window.partitionBy("code")
-    me = F.struct(F.col(id_col).alias("d"), F.col("pos").alias("p"))
-    flagged = occ.withColumn("_rep", F.min(me).over(wc))
     return (
-        flagged.groupBy(id_col)
+        _flag_first(occ, id_col).groupBy(id_col)
         .agg(F.count("*").alias("n_windows"),
-             F.sum(((F.col(id_col) == F.col("_rep.d")) &
-                    (F.col("pos") == F.col("_rep.p"))).cast("long"))
-             .alias("n_novel"))
+             F.sum(F.col("_first").cast("long")).alias("n_novel"))
         .withColumn("novelty_frac", F.col("n_novel") / F.col("n_windows"))
     )
 
@@ -1248,8 +1069,7 @@ def token_ngram_codes(df: DataFrame, n: int = 13,
 
     def _codes(batches):
         for b in batches:
-            codes, starts, doc_rows = _batch_distinct_token_ngram_codes(
-                b.column(1), n)
+            codes, starts, doc_rows = distinct_token_kr(b.column(1), n)
             if codes.size == 0:
                 continue
             counts = np.diff(np.r_[starts, codes.size])
@@ -1280,8 +1100,7 @@ def screen_token_ngrams(df: DataFrame, sketch, n: int = 13,
     def _screen(batches):
         sk = load_shipped_sketch(name)
         for b in batches:
-            codes, starts, doc_rows = _batch_distinct_token_ngram_codes(
-                b.column(1), n)
+            codes, starts, doc_rows = distinct_token_kr(b.column(1), n)
             if codes.size == 0:
                 continue
             member = sk.contains_bulk(codes)

@@ -10,9 +10,10 @@ key streams). This module provides that workflow natively:
   G=2, T=3, base-4 big-endian), so set operations over codes equal set
   operations over k-mer strings. Windows containing any non-ACGT byte
   (N, etc.) are dropped, the standard convention. One flat vectorized pass
-  per Arrow batch (lookup-table byte map + sliding window + boundary/N
-  masking + per-doc lexsort distinct — the ``_batch_distinct_grams``
-  shape from dedup.py).
+  per Arrow batch by the shared window coder (``_windows.kmers``): the
+  bytes come straight from the Arrow string buffers, a lookup table maps
+  them to bases, and every non-ACGT byte (non-ASCII characters included)
+  invalidates the windows over it.
 - ``synth_dna``: deterministic synthetic genomes whose base at position j
   of sequence i is ``ACGT[((x*x) div 1000) % 4]``, x = i*211 + j*stride +
   shift — an arithmetic closed form BOTH engines can compute, so the
@@ -32,55 +33,13 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-# byte value -> 2-bit base code; 255 marks non-ACGT (invalidates a window)
-_BASE_MAP = np.full(256, 255, dtype=np.uint8)
-for _b, _c in zip(b"ACGT", range(4)):
-    _BASE_MAP[_b] = _c
+from ._windows import kmers
 
 
-def _batch_distinct_kmers(seqs: list, k: int, canonical: bool = False):
-    """Distinct packed k-mer codes for every sequence of a batch in one
-    vectorized pass. Returns (packed, starts, doc_idx) with the
-    ``_batch_distinct_grams`` contract. ``canonical=True`` replaces each
-    code with min(code, reverse-complement code) — the strand-insensitive
-    convention real genomics pipelines count (complement = 3 - base in the
-    2-bit coding, order reversed), computed in the SAME loop."""
-    enc = [(s or "").encode("ascii", "replace") for s in seqs]
-    lens = np.array([len(e) for e in enc], dtype=np.int64)
-    total = int(lens.sum())
-    empty = (np.empty(0, np.uint64), np.empty(0, np.int64),
-             np.empty(0, np.int64))
-    if total < k:
-        return empty
-    flat = _BASE_MAP[np.frombuffer(b"".join(enc), dtype=np.uint8)]
-    w = np.lib.stride_tricks.sliding_window_view(flat, k)
-    packed = np.zeros(w.shape[0], dtype=np.uint64)
-    rc = np.zeros(w.shape[0], dtype=np.uint64)
-    bad = np.zeros(w.shape[0], dtype=bool)
-    for i in range(k):
-        col = w[:, i]
-        bad |= col == 255
-        packed = (packed << np.uint64(2)) | col.astype(np.uint64)
-        if canonical:
-            # base i of the forward strand contributes (3 - base) at
-            # mirrored position k-1-i of the RC, i.e. bit-shift 2*i
-            rc |= ((np.uint64(3) - (w[:, i] & np.uint64(3)).astype(np.uint64))
-                   << np.uint64(2 * i))
-    if canonical:
-        packed = np.minimum(packed, rc)
-    ends = np.cumsum(lens)
-    pos = np.arange(w.shape[0], dtype=np.int64)
-    doc = np.repeat(np.arange(len(enc), dtype=np.int64), lens)[:w.shape[0]]
-    valid = (pos + k <= ends[doc]) & ~bad
-    packed, doc = packed[valid], doc[valid]
-    if packed.size == 0:
-        return empty
-    order = np.lexsort((packed, doc))
-    doc, packed = doc[order], packed[order]
-    keep = np.r_[True, (doc[1:] != doc[:-1]) | (packed[1:] != packed[:-1])]
-    doc, packed = doc[keep], packed[keep]
-    starts = np.r_[0, np.flatnonzero(doc[1:] != doc[:-1]) + 1]
-    return packed, starts, doc[starts]
+def _check_k(k: int) -> None:
+    """Plan-time guard: 2-bit packing is a bijection only for k <= 31."""
+    if not (1 <= k <= 31):
+        raise ValueError(f"k must be 1..31 (2-bit packing), got {k}")
 
 
 def dna_kmers(df: DataFrame, seq_col: str = "seq", k: int = 21,
@@ -91,20 +50,14 @@ def dna_kmers(df: DataFrame, seq_col: str = "seq", k: int = 21,
     min(kmer, revcomp) codes. Linear mapInArrow scan — the 100 TB shape is
     a single pass over the sequence set, exactly like the text-gram
     extractors."""
-    if not (1 <= k <= 31):
-        raise ValueError(f"k must be 1..31 (2-bit packing), got {k}")
+    _check_k(k)
 
     def _km(batches):
         for b in batches:
-            ids = b.column(0)
-            seqs = b.column(1).to_pylist()
-            packed, starts, doc_idx = _batch_distinct_kmers(seqs, k, canonical)
-            cnt = np.zeros(len(seqs), dtype=np.int64)
-            if packed.size:
-                cnt[doc_idx] = np.diff(np.r_[starts, packed.size])
-            out_ids = np.repeat(
-                np.asarray(ids.to_numpy(zero_copy_only=False),
-                           dtype=np.int64), cnt)
+            ids = np.asarray(b.column(0).to_numpy(zero_copy_only=False),
+                             dtype=np.int64)
+            packed, starts, rows = kmers(b.column(1), k, canonical)
+            out_ids = ids[np.repeat(rows, np.diff(np.r_[starts, packed.size]))]
             yield pa.RecordBatch.from_arrays(
                 [pa.array(out_ids), pa.array(packed.view(np.int64))],
                 names=["seq_id", "kmer"])
@@ -154,19 +107,12 @@ def kmer_minhash_signatures(df: DataFrame, k: int = 21,
     splitmix-stream signature machinery over the packed k-mer codes — one
     linear scan per sequence set, signatures are ``num_hashes`` longs
     however large the genome."""
-    from .dedup import _minhash_record_batch
+    from .dedup import _minhash_signatures
 
-    def _sig(batches):
-        for b in batches:
-            seqs = b.column(1).to_pylist()
-            packed, starts, doc_idx = _batch_distinct_kmers(seqs, k, canonical)
-            yield _minhash_record_batch(b.column(0), len(seqs), packed,
-                                        starts, doc_idx, num_hashes, seed,
-                                        False)
-
-    return df.select(id_col, seq_col).mapInArrow(
-        _sig, "doc_id long, sig array<long>").withColumnRenamed(
-        "doc_id", "seq_id")
+    _check_k(k)
+    return _minhash_signatures(
+        df, id_col, seq_col, lambda col: kmers(col, k, canonical),
+        num_hashes, seed, False).withColumnRenamed("doc_id", "seq_id")
 
 
 def mash_distance(jaccard, k: int = 21):

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..hashing import splitmix64
 
@@ -35,6 +35,18 @@ def _normalize(m: np.ndarray) -> np.ndarray:
     norms = np.linalg.norm(m, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
     return m / norms
+
+
+def _cosine(a, b) -> Column:
+    """Column: cosine of two array columns (names or Columns) as one
+    fixed-shape JVM expression — left-fold dot product over the product of
+    the left-fold norms, NULL for a zero norm — so equal inputs give
+    bit-identical floats on every path that uses it."""
+    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0),
+                      lambda acc, x: acc + x)
+    nrm = lambda c: F.sqrt(F.aggregate(c, F.lit(0.0),
+                                       lambda acc, x: acc + x * x))
+    return F.try_divide(dot, nrm(a) * nrm(b))
 
 
 def cosine_topk_bruteforce(df: DataFrame, queries: DataFrame, k: int = 5,
@@ -422,17 +434,9 @@ def ivf_topk(df: DataFrame, queries: DataFrame, k: int = 5,
     joined = with_bucket.join(qv, "cluster").filter(
         F.col(id_col) != F.col("query_id")
     ).dropDuplicates([id_col, "query_id"])
-    sim = F.try_divide(
-        F.aggregate(
-            F.zip_with(vec_col, "qvec", lambda a, b: a * b),
-            F.lit(0.0), lambda acc, x: acc + x,
-        ),
-        F.sqrt(F.aggregate(vec_col, F.lit(0.0), lambda a, x: a + x * x))
-        * F.sqrt(F.aggregate("qvec", F.lit(0.0), lambda a, x: a + x * x)),
-    )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc(id_col))
     return (
-        joined.withColumn("cos", sim)
+        joined.withColumn("cos", _cosine(vec_col, "qvec"))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", F.col(id_col).alias("neighbor_id"), "rank")
@@ -465,17 +469,9 @@ def ann_lsh_topk(df: DataFrame, queries: DataFrame, k: int = 5,
     joined = with_bucket.join(qv, "bucket").filter(
         F.col(id_col) != F.col("query_id")
     )
-    sim = F.try_divide(
-        F.aggregate(
-            F.zip_with(vec_col, "qvec", lambda a, b: a * b),
-            F.lit(0.0), lambda acc, x: acc + x,
-        ),
-        F.sqrt(F.aggregate(vec_col, F.lit(0.0), lambda a, x: a + x * x))
-        * F.sqrt(F.aggregate("qvec", F.lit(0.0), lambda a, x: a + x * x)),
-    )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc(id_col))
     return (
-        joined.withColumn("cos", sim)
+        joined.withColumn("cos", _cosine(vec_col, "qvec"))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", F.col(id_col).alias("neighbor_id"), "rank")

@@ -1,11 +1,13 @@
 """Text analysis for training-data pipelines: language-ID, quality scoring,
 token counting, document fingerprinting.
 
-Everything except the rolling fingerprint is pure Spark SQL expressions (stays
+Everything except the byte fingerprints is pure Spark SQL expressions (stays
 inside whole-stage codegen, no Python in the hot path) and is deliberately
 restricted to constructs DuckDB evaluates identically, so the driver's oracle
-gate checks them exactly. The rolling fingerprint needs stateful per-char math
--> vectorized numpy via mapInArrow.
+gate checks them exactly. The winnowing and rolling fingerprints need the
+Karp–Rabin hash of every byte window -> vectorized numpy via mapInArrow,
+coded by the shared window coder (``_windows.byte_kr``) straight from the
+Arrow string buffers.
 """
 
 from __future__ import annotations
@@ -13,6 +15,8 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window, functions as F
+
+from ._windows import _FP_BASE, _FP_MOD, byte_kr, distinct_runs
 
 # tiny per-language stopword profiles (public common words). The synthetic
 # corpus is English-ish; the heuristic is deterministic, not a classifier.
@@ -100,14 +104,6 @@ def doc_md5(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.select("doc_id", F.md5(F.col(text_col)).alias("fingerprint"))
 
 
-# Modulus 2^31-1 (Mersenne prime) keeps every intermediate EXACT in 64-bit
-# integer math on both engines: byte (<2^8) * power (<2^31) < 2^39, and a
-# window-sum of 16 such products < 2^43 — no wraparound, so the same values
-# are reproducible in DuckDB BIGINT arithmetic (the oracle recomputes them).
-_FP_MOD = (1 << 31) - 1
-_FP_BASE = 257
-
-
 def fp_coefficients(window: int) -> list[int]:
     """Karp–Rabin coefficients: coefficient of the byte at window offset i is
     base^(window-1-i) mod p, so hash = sum(byte[i] * coeff[i]) mod p."""
@@ -115,38 +111,6 @@ def fp_coefficients(window: int) -> list[int]:
     for i in range(1, window):
         pw[i] = (pw[i - 1] * _FP_BASE) % _FP_MOD
     return pw[::-1]
-
-
-def _batch_window_hashes(texts, window: int):
-    """Karp–Rabin hash of EVERY ``window``-byte substring for every doc of a
-    batch in one flat vectorized pass (no per-doc Python loop — the
-    ``_batch_distinct_grams`` flat-concat + boundary-mask trick):
-
-    - concatenate all texts into one byte array;
-    - Horner over the window: ``window`` vectorized shifted-view ops, each
-      with an intermediate < (p-1)*257 + 255 < 2^40 (exact in int64; equal to
-      the coefficient dot product mod p, which the SQL oracle recomputes);
-    - a window starting at flat position j belongs to doc d(j) and is valid
-      iff it does not cross d's end.
-
-    Returns (acc, doc): hashes of valid windows grouped by doc in flat
-    (= per-doc position) order, and the doc row-index of each hash. Docs
-    shorter than ``window`` emit nothing."""
-    enc = [(t or "").encode("utf-8") for t in texts]
-    lens = np.array([len(e) for e in enc], dtype=np.int64)
-    total = int(lens.sum())
-    if total < window:
-        return np.empty(0, np.int64), np.empty(0, np.int64)
-    flat = np.frombuffer(b"".join(enc), dtype=np.uint8).astype(np.int64)
-    n_win = total - window + 1
-    acc = np.zeros(n_win, dtype=np.int64)
-    for i in range(window):
-        acc = (acc * _FP_BASE + flat[i:i + n_win]) % _FP_MOD
-    ends = np.cumsum(lens)
-    pos = np.arange(n_win, dtype=np.int64)
-    doc = np.repeat(np.arange(len(enc), dtype=np.int64), lens)[:n_win]
-    valid = pos + window <= ends[doc]
-    return acc[valid], doc[valid]
 
 
 def winnow_fingerprints(df: DataFrame, text_col: str = "text",
@@ -165,32 +129,28 @@ def winnow_fingerprints(df: DataFrame, text_col: str = "text",
     Docs shorter than window + w - 1 bytes emit no rows.
 
     Batch-vectorized end-to-end (no per-doc Python loop): one flat
-    Karp–Rabin pass for the whole batch (``_batch_window_hashes``), one
-    global sliding-min whose cross-doc windows are masked out, one lexsort
-    for the per-doc distinct — O(batch) numpy ops regardless of doc count."""
+    Karp–Rabin pass over the batch's Arrow string buffers
+    (``_windows.byte_kr``), one global sliding-min whose cross-doc windows
+    are masked out, one lexsort for the per-doc distinct — O(batch) numpy
+    ops regardless of doc count."""
 
     def _win(batches):
         for b in batches:
-            texts = b.column(1).to_pylist()
             ids = np.asarray(b.column(0).to_numpy(zero_copy_only=False),
                              dtype=np.int64)
-            acc, doc = _batch_window_hashes(texts, window)
+            acc, doc = byte_kr(b.column(1), window)
             if acc.size < w:
                 continue
             mins = np.lib.stride_tricks.sliding_window_view(acc, w).min(axis=1)
             # hashes are stored per doc contiguously in position order, so a
             # min-window is inside one doc iff its first and last hash agree
             ok = doc[:mins.size] == doc[w - 1:]
-            mins, mdoc = mins[ok], doc[:mins.size][ok]
+            mins, starts, rows = distinct_runs(mins[ok], doc[:mins.size][ok])
             if mins.size == 0:
                 continue
-            order = np.lexsort((mins, mdoc))
-            mdoc, mins = mdoc[order], mins[order]
-            keep_mask = np.r_[True, (mdoc[1:] != mdoc[:-1])
-                              | (mins[1:] != mins[:-1])]
-            mdoc, mins = mdoc[keep_mask], mins[keep_mask]
+            counts = np.diff(np.r_[starts, mins.size])
             yield pa.RecordBatch.from_arrays(
-                [pa.array(ids[mdoc]), pa.array(mins)],
+                [pa.array(ids[np.repeat(rows, counts)]), pa.array(mins)],
                 names=["doc_id", "fingerprint"],
             )
 
@@ -212,28 +172,22 @@ def rolling_fingerprints(df: DataFrame, text_col: str = "text",
     oracle-checkable via the same polynomial recomputed in SQL; see
     plans/pipeline_catalog.py). Docs shorter than ``window`` emit no rows.
 
-    Batch-vectorized end-to-end: one flat Karp–Rabin pass for the whole
-    batch, one lexsort for per-doc distinct+sort, ranks from run offsets —
-    O(batch) numpy ops regardless of doc count."""
+    Batch-vectorized end-to-end: one flat Karp–Rabin pass over the batch's
+    Arrow string buffers, one lexsort for per-doc distinct+sort, ranks from
+    run offsets — O(batch) numpy ops regardless of doc count."""
 
     def _fp(batches):
         for b in batches:
-            texts = b.column(1).to_pylist()
             ids = np.asarray(b.column(0).to_numpy(zero_copy_only=False),
                              dtype=np.int64)
-            acc, doc = _batch_window_hashes(texts, window)
-            if acc.size == 0:
+            a, starts, rows = distinct_runs(*byte_kr(b.column(1), window))
+            if a.size == 0:
                 continue
-            order = np.lexsort((acc, doc))
-            d, a = doc[order], acc[order]
-            keep_mask = np.r_[True, (d[1:] != d[:-1]) | (a[1:] != a[:-1])]
-            d, a = d[keep_mask], a[keep_mask]
-            starts = np.r_[0, np.flatnonzero(d[1:] != d[:-1]) + 1]
-            run_start = np.repeat(starts, np.diff(np.r_[starts, d.size]))
-            rank = np.arange(d.size, dtype=np.int64) - run_start
+            counts = np.diff(np.r_[starts, a.size])
+            rank = np.arange(a.size, dtype=np.int64) - np.repeat(starts, counts)
             sel = rank < keep
             yield pa.RecordBatch.from_arrays(
-                [pa.array(ids[d[sel]]),
+                [pa.array(ids[np.repeat(rows, counts)[sel]]),
                  pa.array((rank[sel] + 1).astype(np.int32)),
                  pa.array(a[sel])],
                 names=["doc_id", "fp_rank", "fingerprint"],

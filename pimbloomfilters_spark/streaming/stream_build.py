@@ -26,7 +26,8 @@ Shapes:
    ``windowed_quantiles_stream`` — one runner (``_window_stream``): per
    event-time window (tumbling or sliding) an HLL / Misra–Gries / KLL of
    the non-NULL values is GroupState of applyInPandasWithState;
-   EventTimeTimeout evicts window state once the watermark passes.
+   EventTimeTimeout evicts window state once the watermark passes, and rows
+   of a window already behind the watermark are dropped as late.
 
 4. ``session_stream`` — gap-based sessionization as per-user GroupState:
    closed sessions emit on in-batch gaps or via EventTimeTimeout when the
@@ -417,7 +418,10 @@ def _window_stream(stream_df: DataFrame, ts_col: str, value, window: str,
     ``emit(window_start, sketch, n_rows)``, a dict of output columns (update
     mode: the window's current estimate). Window state is evicted via
     EventTimeTimeout once the watermark passes window_end + watermark, so
-    the state store stays bounded on a long-running stream."""
+    the state store stays bounded on a long-running stream. Late rows are
+    dropped: Spark drops rows behind the previous batch's watermark, and
+    rows of a window whose window_end + watermark the current watermark
+    has reached are dropped here (no state, no row)."""
     window_ms = _duration_ms(window)
     watermark_ms = _duration_ms(watermark)
     with_window = (
@@ -436,10 +440,16 @@ def _window_stream(stream_df: DataFrame, ts_col: str, value, window: str,
     )
 
     def _update(key, pdfs, state: GroupState):
-        if state.hasTimedOut:  # watermark passed window end: evict
+        (wstart,) = key
+        end_ms = int(pd.Timestamp(wstart).value // 1_000_000) + window_ms
+        # evict on timeout. Spark filters late rows with the previous
+        # batch's watermark, so rows of a window already behind the current
+        # one still arrive here: drop them (no state, no row); their timeout
+        # could not be set below the watermark anyway
+        if (state.hasTimedOut
+                or end_ms + watermark_ms <= state.getCurrentWatermarkMs()):
             state.remove()
             return
-        (wstart,) = key
         if state.exists:
             blob, n = state.get
             sk = sketch_from_bytes(bytes(blob))
@@ -450,7 +460,6 @@ def _window_stream(stream_df: DataFrame, ts_col: str, value, window: str,
             sk.insert_bulk(vals)
             n += len(vals)
         state.update((sk.to_bytes(), n))
-        end_ms = int(pd.Timestamp(wstart).value // 1_000_000) + window_ms
         state.setTimeoutTimestamp(end_ms + watermark_ms)
         yield pd.DataFrame(emit(wstart, sk, n))
 
@@ -476,9 +485,10 @@ def windowed_distinct_stream(
     hll_p: int = 12,
 ) -> DataFrame:
     """Per-event-time-window streaming distinct-count (HLL) via
-    applyInPandasWithState. Late data beyond the watermark is dropped by
-    Spark; window state IS evicted via EventTimeTimeout once the watermark
-    passes window_end + watermark, so the state store stays bounded on a
+    applyInPandasWithState. Rows of a window whose window_end + watermark
+    the watermark has reached are late and dropped (no state, no row);
+    window state IS evicted via EventTimeTimeout once the watermark passes
+    window_end + watermark, so the state store stays bounded on a
     long-running stream. NULL keys are no distinct value."""
     from ..sketches import HyperLogLog
 
@@ -510,8 +520,9 @@ def windowed_heavy_hitters_stream(
     summary held as GroupState: each update emits the window's current top
     items with their (one-sided under-) estimates; any item whose true count
     exceeds n/(k+1) is guaranteed present. State is evicted once the
-    watermark passes window_end + watermark (EventTimeTimeout), same
-    discipline as ``windowed_distinct_stream``. NULL keys are no item."""
+    watermark passes window_end + watermark (EventTimeTimeout) and late
+    rows are dropped, same discipline as ``windowed_distinct_stream``. NULL
+    keys are no item."""
     from ..sketches import MisraGries
 
     def _emit(wstart, mg, n):
@@ -542,8 +553,9 @@ def windowed_quantiles_stream(
     held as GroupState — completes the streaming trio next to distinct (HLL)
     and heavy hitters (Misra–Gries). Window state is evicted once the
     watermark passes window_end + watermark (EventTimeTimeout), so the state
-    store stays bounded; each update re-emits the window's current estimates
-    (update mode). Estimates carry KLL's O(1/k) normalized rank error. NULL,
+    store stays bounded, and late rows are dropped as in
+    ``windowed_distinct_stream``; each update re-emits the window's current
+    estimates (update mode). Estimates carry KLL's O(1/k) normalized rank error. NULL,
     NaN and ±inf values are no value and are not counted in n_rows."""
     from ..sketches import KLLSketch
 

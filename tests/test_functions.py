@@ -1111,6 +1111,8 @@ def test_kmer_minhash_identical_and_disjoint(spark):
     assert sigs[0] == sigs2[0]  # deterministic
     agree_0_50 = sum(x == y for x, y in zip(sigs[0], sigs[50]))
     assert agree_0_50 <= 5, agree_0_50  # disjoint kmer sets
+    with pytest.raises(ValueError):  # 32-mers would collide in 64 bits
+        kmer_minhash_signatures(a, k=32)
 
 
 def test_dedup_exact_by_hash_matches_default(spark):

@@ -128,21 +128,27 @@ def test_netpbm_roundtrip_property(px):
 @settings(max_examples=60, deadline=None,
           suppress_health_check=[HealthCheck.too_slow])
 @given(texts=st.lists(
-    st.text(alphabet="ab é世", min_size=0, max_size=30),
-    min_size=1, max_size=12))
-def test_batch_distinct_grams_matches_reference(texts):
+    st.one_of(st.none(), st.text(alphabet="ab é世", min_size=0, max_size=30)),
+    min_size=1, max_size=12),
+    offset=st.integers(min_value=0, max_value=3))
+def test_batch_distinct_grams_matches_reference(texts, offset):
     """The flat-array gram extractor (boundary masking, Horner packing,
     lexsort dedup) must agree with a trivially-correct per-doc Python
-    reference for arbitrary (including unicode and empty) texts."""
-    from pimbloomfilters_spark.functions.dedup import _batch_distinct_grams
+    reference for arbitrary (including unicode, empty and NULL) texts, and
+    must honor the slice offset of a ``pa.string()`` array."""
+    import pyarrow as pa
+
+    from pimbloomfilters_spark.functions._windows import char_grams
 
     n = 3
-    packed, starts, doc_idx = _batch_distinct_grams(texts, n)
+    offset = min(offset, len(texts) - 1)
+    sliced = pa.array(texts, type=pa.string()).slice(offset)
+    packed, starts, doc_idx = char_grams(sliced, n)
     # reference: per-doc set of base-256 packed byte windows (a bijection
     # gram <-> uint64 for n <= 8, which the minhash verify stage relies on)
     expect = {}
-    for i, t in enumerate(texts):
-        raw = t.encode("utf-8", "ignore")
+    for i, t in enumerate(texts[offset:]):
+        raw = (t or "").encode("utf-8", "ignore")
         s = set()
         for p in range(len(raw) - n + 1):
             v = 0
@@ -156,6 +162,108 @@ def test_batch_distinct_grams_matches_reference(texts):
     for j, d in enumerate(doc_idx):
         got[int(d)] = set(int(x) for x in packed[bounds[j]:bounds[j + 1]])
     assert got == expect
+    assert packed.dtype == np.uint64 and doc_idx.dtype == np.int64
+
+
+@settings(max_examples=60, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(texts=st.lists(
+    st.one_of(st.none(), st.text(alphabet="ab é世", min_size=0, max_size=30)),
+    min_size=1, max_size=12),
+    window=st.integers(min_value=1, max_value=6),
+    offset=st.integers(min_value=0, max_value=3))
+def test_byte_window_hashes_match_reference(texts, window, offset):
+    """The byte Karp-Rabin window coder behind ``winnow_fingerprints`` and
+    ``rolling_fingerprints`` emits every ``window``-byte window of every row
+    in row-then-position order, with the code a per-row Python Horner
+    reference computes, for unicode, empty, NULL and sliced string rows."""
+    import pyarrow as pa
+
+    from pimbloomfilters_spark.functions._windows import byte_kr
+    from pimbloomfilters_spark.functions.text import _FP_BASE, _FP_MOD
+
+    offset = min(offset, len(texts) - 1)
+    sliced = pa.array(texts, type=pa.string()).slice(offset)
+    acc, doc = byte_kr(sliced, window)
+    expect = []
+    for i, t in enumerate(texts[offset:]):
+        raw = (t or "").encode("utf-8")
+        for p in range(len(raw) - window + 1):
+            v = 0
+            for b in raw[p:p + window]:
+                v = (v * _FP_BASE + b) % _FP_MOD
+            expect.append((i, v))
+    assert list(zip(doc.tolist(), acc.tolist())) == expect
+    assert acc.dtype == np.int64 and doc.dtype == np.int64
+
+
+def test_window_coder_empties_null_rows():
+    """A NULL row is empty even when its offsets still span bytes or list
+    values (Arrow allows it): no window of a NULL row is coded."""
+    import pyarrow as pa
+
+    from pimbloomfilters_spark.functions._windows import char_grams, token_kr
+
+    valid = pa.py_buffer(np.packbits([1, 0, 1], bitorder="little").tobytes())
+    offs = pa.py_buffer(np.array([0, 3, 6, 9], np.int32).tobytes())
+    strs = pa.StringArray.from_buffers(3, offs, pa.py_buffer(b"abcxyzabd"),
+                                       valid)
+    codes, starts, rows = char_grams(strs, 3)
+    assert rows.tolist() == [0, 2]
+    assert codes.tolist() == [int.from_bytes(g, "big") for g in (b"abc", b"abd")]
+    lists = pa.ListArray.from_buffers(
+        pa.list_(pa.int64()), 3, [valid, offs],
+        children=[pa.array(np.arange(9, dtype=np.int64))])
+    codes, pos, rows = token_kr(lists, 3)
+    assert rows.tolist() == [0, 2] and pos.tolist() == [1, 1]
+
+
+def _kmer_reference(seq, k, canonical):
+    """Distinct 2-bit k-mer codes of one sequence, window by window; a
+    window with any character outside ACGT has no code."""
+    code = {"A": 0, "C": 1, "G": 2, "T": 3}
+    out = set()
+    for p in range(len(seq or "") - k + 1):
+        w = seq[p:p + k]
+        if any(c not in code for c in w):
+            continue
+        fwd = rc = 0
+        for c in w:
+            fwd = fwd * 4 + code[c]
+        for c in reversed(w):
+            rc = rc * 4 + 3 - code[c]
+        out.add(min(fwd, rc) if canonical else fwd)
+    return out
+
+
+@settings(max_examples=80, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(seqs=st.lists(
+    st.one_of(st.none(), st.text(alphabet="ACGTACGTNacgX é世", min_size=0,
+                                 max_size=40)),
+    min_size=1, max_size=10),
+    k=st.integers(min_value=1, max_value=12),
+    canonical=st.booleans(),
+    offset=st.integers(min_value=0, max_value=3))
+def test_kmers_match_reference(seqs, k, canonical, offset):
+    """The k-mer coder (2-bit packing, non-ACGT window drop, reverse-
+    complement min, per-row distinct) agrees with a per-row Python
+    reference over N, lowercase and other non-ACGT bytes, non-ASCII
+    characters, NULL rows and sliced arrays."""
+    import pyarrow as pa
+
+    from pimbloomfilters_spark.functions._windows import kmers
+
+    offset = min(offset, len(seqs) - 1)
+    sliced = pa.array(seqs, type=pa.string()).slice(offset)
+    packed, starts, rows = kmers(sliced, k, canonical)
+    expect = {i: sorted(s) for i, seq in enumerate(seqs[offset:])
+              if (s := _kmer_reference(seq, k, canonical))}
+    bounds = list(starts) + [len(packed)]
+    got = {int(r): [int(x) for x in packed[bounds[j]:bounds[j + 1]]]
+           for j, r in enumerate(rows)}
+    assert got == expect
+    assert packed.dtype == np.uint64 and rows.dtype == np.int64
 
 
 @settings(max_examples=40, deadline=None)
@@ -216,11 +324,11 @@ def test_batch_distinct_list_shingles_matches_reference(rows, shingle):
     import numpy as np
     import pyarrow as pa
 
-    from pimbloomfilters_spark.functions.dedup import _batch_distinct_list_shingles
+    from pimbloomfilters_spark.functions._windows import token_shingles
 
     arr = pa.array(rows, type=pa.list_(pa.int64()))
     for sliced in (arr, arr.slice(1) if len(rows) > 1 else arr):
-        packed, starts, doc_idx = _batch_distinct_list_shingles(sliced, shingle)
+        packed, starts, doc_idx = token_shingles(sliced, shingle)
         offset = len(rows) - len(sliced)
         expect = {}
         for i in range(len(sliced)):
@@ -340,11 +448,10 @@ def test_token_ngram_codes_match_reference(rows, n):
     arbitrary token arrays including empty and shorter-than-n rows."""
     import pyarrow as pa
 
-    from pimbloomfilters_spark.functions.dedup import (
-        _batch_distinct_token_ngram_codes)
+    from pimbloomfilters_spark.functions._windows import distinct_token_kr
 
     col = pa.array(rows, type=pa.list_(pa.int64()))
-    codes, starts, doc_idx = _batch_distinct_token_ngram_codes(col, n)
+    codes, starts, doc_idx = distinct_token_kr(col, n)
     P, B = (1 << 31) - 1, 257
     expect = {}
     for i, toks in enumerate(rows):
@@ -375,15 +482,14 @@ def test_token_ngram_codes_sliced_batch(rows, offset):
     equivalent."""
     import pyarrow as pa
 
-    from pimbloomfilters_spark.functions.dedup import (
-        _batch_distinct_token_ngram_codes)
+    from pimbloomfilters_spark.functions._windows import distinct_token_kr
 
     offset = min(offset, len(rows) - 1)
     full = pa.array(rows, type=pa.list_(pa.int64()))
     sliced = full.slice(offset)
     plain = pa.array(rows[offset:], type=pa.list_(pa.int64()))
-    a = _batch_distinct_token_ngram_codes(sliced, 3)
-    b = _batch_distinct_token_ngram_codes(plain, 3)
+    a = distinct_token_kr(sliced, 3)
+    b = distinct_token_kr(plain, 3)
     assert [x.tolist() for x in a] == [x.tolist() for x in b]
 
 
@@ -398,8 +504,7 @@ def test_token_ngram_pos_codes_sliced_batch(rows, offset):
     (pos, code) stream must agree with a per-row Python reference."""
     import pyarrow as pa
 
-    from pimbloomfilters_spark.functions.dedup import (
-        _batch_token_ngram_pos_codes)
+    from pimbloomfilters_spark.functions._windows import token_kr
     from pimbloomfilters_spark.functions.text import _FP_BASE, _FP_MOD
 
     n = 3
@@ -407,8 +512,8 @@ def test_token_ngram_pos_codes_sliced_batch(rows, offset):
     full = pa.array(rows, type=pa.list_(pa.int64()))
     sliced = full.slice(offset)
     plain = pa.array(rows[offset:], type=pa.list_(pa.int64()))
-    a = _batch_token_ngram_pos_codes(sliced, n)
-    b = _batch_token_ngram_pos_codes(plain, n)
+    a = token_kr(sliced, n)
+    b = token_kr(plain, n)
     assert [x.tolist() for x in a] == [x.tolist() for x in b]
     # reference: every window of every row, 1-based positions
     expect = []

@@ -880,6 +880,52 @@ def test_windowed_streams_drop_null_keys(spark, tmp_path_factory):
                                           kll.quantile(0.95))
 
 
+def test_windowed_streams_drop_rows_behind_the_watermark(spark, tmp_path):
+    """Out-of-order input across micro-batches: three files whose rows are
+    spread over the same three hours, one file per trigger. Once the first
+    batch moves the watermark, rows of the next files whose window closed
+    behind it are late; they are dropped (no state, no row) and all three
+    windowed streams run to the end instead of failing on a timeout set
+    below the watermark."""
+    from pimbloomfilters_spark.streaming import (
+        windowed_distinct_stream, windowed_heavy_hitters_stream,
+        windowed_quantiles_stream)
+
+    data_dir = str(tmp_path / "in")
+    rng = np.random.default_rng(7)
+    schema = "ts string, user_id long, v double"
+    for f in range(3):
+        secs = rng.integers(0, 3 * 3600, 400)
+        rows = [(f"2024-01-01 {10 + s // 3600:02d}:{s // 60 % 60:02d}:"
+                 f"{s % 60:02d}", int(rng.integers(0, 20)), float(s % 97))
+                for s in secs]
+        spark.createDataFrame(rows, schema).coalesce(1) \
+            .write.mode("append").parquet(data_dir)
+
+    def _drain(out, sink):
+        q = (out.writeStream.format("memory").queryName(sink)
+             .outputMode("update").trigger(availableNow=True).start())
+        q.awaitTermination(180)
+        assert q.exception() is None
+        return spark.sql(f"select * from {sink}").collect()
+
+    def _stream():
+        return (spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", 1).parquet(data_dir))
+
+    kw = dict(window="30 minutes", watermark="1 hour")
+    hh = _drain(windowed_heavy_hitters_stream(
+        _stream(), "ts", "user_id", **kw), "late_hh")
+    hll = _drain(windowed_distinct_stream(
+        _stream(), "ts", "user_id", **kw), "late_hll")
+    qt = _drain(windowed_quantiles_stream(_stream(), "ts", "v", **kw),
+                "late_qt")
+    for out in (hh, hll, qt):
+        assert out
+        # a window's count never exceeds its rows over all three files
+        assert max(r["n_rows"] for r in out) <= 3 * 400
+
+
 def test_sharded_dedup_stream_state_is_batch_build(spark, tmp_path):
     """Two micro-batches through sharded_dedup_stream (no TTL) emit exactly
     the distinct non-NULL keys — NULLs dropped, 2^60 and 2^60+1 kept apart
