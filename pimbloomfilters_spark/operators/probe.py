@@ -16,6 +16,13 @@ broadcast-bound). An added file is fetched once per executor, hits the OS
 page cache for every worker on the node, and deserializes in milliseconds;
 on a real cluster it is distributed exactly like ``--files``. Workers cache
 the deserialized sketch keyed by a driver-assigned token.
+
+Python tasks: ``probe_array_column`` and ``probe_count`` coalesce their
+input to ``task_slots(df)`` partitions, one Python task per core slot
+(``coalesce`` merges adjacent partitions, so rows keep their order);
+``probe_count`` then sums those few partial rows on the driver, in one
+stage with no exchange. ``probe_key_column`` and ``probe_keys`` keep the
+caller's partitioning (the runtime-filter join plan is pinned in tests).
 """
 
 from __future__ import annotations
@@ -27,7 +34,7 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from ..sketches import Sketch, sketch_from_bytes
-from .build import task_slots
+from .build import collect_rows, task_slots
 
 _WORKER_CACHE: dict[str, Sketch] = {}
 # (applicationId, name) pairs already registered via addFile — a sketch is
@@ -136,7 +143,9 @@ def probe_array_column(df: DataFrame, sketch: Sketch, tokens_col: str,
     arrow_udf: values flatten zero-copy off the Arrow list buffers (the
     old pandas path looped Python objects per row), one contains_bulk
     over the whole batch, and the result re-wraps with rebuilt offsets
-    (NULL rows come back as empty lists, as before)."""
+    (NULL rows come back as empty lists, as before). The input is coalesced
+    to ``task_slots(df)`` partitions: ``coalesce`` only merges adjacent
+    partitions, so the rows and their order are the caller's."""
     import pyarrow as pa
 
     name = ship_sketch(df.sparkSession, sketch)
@@ -158,7 +167,7 @@ def probe_array_column(df: DataFrame, sketch: Sketch, tokens_col: str,
         return pa.ListArray.from_arrays(
             pa.array(offsets, type=pa.int32()), hits)
 
-    return df.withColumn(
+    return df.coalesce(task_slots(df)).withColumn(
         out_col, _scalar_arrow_udf(_probe, "array<boolean>")(F.col(tokens_col)))
 
 
@@ -197,10 +206,9 @@ def probe_count(df: DataFrame, sketch: Sketch, key_col: str) -> tuple[int, int]:
     transfer, ``src/dpu/bloom_filters_dpu.cpp:224-246``; here we go further
     and ship only the partial sums). The input is coalesced to
     ``task_slots(df)`` partitions, so one Python task per core slot sums
-    its share; the row-aligned probes above keep the caller's
-    partitioning instead, since they return the caller's rows."""
+    its share, and the driver adds up those few rows: one stage, no
+    exchange."""
     import pyarrow as pa
-    from pyspark.sql import functions as F
 
     name = ship_sketch(df.sparkSession, sketch)
 
@@ -221,12 +229,9 @@ def probe_count(df: DataFrame, sketch: Sketch, key_col: str) -> tuple[int, int]:
             names=["n", "hits"],
         )
 
-    row = (
-        df.select(key_col).coalesce(task_slots(df))
-        .mapInArrow(_count, "n long, hits long")
-        .agg(F.sum("n"), F.sum("hits")).collect()[0]
-    )
-    return int(row[0] or 0), int(row[1] or 0)
+    rows = collect_rows(df.select(key_col).coalesce(task_slots(df))
+                        .mapInArrow(_count, "n long, hits long"))
+    return sum(r["n"] for r in rows), sum(r["hits"] for r in rows)
 
 
 def register_sql_functions(spark, sketch: Sketch,

@@ -7,8 +7,11 @@ never under-estimates (one-sided error, asserted in tests against exact
 ``groupBy(token).count()``).
 
 Update: d row-hashes per key via xxhash double hashing (one (h1,h2) pair
-expands to d indexes — Kirsch–Mitzenmacher applies to CMS rows too), counts
-bumped with ``np.add.at``. Merge = element-wise add (exactly assoc/comm).
+expands to d indexes — Kirsch–Mitzenmacher applies to CMS rows too). An
+insert hashes each distinct value of its batch once
+(``np.unique(..., return_counts=True)``) and adds its count with
+``np.add.at``: integer add ignores order and repeats, so the table equals
+one update per occurrence. Merge = element-wise add (exactly assoc/comm).
 
 Spark's built-in ``count_min_sketch`` aggregate is the test oracle only.
 """
@@ -51,10 +54,14 @@ class CountMinSketch(Sketch):
 
     def insert_bulk(self, values: np.ndarray) -> None:
         values = np.asarray(values)
-        for lo in range(0, values.size, self._CHUNK):
-            idx = self._indexes(values[lo:lo + self._CHUNK])
+        # integer add is order-free: hash each distinct value once and add
+        # its count
+        uniq, counts = np.unique(values, return_counts=True)
+        for lo in range(0, uniq.size, self._CHUNK):
+            idx = self._indexes(uniq[lo:lo + self._CHUNK])
+            cnt = counts[lo:lo + self._CHUNK]
             for d in range(self.depth):  # d tiny (<=10); inner op vectorized
-                np.add.at(self._table[d], idx[d], 1)
+                np.add.at(self._table[d], idx[d], cnt)
         self.total += int(values.size)
 
     def query_bulk(self, values: np.ndarray) -> np.ndarray:

@@ -11,9 +11,12 @@ the oracle gate assert (with F2 computed exactly).
 
 Hashing: row indexes from the same Kirsch–Mitzenmacher double-hash stream
 as CMS; row signs from an INDEPENDENT double-hash stream (seed offset by a
-fixed odd constant), lowest bit mapped to ±1. Merge = element-wise table
-add — exactly associative/commutative, the property every build path here
-relies on (reference analogue: the mergeable partials replacing
+fixed odd constant), lowest bit mapped to ±1. An insert hashes each
+distinct value of its batch once and adds ``sign * count`` (integer add
+ignores order and repeats, so the table equals one update per
+occurrence). Merge = element-wise table add — exactly
+associative/commutative, the property every build path here relies on
+(reference analogue: the mergeable partials replacing
 ``src/pim_bloom_filter.cpp``'s bucket dispatch).
 """
 
@@ -59,8 +62,12 @@ class CountSketch(Sketch):
 
     def insert_bulk(self, values: np.ndarray) -> None:
         values = np.asarray(values)
-        for lo in range(0, values.size, self._CHUNK):
-            idx, sign = self._indexes_signs(values[lo:lo + self._CHUNK])
+        # integer add is order-free: hash each distinct value once and add
+        # sign * its count
+        uniq, counts = np.unique(values, return_counts=True)
+        for lo in range(0, uniq.size, self._CHUNK):
+            idx, sign = self._indexes_signs(uniq[lo:lo + self._CHUNK])
+            sign *= counts[lo:lo + self._CHUNK]
             for d in range(self.depth):  # d tiny; inner op vectorized
                 np.add.at(self._table[d], idx[d], sign[d])
         self.total += int(values.size)

@@ -8,7 +8,10 @@ correction. Relative standard error ≈ 1.04/sqrt(2**p).
 
 Register update is the lane-wise max of rho values; ``merge`` is lane-wise max
 of registers — exactly associative/commutative, so partition order never
-changes the result (tested by permuted-partition equality).
+changes the result (tested by permuted-partition equality). Max is also
+idempotent, so an insert hashes each distinct value of its batch once
+(``np.unique`` first). rho's leading-zero count comes from the ``np.frexp``
+exponent of one 32-bit half of the hash suffix, exact in float64.
 
 Oracle in tests: Spark's own ``approx_count_distinct`` (HLL++) and exact
 ``countDistinct`` at small scale — used for validation only, never as the
@@ -36,16 +39,13 @@ def _alpha(m: int) -> float:
 
 
 def _bit_length_u64(w: np.ndarray) -> np.ndarray:
-    """Exact vectorized bit_length for uint64 (no float rounding traps)."""
-    bl = np.zeros(w.shape, dtype=np.uint64)
-    v = w.copy()
-    for shift in (32, 16, 8, 4, 2, 1):
-        s = np.uint64(shift)
-        big = v >= (np.uint64(1) << s)
-        bl[big] += s
-        v[big] >>= s
-    bl[w > 0] += np.uint64(1)
-    return bl
+    """Exact bit_length of each uint64, as int64: the ``np.frexp`` exponent
+    of its high 32-bit half (plus 32) or, when that is zero, of its low
+    half. Both halves are below 2^53, so their float64 values are exact."""
+    hi = (w >> np.uint64(32)).astype(np.float64)
+    top = hi > 0
+    half = np.where(top, hi, (w & np.uint64(0xFFFFFFFF)).astype(np.float64))
+    return np.frexp(half)[1] + np.where(top, 32, 0)
 
 
 @register(2)
@@ -61,14 +61,14 @@ class HyperLogLog(Sketch):
         self._regs = np.zeros(self.m, dtype=np.uint8)
 
     def insert_bulk(self, values: np.ndarray) -> None:
-        values = np.asarray(values)
+        values = np.unique(values)  # max is idempotent: hash each value once
         if values.size == 0:
             return
         h = xxh64_u64(values, self.seed)
         idx = (h >> np.uint64(64 - self.p)).astype(np.int64)
         w = (h << np.uint64(self.p)) >> np.uint64(self.p)  # low 64-p bits
         # rho = leading-zero count within the (64-p)-bit suffix, + 1
-        rho = (np.uint64(64 - self.p) - _bit_length_u64(w) + np.uint64(1)).astype(np.uint8)
+        rho = (64 - self.p + 1 - _bit_length_u64(w)).astype(np.uint8)
         np.maximum.at(self._regs, idx, rho)
 
     def estimate(self) -> float:

@@ -51,7 +51,7 @@ class ThetaSketch(Sketch):
 
     # -- build -----------------------------------------------------------------
     def insert_bulk(self, values: np.ndarray) -> None:
-        values = np.asarray(values)
+        values = np.unique(values)  # a retained set: hash each value once
         if values.size == 0:
             return
         h = xxh64_u64(values, self.seed)

@@ -567,3 +567,35 @@ def test_probe_paths_null_and_large_key_safety(spark):
     n, hits = probe_count(fine, bf, "id")
     assert (n, hits) == probe_count(one, bf, "id")
     assert n == 20_000 - len(range(0, 20_000, 7)) and hits >= n // 2
+
+
+def test_probe_array_column_coalesced_keeps_rows_and_order(spark):
+    """probe_array_column coalesces to the task slots: an input split 3x
+    finer than the slots, NULL rows and NULL elements included, returns
+    the rows of one partition in the same order. probe_count of an empty
+    input is (0, 0)."""
+    import functools
+
+    from pimbloomfilters_spark.operators import build_sketch
+    from pimbloomfilters_spark.operators.build import task_slots
+    from pimbloomfilters_spark.operators.probe import (probe_array_column,
+                                                      probe_count)
+    from pimbloomfilters_spark.sketches import make_sketch
+
+    bf, _ = build_sketch(spark.range(0, 6_000, 3), "id",
+                         functools.partial(make_sketch, "bloom", size2=16,
+                                           nb_hash=4))
+    toks = ("CASE WHEN id % 11 = 0 THEN NULL "
+            "WHEN id % 13 = 0 THEN array(id, NULL) "
+            "ELSE sequence(id, id + id % 5) END AS toks")
+    one = spark.range(0, 3_000, numPartitions=1).selectExpr("id", toks)
+    slots = task_slots(one)
+    fine = spark.range(0, 3_000, numPartitions=3 * slots).selectExpr("id", toks)
+    probed = probe_array_column(fine, bf, "toks")
+    assert probed.rdd.getNumPartitions() == slots
+    got = [tuple(r) for r in probed.collect()]
+    assert got == [tuple(r) for r in probe_array_column(one, bf, "toks").collect()]
+    assert [r[0] for r in got] == list(range(3_000))
+    assert got[11 * 5][2] == [] and got[13][2][1] is None
+    assert probe_count(spark.range(0), bf, "id") == (0, 0)
+    assert probe_count(spark.createDataFrame([], "id long"), bf, "id") == (0, 0)

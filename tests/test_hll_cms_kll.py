@@ -579,3 +579,16 @@ def test_countsketch_f2_estimate():
     distinct.insert_bulk(np.arange(1000, dtype=np.int64))
     # all-distinct stream: F2 == n exactly in expectation, tight in practice
     assert abs(distinct.f2_estimate() - 1000) <= 5 * (2 / 4096) ** 0.5 * 1000
+
+
+def test_hll_bit_length_is_exact():
+    """The frexp bit length equals int.bit_length at 0, 2^64-1 and around
+    every power of two, where a float64 of the whole word would round."""
+    from pimbloomfilters_spark.sketches.hll import _bit_length_u64
+
+    vals = {0, 2**64 - 1}
+    for k in range(64):
+        vals |= {2**k - 1, 2**k, 2**k + 1}
+    vals = sorted(v for v in vals if v < 2**64)
+    got = _bit_length_u64(np.array(vals, dtype=np.uint64))
+    assert got.tolist() == [v.bit_length() for v in vals]

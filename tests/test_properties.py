@@ -543,3 +543,189 @@ def test_exact_int_sum_matches_python(vals):
         return
     assert _exact_int_sum(v) == sum(int(x) for x in vals)
     assert _exact_int_sum(v, squares=True) == sum(int(x)**2 for x in vals)
+
+
+# -- distinct-first inserts against the every-occurrence loop -----------------
+# Bloom, HLL and theta insert each distinct value once; CMS and Count Sketch
+# hash each distinct value once and add its count. The oracle below is the
+# loop they replaced: every occurrence hashed and inserted, no dedup. Their
+# state must stay byte-for-byte the same.
+
+def _masked_bit_length(w):
+    """bit_length of each uint64 by six masked halving passes."""
+    bl = np.zeros(w.shape, dtype=np.int64)
+    v = w.copy()
+    for shift in (32, 16, 8, 4, 2, 1):
+        big = v >= (np.uint64(1) << np.uint64(shift))
+        bl[big] += shift
+        v[big] >>= np.uint64(shift)
+    return bl + (w > 0)
+
+
+def _oracle_insert(sk, values):
+    from pimbloomfilters_spark.hashing import xxh64_u64
+    from pimbloomfilters_spark.sketches.bloom import (bloom_positions,
+                                                      scatter_or_bits)
+
+    values = np.asarray(values, dtype=np.int64)
+    if sk.kind == "bloom":
+        scatter_or_bits(sk._words, bloom_positions(
+            values, sk.size2, sk.nb_hash, sk.seed, sk.block_bits))
+    elif sk.kind == "hll":
+        h = xxh64_u64(values, sk.seed)
+        w = (h << np.uint64(sk.p)) >> np.uint64(sk.p)
+        np.maximum.at(sk._regs, (h >> np.uint64(64 - sk.p)).astype(np.int64),
+                      (64 - sk.p + 1 - _masked_bit_length(w)).astype(np.uint8))
+    elif sk.kind == "theta":
+        sk._vals = np.unique(np.concatenate(
+            [sk._vals, xxh64_u64(values, sk.seed)]))[:sk.k]
+    else:
+        if sk.kind == "cms":
+            idx, step = sk._indexes(values), np.ones((sk.depth, values.size),
+                                                     dtype=np.int64)
+        else:
+            idx, step = sk._indexes_signs(values)
+        for d in range(sk.depth):
+            np.add.at(sk._table[d], idx[d], step[d])
+        sk.total += values.size
+
+
+_INSERT_KINDS = {
+    "bloom": st.fixed_dictionaries({"size2": st.integers(3, 22),
+                                    "nb_hash": st.integers(1, 9),
+                                    "blocked": st.booleans()}),
+    "hll": st.fixed_dictionaries({"p": st.integers(4, 18)}),
+    "theta": st.fixed_dictionaries({"k": st.sampled_from([16, 100, 4096])}),
+    "cms": st.fixed_dictionaries({"width": st.integers(1, 5000),
+                                  "depth": st.integers(1, 6)}),
+    "countsketch": st.fixed_dictionaries({"width": st.integers(1, 5000),
+                                          "depth": st.sampled_from([1, 3, 5])}),
+}
+
+
+def _values(shape, n, rng):
+    if shape == "zipf":  # heavy duplicates, both signs
+        return rng.zipf(1.3, n).astype(np.int64) * rng.choice([-1, 1], n)
+    if shape == "negative":
+        return rng.integers(-(2**63), 0, n, dtype=np.int64)
+    if shape == "repeated":
+        return np.full(n, int(rng.integers(-(2**63), 2**63 - 1)), np.int64)
+    return rng.integers(-(2**63), 2**63 - 1, n, dtype=np.int64)
+
+
+@settings(max_examples=120, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(data=st.data(), kind=st.sampled_from(sorted(_INSERT_KINDS)),
+       shape=st.sampled_from(["zipf", "negative", "repeated", "uniform"]),
+       n=st.sampled_from([0, 1, 2, 100, 5000]),
+       chunk=st.sampled_from([None, 1, 7, 64]),
+       seed=st.integers(0, 2**31), calls=st.integers(1, 3))
+def test_distinct_first_insert_matches_every_occurrence(data, kind, shape, n,
+                                                        chunk, seed, calls):
+    """Bloom (blocked and not), HLL, theta, CMS and Count Sketch: inserting
+    Zipf duplicates, negative values, empty input or one repeated value, in
+    one or several calls and over many ``_CHUNK`` slices (``chunk``), gives
+    the bytes of inserting every occurrence."""
+    from pimbloomfilters_spark.sketches import make_sketch
+
+    cfg = data.draw(_INSERT_KINDS[kind])
+    rng = np.random.default_rng(seed)
+    got, want = make_sketch(kind, **cfg), make_sketch(kind, **cfg)
+    if chunk:
+        got._CHUNK = chunk
+    for part in np.array_split(_values(shape, n, rng), calls):
+        got.insert_bulk(part)
+        _oracle_insert(want, part)
+    assert got.to_bytes() == want.to_bytes()
+
+
+def test_distinct_first_insert_longer_than_chunk():
+    """One Zipf batch longer than the real ``_CHUNK`` (2^19 values) gives
+    every kind the bytes of inserting every occurrence."""
+    from pimbloomfilters_spark.sketches import make_sketch
+    from pimbloomfilters_spark.sketches.cms import CountMinSketch as C
+
+    rng = np.random.default_rng(7)
+    values = np.concatenate([_values("zipf", C._CHUNK + 4321, rng),
+                             _values("uniform", C._CHUNK // 2, rng)])
+    rng.shuffle(values)
+    for kind, cfg in [("bloom", dict(size2=22, nb_hash=7)),
+                      ("bloom", dict(size2=20, nb_hash=3, blocked=False)),
+                      ("hll", dict(p=14)), ("theta", dict(k=4096)),
+                      ("cms", dict(eps=1e-3, delta=1e-2)),
+                      ("countsketch", dict(width=4096, depth=5))]:
+        got, want = make_sketch(kind, **cfg), make_sketch(kind, **cfg)
+        got.insert_bulk(values)
+        _oracle_insert(want, values)
+        assert got.to_bytes() == want.to_bytes(), kind
+
+
+# -- distinct_runs: the packed single-key sort against the two-key lexsort ----
+
+def _lexsort_runs(codes, row):
+    if codes.size == 0:
+        return codes, row, row
+    order = np.lexsort((codes, row))
+    row, codes = row[order], codes[order]
+    keep = np.r_[True, (row[1:] != row[:-1]) | (codes[1:] != codes[:-1])]
+    row, codes = row[keep], codes[keep]
+    starts = np.r_[0, np.flatnonzero(row[1:] != row[:-1]) + 1]
+    return codes, starts, row[starts]
+
+
+def _same_runs(a, b):
+    return all(x.dtype == y.dtype and np.array_equal(x, y)
+               for x, y in zip(a, b))
+
+
+@settings(max_examples=80, deadline=None)
+@given(rows=st.lists(st.lists(st.sampled_from(
+    [0, 1, 2, 65, 2**31 - 2, 2**31 - 3]), max_size=12), max_size=8),
+    text=st.lists(st.text(alphabet="ACGTNéÿ", max_size=20),
+                  max_size=8),
+    n=st.integers(1, 8))
+def test_distinct_runs_matches_lexsort(rows, text, n):
+    """Every distinct coder (KR n-grams, token shingles, char grams,
+    k-mers) gives the runs of the two-key lexsort on its own (codes, row),
+    whichever sort ``distinct_runs`` picks, at KR code 2^31-2 and on empty
+    input."""
+    from unittest import mock
+
+    import pyarrow as pa
+
+    from pimbloomfilters_spark.functions import _windows as W
+
+    real = W.distinct_runs
+
+    def checked(codes, row):
+        out = real(codes, row)
+        assert _same_runs(out, _lexsort_runs(codes, row))
+        return out
+
+    toks = pa.array(rows, type=pa.list_(pa.int64()))
+    strs = pa.array(text, type=pa.string())
+    with mock.patch.object(W, "distinct_runs", checked):
+        W.distinct_token_kr(toks, min(n, 4))
+        W.token_shingles(toks, min(n, 2))
+        W.char_grams(strs, n)
+        W.kmers(strs, n, canonical=True)
+        W.kmers(strs, 31)
+
+
+def test_distinct_runs_packing_boundary():
+    """Code and row bits summing to 63 take the packed sort, 64 the
+    lexsort; both equal the lexsort runs, in the codes' own dtype."""
+    from pimbloomfilters_spark.functions._windows import distinct_runs
+
+    top = np.int64(2**62 - 1)  # 62 code bits
+    for max_row in (1, 2):  # + 1 or 2 row bits
+        row = np.array([max_row, 0, max_row, 0, 0], dtype=np.int64)
+        for dt in (np.int64, np.uint64):
+            codes = np.array([top, 5, 0, 5, top], dtype=dt)
+            assert _same_runs(distinct_runs(codes, row),
+                              _lexsort_runs(codes, row))
+    kr = np.array([2**31 - 2, 3, 2**31 - 2, 3], dtype=np.int64)
+    row = np.array([0, 0, 4, 4], dtype=np.int64)
+    assert _same_runs(distinct_runs(kr, row), _lexsort_runs(kr, row))
+    empty = np.empty(0, np.int64)
+    assert _same_runs(distinct_runs(empty, empty), (empty, empty, empty))
