@@ -131,8 +131,8 @@ def winnow_fingerprints(df: DataFrame, text_col: str = "text",
     Batch-vectorized end-to-end (no per-doc Python loop): one flat
     Karp–Rabin pass over the batch's Arrow string buffers
     (``_windows.byte_kr``), one global sliding-min whose cross-doc windows
-    are masked out, one lexsort for the per-doc distinct — O(batch) numpy
-    ops regardless of doc count."""
+    are masked out, one ``distinct_runs`` sort for the per-doc distinct —
+    O(batch) numpy ops regardless of doc count."""
 
     def _win(batches):
         for b in batches:
@@ -173,8 +173,8 @@ def rolling_fingerprints(df: DataFrame, text_col: str = "text",
     plans/pipeline_catalog.py). Docs shorter than ``window`` emit no rows.
 
     Batch-vectorized end-to-end: one flat Karp–Rabin pass over the batch's
-    Arrow string buffers, one lexsort for per-doc distinct+sort, ranks from
-    run offsets — O(batch) numpy ops regardless of doc count."""
+    Arrow string buffers, one ``distinct_runs`` for per-doc distinct+sort,
+    ranks from run offsets — O(batch) numpy ops regardless of doc count."""
 
     def _fp(batches):
         for b in batches:

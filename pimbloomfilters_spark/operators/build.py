@@ -22,18 +22,17 @@ sketch, then emits one partial row per (task, key).
 Tasks <= slots. The reference's sub-filter count is fixed by hardware (16
 tasklets per DPU), not by how the host threads slice the input. Where the
 input partitioning is the caller's (the plain and grouped builds here,
-``probe_count``, ``probe_array_column``), it is coalesced to
-``task_slots(df)`` partitions before the kernel, so one Python task per
-core slot runs it and at most that many partials per key come out.
-Each PySpark Python task pays a fixed start-up cost before the UDF runs.
-Its largest part, the re-read of every zip/jar path importer's directory
-in the worker's ``importlib.invalidate_caches()``, is paid once per worker
-process, not once per task (``_zipdirs``, CPython < 3.12). One task per
-slot still saves task scheduling, Arrow hand-offs and partials to collect
-and fold. ``coalesce`` never adds an Exchange and never raises the
-partition count. The checkpoint and sharded builds choose their own
-width with a ``repartition`` and are not coalesced: that width bounds how
-many sketches one task holds.
+``probe_count``), it is coalesced to ``task_slots(df)`` partitions before
+the kernel, so one Python task per core slot runs it and at most that many
+partials per key come out. Each PySpark Python task pays a fixed start-up
+cost before the UDF runs. Its largest part, the re-read of every zip/jar
+path importer's directory in the worker's ``importlib.invalidate_caches()``,
+is paid once per worker process, not once per task (``_zipdirs``,
+CPython < 3.12). One task per slot still saves task scheduling, Arrow
+hand-offs and partials to collect and fold. ``coalesce`` never adds an
+Exchange and never raises the partition count. The checkpoint and
+sharded builds choose their own width with a ``repartition`` and are not
+coalesced: that width bounds how many sketches one task holds.
 
 The builders differ only in their split: plain (``build_partials``: no
 split, one key, no sort), grouped (dictionary codes of the group columns),

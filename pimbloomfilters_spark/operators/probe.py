@@ -17,12 +17,12 @@ page cache for every worker on the node, and deserializes in milliseconds;
 on a real cluster it is distributed exactly like ``--files``. Workers cache
 the deserialized sketch keyed by a driver-assigned token.
 
-Python tasks: ``probe_array_column`` and ``probe_count`` coalesce their
-input to ``task_slots(df)`` partitions, one Python task per core slot
-(``coalesce`` merges adjacent partitions, so rows keep their order);
-``probe_count`` then sums those few partial rows on the driver, in one
-stage with no exchange. ``probe_key_column`` and ``probe_keys`` keep the
-caller's partitioning (the runtime-filter join plan is pinned in tests).
+Python tasks: ``probe_count`` coalesces its input to ``task_slots(df)``
+partitions, one Python task per core slot, and sums those few partial rows
+on the driver, in one stage with no exchange. The row-aligned probes
+(``probe_key_column``, ``probe_keys``, ``probe_array_column``) return the
+caller's rows and keep the caller's partitioning, so they cap neither the
+upstream stage's parallelism nor the narrow work after them.
 """
 
 from __future__ import annotations
@@ -143,9 +143,7 @@ def probe_array_column(df: DataFrame, sketch: Sketch, tokens_col: str,
     arrow_udf: values flatten zero-copy off the Arrow list buffers (the
     old pandas path looped Python objects per row), one contains_bulk
     over the whole batch, and the result re-wraps with rebuilt offsets
-    (NULL rows come back as empty lists, as before). The input is coalesced
-    to ``task_slots(df)`` partitions: ``coalesce`` only merges adjacent
-    partitions, so the rows and their order are the caller's."""
+    (NULL rows come back as empty lists, as before)."""
     import pyarrow as pa
 
     name = ship_sketch(df.sparkSession, sketch)
@@ -167,7 +165,7 @@ def probe_array_column(df: DataFrame, sketch: Sketch, tokens_col: str,
         return pa.ListArray.from_arrays(
             pa.array(offsets, type=pa.int32()), hits)
 
-    return df.coalesce(task_slots(df)).withColumn(
+    return df.withColumn(
         out_col, _scalar_arrow_udf(_probe, "array<boolean>")(F.col(tokens_col)))
 
 
@@ -207,7 +205,8 @@ def probe_count(df: DataFrame, sketch: Sketch, key_col: str) -> tuple[int, int]:
     and ship only the partial sums). The input is coalesced to
     ``task_slots(df)`` partitions, so one Python task per core slot sums
     its share, and the driver adds up those few rows: one stage, no
-    exchange."""
+    exchange. The row-aligned probes above keep the caller's partitioning
+    instead, since they return the caller's rows."""
     import pyarrow as pa
 
     name = ship_sketch(df.sparkSession, sketch)

@@ -569,11 +569,11 @@ def test_probe_paths_null_and_large_key_safety(spark):
     assert n == 20_000 - len(range(0, 20_000, 7)) and hits >= n // 2
 
 
-def test_probe_array_column_coalesced_keeps_rows_and_order(spark):
-    """probe_array_column coalesces to the task slots: an input split 3x
-    finer than the slots, NULL rows and NULL elements included, returns
-    the rows of one partition in the same order. probe_count of an empty
-    input is (0, 0)."""
+def test_probe_array_column_keeps_partitions_rows_and_order(spark):
+    """probe_array_column keeps the caller's partitioning: an input split
+    3x finer than the slots, NULL rows and NULL elements included, keeps
+    its partitions and returns the rows of one partition in the same
+    order. probe_count of an empty input is (0, 0)."""
     import functools
 
     from pimbloomfilters_spark.operators import build_sketch
@@ -592,7 +592,7 @@ def test_probe_array_column_coalesced_keeps_rows_and_order(spark):
     slots = task_slots(one)
     fine = spark.range(0, 3_000, numPartitions=3 * slots).selectExpr("id", toks)
     probed = probe_array_column(fine, bf, "toks")
-    assert probed.rdd.getNumPartitions() == slots
+    assert probed.rdd.getNumPartitions() == 3 * slots
     got = [tuple(r) for r in probed.collect()]
     assert got == [tuple(r) for r in probe_array_column(one, bf, "toks").collect()]
     assert [r[0] for r in got] == list(range(3_000))

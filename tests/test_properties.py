@@ -639,28 +639,7 @@ def test_distinct_first_insert_matches_every_occurrence(data, kind, shape, n,
     assert got.to_bytes() == want.to_bytes()
 
 
-def test_distinct_first_insert_longer_than_chunk():
-    """One Zipf batch longer than the real ``_CHUNK`` (2^19 values) gives
-    every kind the bytes of inserting every occurrence."""
-    from pimbloomfilters_spark.sketches import make_sketch
-    from pimbloomfilters_spark.sketches.cms import CountMinSketch as C
-
-    rng = np.random.default_rng(7)
-    values = np.concatenate([_values("zipf", C._CHUNK + 4321, rng),
-                             _values("uniform", C._CHUNK // 2, rng)])
-    rng.shuffle(values)
-    for kind, cfg in [("bloom", dict(size2=22, nb_hash=7)),
-                      ("bloom", dict(size2=20, nb_hash=3, blocked=False)),
-                      ("hll", dict(p=14)), ("theta", dict(k=4096)),
-                      ("cms", dict(eps=1e-3, delta=1e-2)),
-                      ("countsketch", dict(width=4096, depth=5))]:
-        got, want = make_sketch(kind, **cfg), make_sketch(kind, **cfg)
-        got.insert_bulk(values)
-        _oracle_insert(want, values)
-        assert got.to_bytes() == want.to_bytes(), kind
-
-
-# -- distinct_runs: the packed single-key sort against the two-key lexsort ----
+# -- distinct_runs: the dense-ranked single-key sort against the two-key lexsort
 
 def _lexsort_runs(codes, row):
     if codes.size == 0:
@@ -687,8 +666,7 @@ def _same_runs(a, b):
 def test_distinct_runs_matches_lexsort(rows, text, n):
     """Every distinct coder (KR n-grams, token shingles, char grams,
     k-mers) gives the runs of the two-key lexsort on its own (codes, row),
-    whichever sort ``distinct_runs`` picks, at KR code 2^31-2 and on empty
-    input."""
+    at KR code 2^31-2 and on empty input."""
     from unittest import mock
 
     import pyarrow as pa
@@ -712,20 +690,25 @@ def test_distinct_runs_matches_lexsort(rows, text, n):
         W.kmers(strs, 31)
 
 
-def test_distinct_runs_packing_boundary():
-    """Code and row bits summing to 63 take the packed sort, 64 the
-    lexsort; both equal the lexsort runs, in the codes' own dtype."""
+def test_distinct_runs_extreme_codes():
+    """Codes at both ends of int64 and uint64, KR code 2^31-2, an int32
+    row array and a (row, rank) key past 2^31 give the lexsort runs, in
+    the inputs' own dtypes; empty input stays empty."""
     from pimbloomfilters_spark.functions._windows import distinct_runs
 
-    top = np.int64(2**62 - 1)  # 62 code bits
-    for max_row in (1, 2):  # + 1 or 2 row bits
-        row = np.array([max_row, 0, max_row, 0, 0], dtype=np.int64)
-        for dt in (np.int64, np.uint64):
-            codes = np.array([top, 5, 0, 5, top], dtype=dt)
+    ends = {np.int64: [-2**63, 2**63 - 1, 0, 5],
+            np.uint64: [2**64 - 1, 2**63, 0, 5]}
+    for dt, (a, b, c, d) in ends.items():
+        codes = np.array([a, d, b, d, a, c, b], dtype=dt)
+        for rdt in (np.int64, np.int32):
+            row = np.array([2, 0, 2, 0, 0, 7, 0], dtype=rdt)
             assert _same_runs(distinct_runs(codes, row),
                               _lexsort_runs(codes, row))
     kr = np.array([2**31 - 2, 3, 2**31 - 2, 3], dtype=np.int64)
     row = np.array([0, 0, 4, 4], dtype=np.int64)
     assert _same_runs(distinct_runs(kr, row), _lexsort_runs(kr, row))
+    codes = np.arange(70_000, dtype=np.int64) % 40_000  # 40k ranks
+    row = np.arange(70_000, dtype=np.int32)[::-1].copy()  # row * 40k > 2^31
+    assert _same_runs(distinct_runs(codes, row), _lexsort_runs(codes, row))
     empty = np.empty(0, np.int64)
     assert _same_runs(distinct_runs(empty, empty), (empty, empty, empty))
