@@ -2,10 +2,9 @@
 pass: code every length-``n`` window of every row of an Arrow batch column
 in a few flat vectorized passes, never per-row Python.
 
-Four pieces, shared by all coders:
+Three pieces, shared by all coders, over the flat (values, offsets) of
+the column (``_arrow.flat``; token coders read ``_arrow.ids``):
 
-- ``flat``: a string or list column as (values, 0-based row offsets),
-  read straight off the Arrow buffers (string bytes, list child values);
 - ``fold``: Horner over the ``n`` shifted views of the flat values, with a
   ``pack(bits)`` step (an exact bijection window <-> uint64 while
   n * bits <= 64) or the ``kr`` step (Karp–Rabin mod 2^31-1, base 257);
@@ -26,6 +25,8 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 
+from .._arrow import flat, ids
+
 # Modulus 2^31-1 (Mersenne prime) keeps every intermediate EXACT in 64-bit
 # integer math on both engines: byte (<2^8) * power (<2^31) < 2^39, and a
 # window-sum of 16 such products < 2^43 — no wraparound, so the same values
@@ -37,30 +38,6 @@ _FP_BASE = 257
 _BASE_MAP = np.full(256, 255, dtype=np.uint8)
 for _b, _c in zip(b"ACGT", range(4)):
     _BASE_MAP[_b] = _c
-
-
-def flat(col: pa.Array):
-    """(values, offsets) of a string or list column: every row's bytes (or
-    list values) back to back and the 0-based row boundaries (len(col) + 1
-    int64). Honours the array's slice offset; NULL rows are empty."""
-    if pa.types.is_list(col.type) or pa.types.is_large_list(col.type):
-        offs = np.asarray(col.offsets, dtype=np.int64)
-        vals = np.asarray(col.values, dtype=np.int64)
-    else:  # string: straight from the offset and data buffers
-        _, obuf, dbuf = col.buffers()
-        otype = np.int64 if pa.types.is_large_string(col.type) else np.int32
-        offs = (np.frombuffer(obuf, otype)[col.offset:col.offset + len(col) + 1]
-                .astype(np.int64) if len(col) else np.zeros(1, np.int64))
-        vals = (np.frombuffer(dbuf, np.uint8) if dbuf is not None
-                else np.empty(0, np.uint8))
-    vals = vals[offs[0]:offs[-1]]
-    offs = offs - offs[0]
-    if col.null_count:
-        lens = np.diff(offs)
-        valid = col.is_valid().to_numpy(zero_copy_only=False)
-        vals = vals[np.repeat(valid, lens)]
-        offs = np.r_[0, np.cumsum(lens * valid)]
-    return vals, offs
 
 
 def pack(bits: int):
@@ -131,7 +108,7 @@ def _coded(values, offsets, n: int, step):
 def char_grams(col: pa.Array, n: int):
     """Distinct UTF-8 byte n-grams per row, packed base 256 (a bijection
     for n <= 8, so intersections over codes count gram intersections)."""
-    vals, offs = flat(col)
+    vals, offs, _ = flat(col)
     codes, _, row = _coded(vals, offs, n, pack(8))
     return distinct_runs(codes, row)
 
@@ -140,7 +117,7 @@ def token_shingles(col: pa.Array, shingle: int):
     """Distinct token-id shingles per row, packed base 2^32 (the
     ``a*2^32 + b`` coding of the relational bigram queries; a bijection for
     shingle <= 2 over ids in [0, 2^32))."""
-    vals, offs = flat(col)
+    vals, offs = ids(col)
     if vals.size >= shingle and (vals.min() < 0 or vals.max() >= 1 << 32):
         raise ValueError("token ids must be in [0, 2^32) for shingle packing")
     codes, _, row = _coded(vals, offs, shingle, pack(32))
@@ -154,7 +131,7 @@ def token_kr(col: pa.Array, n: int):
     symmetric and code-set comparisons stay exact cross-engine."""
     if n < 1:
         raise ValueError(f"ngram width must be >= 1, got {n}")
-    vals, offs = flat(col)
+    vals, offs = ids(col)
     if vals.size >= n and (vals.min() < 0 or vals.max() >= 1 << 31):
         raise ValueError("token ids must be in [0, 2^31) for KR coding")
     return _coded(vals, offs, n, kr)
@@ -169,7 +146,7 @@ def distinct_token_kr(col: pa.Array, n: int):
 def byte_kr(col: pa.Array, window: int):
     """(codes, row): the KR hash of every ``window``-byte UTF-8 substring
     of every row, in row-then-position order."""
-    vals, offs = flat(col)
+    vals, offs, _ = flat(col)
     codes, _, row = _coded(vals.astype(np.int64), offs, window, kr)
     return codes, row
 
@@ -178,7 +155,7 @@ def kmers(col: pa.Array, k: int, canonical: bool = False):
     """Distinct 2-bit k-mer codes per row (A=0, C=1, G=2, T=3, big-endian;
     a bijection for k <= 31). Windows over any non-ACGT byte are dropped;
     ``canonical`` takes min(code, reverse-complement code)."""
-    vals, offs = flat(col)
+    vals, offs, _ = flat(col)
     b = _BASE_MAP[vals]
     codes = fold(b, k, pack(2))
     if canonical:  # complement = 3 - base, read from the other end

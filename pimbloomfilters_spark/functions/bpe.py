@@ -41,6 +41,8 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
+from .._arrow import flat, ids, rewrap
+
 _PAIR_SHIFT = np.int64(1) << np.int64(32)
 _MAX_ID = (1 << 31) - 1  # pair packing headroom: ids must fit 31 bits
 
@@ -52,43 +54,25 @@ def _check_ids(next_id: int) -> None:
             f"range ({_MAX_ID}); re-pack with a wider code first")
 
 
-def _flat_rows(col):
-    """(values, lens) of a list column: flattened int64 values plus
-    per-row lengths (NULL rows contribute 0)."""
-    import pyarrow.compute as pc
-
-    lens = pc.fill_null(col.value_lengths(), 0).to_numpy(
-        zero_copy_only=False).astype(np.int64)
-    vals = pc.list_flatten(col).to_numpy(
-        zero_copy_only=False).astype(np.int64)
-    return vals, lens
+def _inner_pairs(offs: np.ndarray, size: int) -> np.ndarray:
+    """Mask of the flat positions j whose pair (j, j + 1) lies inside one
+    row: every row's last position is cleared (an empty row repeats an
+    earlier row's last position, or -1, which is the last one)."""
+    inner = np.ones(size, dtype=bool)
+    inner[offs[1:] - 1] = False
+    return inner
 
 
-def _rebuild_list(vals: np.ndarray, lens: np.ndarray, src_col):
-    """Re-assemble flattened values into a list array with ``src_col``'s
-    NULL rows preserved as NULL (a NULL row always has len 0 here, so the
-    offsets stay consistent)."""
-    offs = np.concatenate(([0], np.cumsum(lens))).astype(np.int32)
-    mask = None
-    if src_col.null_count:
-        mask = pa.array(~np.asarray(
-            src_col.is_valid().to_numpy(zero_copy_only=False), dtype=bool))
-    return pa.ListArray.from_arrays(pa.array(offs), pa.array(vals),
-                                    mask=mask)
-
-
-def _apply_merges_np(vals: np.ndarray, lens: np.ndarray,
+def _apply_merges_np(vals: np.ndarray, offs: np.ndarray,
                      merges: list[tuple[int, int, int]]):
     """Apply (a, b, new_id) merges IN ORDER to the flattened sequences
-    (row boundaries from ``lens``), leftmost-first greedy within each
-    row. Returns (values, lens) after all merges."""
+    (row boundaries ``offs``), leftmost-first greedy within each row.
+    Returns (values, offsets) after all merges."""
     for a, b, new_id in merges:
         if vals.size < 2:
             break
-        ends = np.cumsum(lens) - 1          # last flat index of each row
-        match = np.zeros(vals.size, dtype=bool)
-        match[:-1] = (vals[:-1] == a) & (vals[1:] == b)
-        match[ends[lens > 0]] = False       # pairs never cross rows
+        match = _inner_pairs(offs, vals.size)
+        match[:-1] &= (vals[:-1] == a) & (vals[1:] == b)
         if a == b:
             # overlapping matches (runs of consecutive starts) keep
             # alternate positions, leftmost first: aaa -> (aa), a
@@ -108,13 +92,10 @@ def _apply_merges_np(vals: np.ndarray, lens: np.ndarray,
         out[idx] = new_id
         keep = np.ones(vals.size, dtype=bool)
         keep[idx + 1] = False
-        # matches per row: count kept match positions in each row range
-        row_starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-        per_row = np.diff(np.concatenate(
-            (np.searchsorted(idx, row_starts), [idx.size])))
         vals = out[keep]
-        lens = lens - per_row
-    return vals, lens
+        # each boundary moves left by the dropped positions before it
+        offs = offs - np.searchsorted(idx + 1, offs)
+    return vals, offs
 
 
 def pair_counts(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
@@ -124,7 +105,7 @@ def pair_counts(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
 
     def _counts(batches):
         for b in batches:
-            vals, lens = _flat_rows(b.column(0))
+            vals, offs = ids(b.column(0))
             if vals.size < 2:
                 continue
             if vals.min() < 0 or vals.max() > _MAX_ID:
@@ -132,12 +113,9 @@ def pair_counts(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
                     "token ids must be in [0, 2^31) for int64 pair "
                     f"packing; batch has [{vals.min()}, {vals.max()}] — "
                     "re-map ids (e.g. dense vocab ids) before BPE")
-            ends = np.cumsum(lens) - 1
             codes = vals[:-1] * _PAIR_SHIFT + vals[1:]
-            mask = np.ones(vals.size - 1, dtype=bool)
-            e = ends[lens > 0]
-            mask[e[e < vals.size - 1]] = False
-            uniq, cnt = np.unique(codes[mask], return_counts=True)
+            inner = _inner_pairs(offs, vals.size)[:-1]
+            uniq, cnt = np.unique(codes[inner], return_counts=True)
             if uniq.size:
                 yield pa.RecordBatch.from_arrays(
                     [pa.array(uniq), pa.array(cnt.astype(np.int64))],
@@ -215,11 +193,9 @@ def learn_bpe(df: DataFrame, n_merges: int, tokens_col: str = "tokens",
 
         def _apply(batches, _tail=tail):
             for bt in batches:
-                vals, lens = _flat_rows(bt.column(0))
-                vals, lens = _apply_merges_np(vals, lens, _tail)
+                vals, offs = _apply_merges_np(*ids(bt.column(0)), _tail)
                 yield pa.RecordBatch.from_arrays(
-                    [_rebuild_list(vals, lens, bt.column(0))],
-                    names=[id_hint])
+                    [rewrap(vals, offs, like=bt.column(0))], names=[id_hint])
 
         work = base.mapInArrow(_apply, f"{tokens_col} array<long>")
         if len(pending) >= checkpoint_every:
@@ -247,10 +223,9 @@ def apply_bpe(df: DataFrame, merges: list[dict],
 
     def _apply(batches):
         for bt in batches:
-            vals, lens = _flat_rows(bt.column(ti))
-            vals, lens = _apply_merges_np(vals, lens, tail)
+            vals, offs = _apply_merges_np(*ids(bt.column(ti)), tail)
             arrays = [bt.column(i) if i != ti else
-                      _rebuild_list(vals, lens, bt.column(ti))
+                      rewrap(vals, offs, like=bt.column(ti))
                       for i in range(len(cols))]
             yield pa.RecordBatch.from_arrays(arrays, names=cols)
 
@@ -273,13 +248,13 @@ def vocab_truncate(df: DataFrame, top_v: int, unk_id: int = 0,
     ``top_v`` int64s) ships inside the remap closure and the rewrite is
     ONE zero-exchange ``mapInArrow`` pass (``np.searchsorted`` membership
     over the flattened Arrow values — no per-row Python, no join against
-    the corpus). NULL rows stay NULL. For a top_v so large the keep array
-    strains task serialization (~10^8+), ship it via ``SparkContext
-    .addFile`` + mmap instead — the ``ship_sketch`` recipe in
+    the corpus). NULL rows and NULL elements stay NULL. For a top_v so
+    large the keep array strains task serialization (~10^8+), ship it via
+    ``SparkContext.addFile`` + mmap instead — the ``ship_sketch`` recipe in
     ``operators/probe.py``."""
     if top_v < 1:
         raise ValueError("top_v must be >= 1")
-    freq = (df.select(F.explode(tokens_col).alias("_t"))
+    freq = (df.select(F.explode(tokens_col).alias("_t")).dropna()
             .groupBy("_t").agg(F.count("*").alias("_c"))
             .orderBy(F.desc("_c"), F.asc("_t")).limit(top_v))
     keep = np.sort(np.array([r["_t"] for r in freq.collect()],
@@ -294,7 +269,8 @@ def vocab_truncate(df: DataFrame, top_v: int, unk_id: int = 0,
     def _remap(batches):
         for bt in batches:
             col = bt.column(ti)
-            vals, lens = _flat_rows(col)
+            vals, offs, valid = flat(col)
+            vals = np.asarray(vals, dtype=np.int64)
             if vals.size and keep.size:
                 idx = np.minimum(np.searchsorted(keep, vals),
                                  keep.size - 1)
@@ -302,7 +278,7 @@ def vocab_truncate(df: DataFrame, top_v: int, unk_id: int = 0,
             elif vals.size:
                 vals = np.full_like(vals, unk)
             arrays = [bt.column(i) if i != ti else
-                      _rebuild_list(vals, lens, col)
+                      rewrap(vals, offs, valid, like=col)
                       for i in range(len(cols))]
             yield pa.RecordBatch.from_arrays(arrays, names=cols)
 

@@ -30,6 +30,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
+from .._arrow import flat, matrix, rewrap
 from ..hashing import splitmix64, xxh64_u64
 from ._windows import char_grams, distinct_token_kr, token_kr, token_shingles
 
@@ -195,20 +196,16 @@ def _minhash_signatures(df: DataFrame, id_col: str, col_name: str, coder,
                         hj = splitmix64(h0 + _GAMMA * np.uint64(j))
                         sig[doc_idx, j] = np.minimum.reduceat(
                             hj, starts).view(np.int64)
-            offsets = np.arange(0, (rows + 1) * num_hashes, num_hashes,
-                                dtype=np.int32)
-            sig_col = pa.ListArray.from_arrays(pa.array(offsets),
-                                               pa.array(sig.ravel()))
-            cols, names = [b.column(0), sig_col], ["doc_id", "sig"]
+            cols = [b.column(0),
+                    rewrap(sig.ravel(), np.arange(rows + 1) * num_hashes)]
+            names = ["doc_id", "sig"]
             if with_grams:
                 # per-row code counts -> list offsets (rows w/o codes: empty)
                 cnt = np.zeros(rows, dtype=np.int64)
                 if packed.size:
                     cnt[doc_idx] = np.diff(np.r_[starts, packed.size])
-                goff = np.zeros(rows + 1, dtype=np.int32)
-                np.cumsum(cnt, out=goff[1:])
-                cols.append(pa.ListArray.from_arrays(
-                    pa.array(goff), pa.array(packed.view(np.int64))))
+                cols.append(rewrap(packed.view(np.int64),
+                                   np.r_[0, np.cumsum(cnt)]))
                 names.append("grams")
             yield pa.RecordBatch.from_arrays(cols, names=names)
 
@@ -622,7 +619,7 @@ def semantic_dedup(df: DataFrame, threshold: float = 0.7,
     Reference analogue: none (SURVEY §2.4 — the reference has no corpus
     operators); this extends the LLM-pipeline dedup family
     (``minhash_near_dup_pairs``, ``embedding_near_dup_lsh``)."""
-    from .similarity import _batch_matrix, _cosine, _normalize, ivf_centroids
+    from .similarity import _cosine, _normalize, ivf_centroids
 
     if centroids is None:
         centroids = ivf_centroids(df, vec_col, id_col, n_clusters, iters)
@@ -634,12 +631,10 @@ def semantic_dedup(df: DataFrame, threshold: float = 0.7,
         for b in batches:
             ids = np.asarray(b.column(0).to_numpy(zero_copy_only=False),
                              dtype=np.int64)
-            m = _normalize(_batch_matrix(b.column(1), dim))
+            m = _normalize(matrix(b.column(1), dim))
             cl = np.argmax(m @ c.T, axis=1)
-            v = b.column(1)
             yield pa.RecordBatch.from_arrays(
-                [pa.array(ids), pa.array(cl.astype(np.int32)),
-                 v.combine_chunks() if isinstance(v, pa.ChunkedArray) else v],
+                [pa.array(ids), pa.array(cl.astype(np.int32)), b.column(1)],
                 names=["_id", "cluster", "_v"])
 
     assigned = df.select(id_col, vec_col).mapInArrow(
@@ -967,14 +962,13 @@ def remove_token_spans(docs: DataFrame, spans: DataFrame,
 
     Scale shape: spans aggregate per doc into an interval list (a tiny
     shuffle of span ROWS — never tokens), LEFT-join onto the corpus
-    keyed by doc id, then ONE Arrow pass applies the masks: both the
-    clean pass-through AND the dirty cut are fully vectorized (the dirty
-    path flattens token arrays via Arrow list offsets, builds the union
-    keep-mask with +1/-1 deltas at span boundaries + cumsum, and
-    re-slices with ``ListArray.from_arrays``) — zero per-row Python even
-    when every document carries spans, the corpus-boilerplate case.
-    NULL ``tokens`` rows pass through as NULL with n_tok = 0 and
-    n_removed = 0, with or without spans."""
+    keyed by doc id, then ONE vectorized Arrow pass per batch applies the
+    masks (flat token values, a union keep-mask from +1/-1 deltas at span
+    boundaries + cumsum, re-wrapped at the kept offsets) — zero per-row
+    Python even when every document carries spans, the
+    corpus-boilerplate case. NULL ``tokens`` rows pass through as NULL
+    with n_tok = 0 and n_removed = 0, with or without spans; a NULL token
+    is kept (or cut) as NULL."""
     sp = (spans.groupBy(F.col(span_id_col).alias(id_col))
           .agg(F.collect_list(
               F.struct(F.col(start_col).alias("s"),
@@ -985,74 +979,30 @@ def remove_token_spans(docs: DataFrame, spans: DataFrame,
               .join(sp, id_col, "left"))
 
     def _cut(batches):
-        import pyarrow.compute as pc
-
         for b in batches:
-            has = np.zeros(b.num_rows, dtype=bool)
-            sc = b.column(2)
-            if sc.null_count < b.num_rows:
-                has = np.asarray(sc.is_valid().to_numpy(
-                    zero_copy_only=False), dtype=bool)
-            clean = b.filter(pa.array(~has))
-            if clean.num_rows:  # zero-copy pass-through, no Python
-                toks = clean.column(1)
-                yield pa.RecordBatch.from_arrays(
-                    [clean.column(0), toks,
-                     pc.fill_null(  # NULL tokens -> n_tok 0, not NULL
-                         toks.value_lengths().cast(pa.int32()), 0),
-                     pa.array(np.zeros(clean.num_rows, dtype=np.int32))],
-                    names=[id_col, tokens_col, "n_tok", "n_removed"])
-            dirty = b.filter(pa.array(has))
-            if not dirty.num_rows:
-                continue
-            # vectorized cut: flatten every dirty row's tokens into one
-            # value buffer (NULL rows contribute 0 elements), mark span
-            # coverage with +1/-1 deltas at flattened boundaries, cumsum
-            # to a union keep-mask, re-slice via list offsets
-            dt = dirty.column(1)
-            lens = pc.fill_null(dt.value_lengths(), 0).to_numpy(
-                zero_copy_only=False).astype(np.int64)
-            starts = np.concatenate(([0], np.cumsum(lens)))
-            total = int(starts[-1])
-            vals = pc.list_flatten(dt).to_numpy(zero_copy_only=False)
-            sp = dirty.column(2)
-            spf = pc.list_flatten(sp)
-            s_arr = spf.field("s").to_numpy(
-                zero_copy_only=False).astype(np.int64)
-            l_arr = spf.field("l").to_numpy(
-                zero_copy_only=False).astype(np.int64)
-            row = np.repeat(
-                np.arange(dirty.num_rows),
-                pc.fill_null(sp.value_lengths(), 0).to_numpy(
-                    zero_copy_only=False))
+            toks = b.column(1)
+            vals, offs, valid = flat(toks)
+            lens = np.diff(offs)
+            # every span's row, clipped to its document (starts are
+            # 1-based); +1/-1 deltas at the flat span boundaries, cumsum
+            # to a union keep-mask. Rows without spans keep every token.
+            span, span_offs, _ = flat(b.column(2))
+            row = np.repeat(np.arange(b.num_rows), np.diff(span_offs))
             rl = lens[row]
-            lo = np.clip(s_arr - 1, 0, rl)             # starts are 1-based
-            hi = np.clip(lo + np.maximum(l_arr, 0), 0, rl)
-            delta = np.zeros(total + 1, dtype=np.int64)
-            np.add.at(delta, starts[row] + lo, 1)
-            np.add.at(delta, starts[row] + hi, -1)
+            lo = np.clip(flat(span.field("s"))[0] - 1, 0, rl)
+            hi = np.clip(lo + np.maximum(flat(span.field("l"))[0], 0), 0, rl)
+            delta = np.zeros(vals.size + 1, dtype=np.int64)
+            np.add.at(delta, offs[row] + lo, 1)
+            np.add.at(delta, offs[row] + hi, -1)
             keep = np.cumsum(delta[:-1]) == 0
-            cs = np.concatenate(([0], np.cumsum(keep)))
-            kept_per_row = cs[starts[1:]] - cs[starts[:-1]]
-            offs = np.concatenate(([0], np.cumsum(kept_per_row)))
-            null_mask = None
-            if dt.null_count:  # NULL tokens stay NULL (0-length slot)
-                null_mask = pa.array(~np.asarray(
-                    dt.is_valid().to_numpy(zero_copy_only=False),
-                    dtype=bool))
-            kept_vals = pa.array(vals[keep], type=dt.type.value_type)
-            if pa.types.is_large_list(dt.type):
-                out_toks = pa.LargeListArray.from_arrays(
-                    pa.array(offs, type=pa.int64()), kept_vals,
-                    mask=null_mask)
-            else:
-                out_toks = pa.ListArray.from_arrays(
-                    pa.array(offs.astype(np.int32)), kept_vals,
-                    mask=null_mask)
+            cs = np.r_[0, np.cumsum(keep)]
+            kept = cs[offs[1:]] - cs[offs[:-1]]
             yield pa.RecordBatch.from_arrays(
-                [dirty.column(0), out_toks,
-                 pa.array(kept_per_row.astype(np.int32)),
-                 pa.array((lens - kept_per_row).astype(np.int32))],
+                [b.column(0),
+                 rewrap(vals[keep], np.r_[0, np.cumsum(kept)],
+                        None if valid is None else valid[keep], like=toks),
+                 pa.array(kept.astype(np.int32)),
+                 pa.array((lens - kept).astype(np.int32))],
                 names=[id_col, tokens_col, "n_tok", "n_removed"])
 
     return joined.mapInArrow(

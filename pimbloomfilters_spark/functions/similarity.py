@@ -20,15 +20,13 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from .._arrow import matrix, rewrap
 from ..hashing import splitmix64
 
 
-def _batch_matrix(col: pa.Array, dim: int) -> np.ndarray:
-    """(rows, dim) float64 matrix from an Arrow list<float> column."""
-    if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
-    flat = col.flatten().to_numpy(zero_copy_only=False)
-    return np.asarray(flat, dtype=np.float64).reshape(-1, dim)
+def _rows(m: np.ndarray) -> pa.Array:
+    """A (rows, width) matrix as a list column, one row per list."""
+    return rewrap(m.ravel(), np.arange(len(m) + 1) * m.shape[1])
 
 
 def _normalize(m: np.ndarray) -> np.ndarray:
@@ -63,7 +61,7 @@ def cosine_topk_bruteforce(df: DataFrame, queries: DataFrame, k: int = 5,
         for b in batches:
             ids = np.asarray(b.column(0).to_numpy(zero_copy_only=False),
                              dtype=np.int64)
-            m = _normalize(_batch_matrix(b.column(1), dim))
+            m = _normalize(matrix(b.column(1), dim))
             sims = m @ qm.T  # (rows, queries)
             if exclude_self:
                 sims[ids[:, None] == q_ids[None, :]] = -np.inf
@@ -260,7 +258,7 @@ def cosine_pairs_bruteforce(df: DataFrame, vec_col: str = "embedding",
         for b in batches:
             ids = np.asarray(b.column(0).to_numpy(zero_copy_only=False),
                              dtype=np.int64)
-            m = _normalize(_batch_matrix(b.column(1), dim))
+            m = _normalize(matrix(b.column(1), dim))
             sims = m @ am.T
             ii, jj = np.nonzero((sims >= threshold) & (ids[:, None] < all_ids[None, :]))
             yield pa.RecordBatch.from_arrays(
@@ -296,13 +294,10 @@ def lsh_bucket_ids(df: DataFrame, vec_col: str = "embedding",
         for b in batches:
             ids = np.asarray(b.column(0).to_numpy(zero_copy_only=False),
                              dtype=np.int64)
-            first = b.column(1)
-            if isinstance(first, pa.ChunkedArray):
-                first = first.combine_chunks()
-            dim = len(first[0])
+            m = matrix(b.column(1),
+                       None if planes is None else planes.shape[1])
             if planes is None:
-                planes = _planes(dim)
-            m = _batch_matrix(b.column(1), dim)
+                planes = _planes(m.shape[1])
             signs = (m @ planes.T) > 0
             bucket = (signs * (1 << np.arange(bits))[None, :]).sum(axis=1)
             yield pa.RecordBatch.from_arrays(
@@ -336,13 +331,10 @@ def ivf_centroids(df: DataFrame, vec_col: str = "embedding",
 
         def _assign(batches):
             for b in batches:
-                m = _normalize(_batch_matrix(b.column(1), dim))
+                m = _normalize(matrix(b.column(1), dim))
                 cl = np.argmax(m @ c.T, axis=1)
                 yield pa.RecordBatch.from_arrays(
-                    [pa.array(cl.astype(np.int32)),
-                     b.column(1).combine_chunks()
-                     if isinstance(b.column(1), pa.ChunkedArray)
-                     else b.column(1)],
+                    [pa.array(cl.astype(np.int32)), b.column(1)],
                     names=["cluster", "vec"],
                 )
 
@@ -405,7 +397,7 @@ def ivf_topk(df: DataFrame, queries: DataFrame, k: int = 5,
         for b in batches:
             ids = np.asarray(b.column(0).to_numpy(zero_copy_only=False),
                              dtype=np.int64)
-            m = _normalize(_batch_matrix(b.column(1), dim))
+            m = _normalize(matrix(b.column(1), dim))
             cl = np.argmax(m @ c.T, axis=1)
             yield pa.RecordBatch.from_arrays(
                 [pa.array(ids), pa.array(cl.astype(np.int32))],
@@ -416,7 +408,7 @@ def ivf_topk(df: DataFrame, queries: DataFrame, k: int = 5,
         for b in batches:
             ids = np.asarray(b.column(0).to_numpy(zero_copy_only=False),
                              dtype=np.int64)
-            m = _normalize(_batch_matrix(b.column(1), dim))
+            m = _normalize(matrix(b.column(1), dim))
             top = np.argsort(-(m @ c.T), axis=1)[:, :nprobe]  # (q, nprobe)
             yield pa.RecordBatch.from_arrays(
                 [pa.array(np.repeat(ids, nprobe)),
@@ -529,7 +521,7 @@ def pq_codebooks(df: DataFrame, vec_col: str = "embedding",
 
         def _assign(batches):
             for b in batches:
-                xs = _batch_matrix(b.column(1), dim)
+                xs = matrix(b.column(1), dim)
                 out_s, out_code, out_vec = [], [], []
                 for s in range(m):
                     sub = xs[:, s * dsub:(s + 1) * dsub]
@@ -540,7 +532,7 @@ def pq_codebooks(df: DataFrame, vec_col: str = "embedding",
                 yield pa.RecordBatch.from_arrays(
                     [pa.array(np.concatenate(out_s)),
                      pa.array(np.concatenate(out_code)),
-                     pa.array(list(np.concatenate(out_vec)))],
+                     _rows(np.concatenate(out_vec))],
                     names=["s", "code", "sub"])
 
         assigned = df.select(id_col, vec_col).mapInArrow(
@@ -581,17 +573,13 @@ def pq_encode(df: DataFrame, codebooks: np.ndarray,
         for b in batches:
             ids = np.asarray(b.column(0).to_numpy(zero_copy_only=False),
                              dtype=np.int64)
-            xs = _batch_matrix(b.column(1), dim)
+            xs = matrix(b.column(1), dim)
             codes = np.empty((len(ids), m), dtype=np.int32)
             for s in range(m):
                 codes[:, s] = np.argmin(
                     _sub_d2(xs[:, s * dsub:(s + 1) * dsub], cb[s]), axis=1)
             yield pa.RecordBatch.from_arrays(
-                [pa.array(ids),
-                 pa.FixedSizeListArray.from_arrays(
-                     pa.array(codes.ravel()), m).cast(
-                         pa.list_(pa.int32()))],
-                names=["_id", "codes"])
+                [pa.array(ids), _rows(codes)], names=["_id", "codes"])
 
     return df.select(id_col, vec_col).mapInArrow(
         _enc, "_id long, codes array<int>").withColumnRenamed("_id", id_col)
@@ -641,8 +629,7 @@ def pq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
         for b in batches:
             ids = np.asarray(b.column(0).to_numpy(zero_copy_only=False),
                              dtype=np.int64)
-            cd = np.asarray(b.column(1).flatten().to_numpy(
-                zero_copy_only=False), dtype=np.int64).reshape(-1, m)
+            cd = matrix(b.column(1), m, np.int64)
             for qi, qid in enumerate(q_ids):
                 adc = tables[qi, 0][cd[:, 0]]
                 for s in range(1, m):  # fixed-order fold == the SQL oracle
@@ -714,7 +701,7 @@ def ivfpq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
         for b in batches:
             ids = np.asarray(b.column(0).to_numpy(zero_copy_only=False),
                              dtype=np.int64)
-            xs = _batch_matrix(b.column(1), dim)
+            xs = matrix(b.column(1), dim)
             cell = np.argmax(_normalize(xs) @ cents.T, axis=1)
             codes = np.empty((len(ids), m), dtype=np.int32)
             for s in range(m):
@@ -722,8 +709,7 @@ def ivfpq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
                     _sub_d2(xs[:, s * dsub:(s + 1) * dsub], cb[s]), axis=1)
             yield pa.RecordBatch.from_arrays(
                 [pa.array(ids), pa.array(cell.astype(np.int32)),
-                 pa.FixedSizeListArray.from_arrays(
-                     pa.array(codes.ravel()), m).cast(pa.list_(pa.int32()))],
+                 _rows(codes)],
                 names=["_id", "cell", "codes"])
 
     encoded = df.select(id_col, vec_col).mapInArrow(
@@ -748,8 +734,7 @@ def ivfpq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
                              dtype=np.int64)
             cell = np.asarray(b.column(1).to_numpy(zero_copy_only=False),
                               dtype=np.int64)
-            cd = np.asarray(b.column(2).flatten().to_numpy(
-                zero_copy_only=False), dtype=np.int64).reshape(-1, m)
+            cd = matrix(b.column(2), m, np.int64)
             for qi, qid in enumerate(q_ids):
                 mask = np.isin(cell, q_cells[qi])
                 if excl:
@@ -810,27 +795,13 @@ def embedding_group_stats(df: DataFrame, group_col: str = "label",
         import pyarrow.compute as pc
 
         for b in batches:
-            vec = b.column(1)
-            if isinstance(vec, pa.ChunkedArray):
-                vec = vec.combine_chunks()
-            if vec.null_count or b.column(0).null_count:
-                keep = pc.and_(b.column(0).is_valid(), vec.is_valid())
-                b = b.filter(keep)
-                vec = b.column(1)
-                if isinstance(vec, pa.ChunkedArray):
-                    vec = vec.combine_chunks()
+            if b.column(0).null_count or b.column(1).null_count:
+                b = b.filter(pc.and_(b.column(0).is_valid(),
+                                     b.column(1).is_valid()))
             if b.num_rows == 0:
                 continue
             g = np.asarray(b.column(0).to_numpy(zero_copy_only=False))
-            lens = np.asarray(vec.value_lengths().to_numpy(
-                zero_copy_only=False))
-            if (lens != lens[0]).any():
-                raise ValueError(
-                    "embedding_group_stats requires fixed-width vectors; "
-                    f"saw widths {sorted(set(lens.tolist()))[:5]}")
-            flat = np.asarray(vec.flatten().to_numpy(zero_copy_only=False),
-                              dtype=np.float64)
-            m = flat.reshape(len(g), -1)
+            m = matrix(b.column(1))
             uniq, inv = np.unique(g, return_inverse=True)
             sums = np.zeros((uniq.size, m.shape[1]))
             np.add.at(sums, inv, m)
@@ -841,7 +812,7 @@ def embedding_group_stats(df: DataFrame, group_col: str = "label",
                      else pa.array(uniq.tolist(), type=pa.string()))
             yield pa.RecordBatch.from_arrays(
                 [g_arr,
-                 pa.array(list(sums), type=pa.list_(pa.float64())),
+                 _rows(sums),
                  pa.array(norm_sum), pa.array(cnt.astype(np.int64))],
                 names=["_g", "_vsum", "_nsum", "_n"])
 

@@ -63,23 +63,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_type
 from pyspark.sql.types import StructField
 
+from .._arrow import keys
 from ..sketches import Sketch, sketch_from_bytes
-
-
-def flatten_arrow(arr: "pa.Array | pa.ChunkedArray") -> np.ndarray:
-    """Flatten an Arrow column (numeric scalars or list<int>/list<long>) to
-    one contiguous int64 vector. List columns flatten zero-copy through the
-    Arrow offsets — no per-row Python objects (a pandas object-array flatten
-    is a Python loop over rows and dominated token-array build time)."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    if pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type):
-        arr = arr.flatten()  # null rows contribute nothing
-    if arr.null_count:
-        # null ELEMENTS would otherwise coerce the numpy array to float+NaN
-        arr = arr.drop_null()
-    np_vals = arr.to_numpy(zero_copy_only=False)
-    return np.ascontiguousarray(np_vals, dtype=np.int64)
 
 
 def task_slots(df: DataFrame) -> int:
@@ -138,7 +123,7 @@ def keyed_partials(df: DataFrame, make: Callable, split=None,
                 part = parts.get(key)
                 if part is None:
                     part = parts[key] = [make(key), 0, 0, 0.0]
-                values = rows if isinstance(rows, np.ndarray) else flatten_arrow(rows)
+                values = rows if isinstance(rows, np.ndarray) else keys(rows)
                 part[0].insert_bulk(values)
                 part[1] += len(rows)
                 part[2] += len(values)

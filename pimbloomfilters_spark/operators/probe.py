@@ -33,6 +33,7 @@ import os
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
+from .. import _arrow
 from ..sketches import Sketch, sketch_from_bytes
 from .build import collect_rows, task_slots
 
@@ -102,35 +103,24 @@ def _scalar_arrow_udf(fn, ret_ddl: str):
     return arrow_udf(fn, ret_ddl)
 
 
-def _masked_int64(keys, fn, out_type):
-    """Apply ``fn`` to the non-null int64 values of an Arrow array, with
-    SQL NULL-in/NULL-out semantics. Zero pandas: a nullable long column
-    reaches a pandas UDF as float64+NaN (rounding |key| > 2^53); the raw
-    Arrow array keeps keys exact at any magnitude."""
-    import pyarrow as pa
-
-    if isinstance(keys, pa.ChunkedArray):
-        keys = keys.combine_chunks()
-    mask = None
-    if keys.null_count:
-        mask = ~np.asarray(keys.is_valid().to_numpy(
-            zero_copy_only=False), dtype=bool)
-        keys = keys.fill_null(0)
-    vals = np.asarray(keys.to_numpy(zero_copy_only=False), dtype=np.int64)
-    return pa.array(np.asarray(fn(vals)), type=out_type, mask=mask)
+def _row_aligned(col, fn):
+    """``fn`` over the int64 values of a scalar or list Arrow column,
+    answered row-aligned: a NULL key answers NULL. Zero pandas: a nullable
+    long column reaches a pandas UDF as float64+NaN (rounding |key| >
+    2^53); the raw Arrow array keeps keys exact at any magnitude."""
+    values, offsets, valid = _arrow.flat(col)
+    out = np.asarray(fn(np.asarray(values, dtype=np.int64)))
+    return _arrow.rewrap(out, offsets, valid)
 
 
 def probe_key_column(df: DataFrame, sketch: Sketch, key_col: str,
                      out_col: str = "member") -> DataFrame:
     """Boolean membership per row for a scalar int64 key column (NULL key
     -> NULL, exact at any key magnitude — arrow_udf, no pandas)."""
-    import pyarrow as pa
-
     name = ship_sketch(df.sparkSession, sketch)
 
     def _probe(keys):
-        sk = load_shipped_sketch(name)
-        return _masked_int64(keys, sk.contains_bulk, pa.bool_())
+        return _row_aligned(keys, load_shipped_sketch(name).contains_bulk)
 
     return df.withColumn(out_col,
                          _scalar_arrow_udf(_probe, "boolean")(F.col(key_col)))
@@ -139,31 +129,13 @@ def probe_key_column(df: DataFrame, sketch: Sketch, key_col: str,
 def probe_array_column(df: DataFrame, sketch: Sketch, tokens_col: str,
                        out_col: str = "member") -> DataFrame:
     """array<boolean> membership, element-aligned with the token array —
-    the row-aligned bulk-probe contract of ``src/bloom_filter.hpp:55-58``.
-    arrow_udf: values flatten zero-copy off the Arrow list buffers (the
-    old pandas path looped Python objects per row), one contains_bulk
-    over the whole batch, and the result re-wraps with rebuilt offsets
-    (NULL rows come back as empty lists, as before)."""
-    import pyarrow as pa
-
+    the row-aligned bulk-probe contract of ``src/bloom_filter.hpp:55-58``:
+    one contains_bulk over the whole Arrow batch. A NULL row answers an
+    empty list."""
     name = ship_sketch(df.sparkSession, sketch)
 
     def _probe(keys):
-        sk = load_shipped_sketch(name)
-        arrs = keys
-        if isinstance(arrs, pa.ChunkedArray):
-            arrs = arrs.combine_chunks()
-        lens = arrs.value_lengths().to_numpy(zero_copy_only=False)
-        lens = np.nan_to_num(np.asarray(lens, dtype=np.float64),
-                             nan=0.0).astype(np.int64)
-        # NULL elements inside valid arrays: probing their float64+NaN
-        # round-trip would silently corrupt the whole batch — mask them
-        # out of the probe and emit NULL at those slots instead
-        hits = _masked_int64(arrs.flatten(), sk.contains_bulk, pa.bool_())
-        offsets = np.zeros(lens.size + 1, dtype=np.int32)
-        np.cumsum(lens, out=offsets[1:])
-        return pa.ListArray.from_arrays(
-            pa.array(offsets, type=pa.int32()), hits)
+        return _row_aligned(keys, load_shipped_sketch(name).contains_bulk)
 
     return df.withColumn(
         out_col, _scalar_arrow_udf(_probe, "array<boolean>")(F.col(tokens_col)))
@@ -183,12 +155,7 @@ def probe_keys(df: DataFrame, sketch: Sketch, key_col: str,
     def _probe(batches):
         sk = load_shipped_sketch(name)
         for b in batches:
-            col = b.column(0)
-            if col.null_count:
-                col = col.drop_null()
-            vals = np.ascontiguousarray(
-                col.to_numpy(zero_copy_only=False), dtype=np.int64
-            )
+            vals = _arrow.keys(b.column(0))
             yield pa.RecordBatch.from_arrays(
                 [pa.array(vals, type=pa.int64()), pa.array(sk.contains_bulk(vals))],
                 names=[key_col, out_col],
@@ -215,12 +182,7 @@ def probe_count(df: DataFrame, sketch: Sketch, key_col: str) -> tuple[int, int]:
         sk = load_shipped_sketch(name)
         n = hits = 0
         for b in batches:
-            col = b.column(0)
-            if col.null_count:  # NULL keys are not probes; see probe_keys
-                col = col.drop_null()
-            vals = np.ascontiguousarray(
-                col.to_numpy(zero_copy_only=False), dtype=np.int64
-            )
+            vals = _arrow.keys(b.column(0))  # NULL keys are not probes
             n += vals.size
             hits += int(sk.contains_bulk(vals).sum())
         yield pa.RecordBatch.from_arrays(
@@ -258,15 +220,13 @@ def register_sql_functions(spark, sketch: Sketch,
     |key| > 2^53 — an arrow_udf receives the raw int64 Arrow array with
     its validity mask, so keys stay exact at any magnitude and the null
     mask transfers straight to the output."""
-    import pyarrow as pa
-
     name = ship_sketch(spark, sketch)
     registered = []
     if hasattr(sketch, "contains_bulk"):
 
         def _member(keys):
             sk = load_shipped_sketch(name)
-            return _masked_int64(keys, sk.contains_bulk, pa.bool_())
+            return _row_aligned(keys, sk.contains_bulk)
 
         spark.udf.register(f"{prefix}_member",
                            _scalar_arrow_udf(_member, "boolean"))
@@ -275,9 +235,8 @@ def register_sql_functions(spark, sketch: Sketch,
 
         def _count(keys):
             sk = load_shipped_sketch(name)
-            return _masked_int64(
-                keys, lambda v: np.asarray(sk.query_bulk(v), dtype=np.int64),
-                pa.int64())
+            return _row_aligned(
+                keys, lambda v: np.asarray(sk.query_bulk(v), dtype=np.int64))
 
         spark.udf.register(f"{prefix}_count",
                            _scalar_arrow_udf(_count, "long"))

@@ -35,10 +35,11 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import IntegerType, StructField
 
+from .._arrow import keys
 from ..sketches import BlockedBloomFilter
 from ..sketches.bloom import (BLOCK_BITS, bloom_positions, bloom_probe,
                               scatter_or_bits, word_bits)
-from .build import collect_rows, flatten_arrow, keyed_partials, task_slots
+from .build import collect_rows, keyed_partials, task_slots
 
 
 def _shard_expr(col: str, shard_bits: int):
@@ -115,7 +116,7 @@ def build_bloom_shards(
     def _split(batch: pa.RecordBatch):
         # hash once per batch; the k positions of a value share one block,
         # hence one shard, so the value's first position names its shard
-        pos = bloom_positions(flatten_arrow(batch.column(0)), size2, nb_hash,
+        pos = bloom_positions(keys(batch.column(0)), size2, nb_hash,
                               seed, block_bits).reshape(-1, nb_hash)
         shards = (pos[:, 0] // np.uint64(shard_size_bits)).astype(np.int64)
         return shards, pos, lambda i: (int(shards[i]),)

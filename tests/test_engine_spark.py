@@ -569,6 +569,48 @@ def test_probe_paths_null_and_large_key_safety(spark):
     assert n == 20_000 - len(range(0, 20_000, 7)) and hits >= n // 2
 
 
+@pytest.mark.parametrize("case", [
+    "build", "probe", "remove_token_spans", "vocab_truncate", "apply_bpe",
+    "learn_bpe", "token_ngram_codes"])
+def test_null_element_rule(spark, case):
+    """One NULL-element rule for every pass over an array column
+    (``pimbloomfilters_spark/_arrow.py``): builds drop it, probes answer
+    NULL at its slot, passes that only move values keep it NULL, and
+    coders that need ids raise a ValueError naming it instead of casting
+    a NaN."""
+    from pimbloomfilters_spark.functions import bpe, dedup
+
+    df = spark.createDataFrame([(1, [1, 2, None, 1, 2]), (2, [3, 4])],
+                               "doc_id long, tokens array<long>").coalesce(1)
+    bloom = functools.partial(make_sketch, "bloom", size2=16, nb_hash=4)
+
+    def rows(out):
+        return [tuple(r) for r in out.orderBy("doc_id").collect()]
+
+    if case == "build":
+        assert build_sketch(df, "tokens", bloom)[1]["n_values"] == 6
+    elif case == "probe":
+        sk, _ = build_sketch(spark.range(1, 5), "id", bloom)
+        assert [r[-1] for r in rows(probe_array_column(df, sk, "tokens"))] \
+            == [[True, True, None, True, True], [True, True]]
+    elif case == "remove_token_spans":
+        spans = spark.createDataFrame(
+            [(1, 1, 2)], "doc_b long, start_b int, span_len int")
+        assert rows(dedup.remove_token_spans(df, spans)) == [
+            (1, [None, 1, 2], 3, 2), (2, [3, 4], 2, 0)]
+    elif case == "vocab_truncate":
+        assert rows(bpe.vocab_truncate(df, 2)) == [
+            (1, [1, 2, None, 1, 2]), (2, [0, 0])]
+    else:
+        run = {"apply_bpe": lambda: bpe.apply_bpe(
+                   df, [{"a": 1, "b": 2, "new_id": 10}]).collect(),
+               "learn_bpe": lambda: bpe.learn_bpe(df, 1),
+               "token_ngram_codes": lambda: dedup.token_ngram_codes(
+                   df, 2).collect()}[case]
+        with pytest.raises(Exception, match="1 NULL elements"):
+            run()
+
+
 def test_probe_array_column_keeps_partitions_rows_and_order(spark):
     """probe_array_column keeps the caller's partitioning: an input split
     3x finer than the slots, NULL rows and NULL elements included, keeps

@@ -1300,6 +1300,23 @@ def test_embedding_group_stats_string_keys_and_null_vectors(spark):
         similarity.embedding_group_stats(dbl, "g", "embedding")
 
 
+def test_vector_matrix_checks_width(spark):
+    """Every vector pass reads its batch through one fixed-width matrix
+    read: ragged widths or a NULL vector raise a ValueError naming the
+    widths seen, instead of a silent mis-reshape or an internal error."""
+    schema = "vec_id long, embedding array<double>"
+    ragged = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0]), (2, [1.0, 0.0, 0.0, 0.0, 0.0])],
+        schema).coalesce(1)
+    query = spark.createDataFrame([(9, [1.0, 0.0, 0.0, 0.0])], schema)
+    with pytest.raises(Exception, match=r"width 4; saw widths \[3, 5\]"):
+        similarity.cosine_topk_bruteforce(ragged, query, k=2).collect()
+    nulls = spark.createDataFrame(
+        [(1, [1.0, 2.0]), (2, None), (3, [0.5, 1.0])], schema).coalesce(1)
+    with pytest.raises(Exception, match=r"saw widths \[2\], 1 NULL vectors"):
+        similarity.lsh_bucket_ids(nulls).collect()
+
+
 def test_exact_substr_spans_planted(spark):
     """ExactSubstr span chaining: planted boilerplate found with exact
     boundaries; disjoint repeats split into separate spans; sub-threshold

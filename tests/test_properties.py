@@ -712,3 +712,53 @@ def test_distinct_runs_extreme_codes():
     assert _same_runs(distinct_runs(codes, row), _lexsort_runs(codes, row))
     empty = np.empty(0, np.int64)
     assert _same_runs(distinct_runs(empty, empty), (empty, empty, empty))
+
+
+@st.composite
+def _codec_columns(draw):
+    """A string or list Arrow column with NULL rows (some spanning values,
+    built from buffers), NULL elements, an optional slice, or no rows."""
+    import pyarrow as pa
+
+    typ = draw(st.sampled_from([
+        pa.list_(pa.int32()), pa.list_(pa.int64()), pa.large_list(pa.int32()),
+        pa.large_list(pa.int64()), pa.string(), pa.large_string()]))
+    strings = pa.types.is_string(typ) or pa.types.is_large_string(typ)
+    elem = (st.text(max_size=5) if strings else st.lists(
+        st.one_of(st.none(), st.integers(-(2**31), 2**31 - 1)), max_size=5))
+    rows = draw(st.lists(st.one_of(st.none(), elem), max_size=10))
+    if draw(st.booleans()):  # NULL rows keep the offsets of a filler value
+        filler = draw(elem)
+        full = pa.array([filler if r is None else r for r in rows], typ)
+        valid = pa.py_buffer(np.packbits(np.array(
+            [r is not None for r in rows], bool), bitorder="little").tobytes())
+        bufs = full.buffers()
+        col = (pa.Array.from_buffers(typ, len(rows), [valid, *bufs[1:3]])
+               if strings else
+               pa.Array.from_buffers(typ, len(rows), [valid, bufs[1]],
+                                     children=[full.values]))
+    else:
+        col = pa.array(rows, typ)
+    lo = draw(st.integers(0, len(col)))
+    return col.slice(lo, draw(st.integers(0, len(col) - lo)))
+
+
+@settings(max_examples=300, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(col=_codec_columns())
+def test_arrow_codec_flat_and_rewrap(col):
+    """``flat`` matches a to_pylist reference (NULL rows empty, NULL
+    elements read 0 and masked, slices honoured) and ``rewrap`` of its
+    output with ``like`` gives the column back."""
+    from pimbloomfilters_spark._arrow import flat, rewrap
+
+    rows = [[] if r is None else list(r.encode()) if isinstance(r, str)
+            else r for r in col.to_pylist()]
+    elems = [e for r in rows for e in r]
+    values, offsets, valid = flat(col)
+    assert offsets.tolist() == np.cumsum([0] + [len(r) for r in rows]).tolist()
+    assert values.tolist() == [0 if e is None else e for e in elems]
+    assert (None if valid is None else valid.tolist()) == (
+        [e is not None for e in elems] if None in elems else None)
+    back = rewrap(*flat(col), like=col)
+    assert back.type == col.type and back.equals(col)
