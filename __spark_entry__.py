@@ -3,7 +3,8 @@
 entry(spark)   — flagship query at sf0.001: blocked-Bloom bulk membership
                  probe over the derived token table (the reference's
                  insert_bulk + contains_bulk path, SURVEY.md §3.1-3.2).
-queries()      — named operators from SURVEY.md §2 / plans/catalog.py.
+queries()      — named operators from SURVEY.md §2 / plans/catalog.py, in
+                 CATALOG registration order.
 oracle_sql()   — DuckDB-equivalent SQL per query (exact-checkable designs;
                  see pimbloomfilters_spark/plans/catalog.py docstring).
 """

@@ -32,6 +32,11 @@ NULL elements, one rule per kind of pass:
 - coders that need ids (window coders, BPE learn and apply) raise a
   ``ValueError`` naming them (``ids``);
 - vector matrices raise too (``matrix``).
+
+NULL row ids. A pass that carries an id column next to its payload
+(``vec_id``, ``doc_id``, ``seq_id``) raises a ``ValueError`` naming the
+column and its NULL count (``row_ids``), as ``ids`` does for elements:
+an id read through a cast would come back as -2^63.
 """
 
 from __future__ import annotations
@@ -126,13 +131,15 @@ def rewrap(values, offsets, present=None, like=None) -> pa.Array:
 
 def keys(col: pa.Array) -> np.ndarray:
     """The build rule: every non-NULL value of a scalar or list column as
-    one contiguous int64 vector (NULL rows and NULL elements dropped)."""
+    one contiguous vector (NULL rows and NULL elements dropped), float64
+    for a floating column so quantile sketches see the values, int64
+    otherwise. Hash sketches read either as int64 (``hashing.xxh64_u64``)."""
     if _is_string(col.type):
         raise TypeError(f"sketch keys must be numbers, not {col.type}")
     values, _, valid = flat(col)
-    if valid is not None:
-        values = values[valid]
-    return np.ascontiguousarray(values, dtype=np.int64)
+    values = np.asarray(values if valid is None else values[valid])
+    return np.ascontiguousarray(
+        values, np.float64 if values.dtype.kind == "f" else np.int64)
 
 
 def ids(col: pa.Array):
@@ -144,6 +151,17 @@ def ids(col: pa.Array):
             f"token ids hold {int((~valid).sum())} NULL elements; drop or "
             "fill them before coding")
     return np.asarray(values, dtype=np.int64), offsets
+
+
+def row_ids(batch: pa.RecordBatch, i: int = 0) -> np.ndarray:
+    """Column ``i`` of ``batch`` as int64 row ids; NULL ids raise
+    ``ValueError``."""
+    col = batch.column(i)
+    if col.null_count:
+        raise ValueError(
+            f"id column {batch.schema.names[i]!r} holds {col.null_count} "
+            "NULL ids; drop or fill them first")
+    return np.asarray(col.to_numpy(zero_copy_only=False), dtype=np.int64)
 
 
 def matrix(col: pa.Array, dim: int | None = None,

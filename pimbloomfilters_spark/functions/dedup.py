@@ -30,7 +30,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
-from .._arrow import flat, matrix, rewrap
+from .._arrow import flat, matrix, rewrap, row_ids
 from ..hashing import splitmix64, xxh64_u64
 from ._windows import char_grams, distinct_token_kr, token_kr, token_shingles
 
@@ -629,8 +629,7 @@ def semantic_dedup(df: DataFrame, threshold: float = 0.7,
 
     def _assign(batches):
         for b in batches:
-            ids = np.asarray(b.column(0).to_numpy(zero_copy_only=False),
-                             dtype=np.int64)
+            ids = row_ids(b)
             m = _normalize(matrix(b.column(1), dim))
             cl = np.argmax(m @ c.T, axis=1)
             yield pa.RecordBatch.from_arrays(

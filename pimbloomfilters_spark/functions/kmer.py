@@ -33,6 +33,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .._arrow import row_ids
 from ._windows import kmers
 
 
@@ -54,8 +55,7 @@ def dna_kmers(df: DataFrame, seq_col: str = "seq", k: int = 21,
 
     def _km(batches):
         for b in batches:
-            ids = np.asarray(b.column(0).to_numpy(zero_copy_only=False),
-                             dtype=np.int64)
+            ids = row_ids(b)
             packed, starts, rows = kmers(b.column(1), k, canonical)
             out_ids = ids[np.repeat(rows, np.diff(np.r_[starts, packed.size]))]
             yield pa.RecordBatch.from_arrays(

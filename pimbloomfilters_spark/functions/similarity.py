@@ -20,7 +20,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from .._arrow import matrix, rewrap
+from .._arrow import matrix, rewrap, row_ids
 from ..hashing import splitmix64
 
 
@@ -59,8 +59,7 @@ def cosine_topk_bruteforce(df: DataFrame, queries: DataFrame, k: int = 5,
 
     def _topk(batches):
         for b in batches:
-            ids = np.asarray(b.column(0).to_numpy(zero_copy_only=False),
-                             dtype=np.int64)
+            ids = row_ids(b)
             m = _normalize(matrix(b.column(1), dim))
             sims = m @ qm.T  # (rows, queries)
             if exclude_self:
@@ -256,8 +255,7 @@ def cosine_pairs_bruteforce(df: DataFrame, vec_col: str = "embedding",
 
     def _pairs(batches):
         for b in batches:
-            ids = np.asarray(b.column(0).to_numpy(zero_copy_only=False),
-                             dtype=np.int64)
+            ids = row_ids(b)
             m = _normalize(matrix(b.column(1), dim))
             sims = m @ am.T
             ii, jj = np.nonzero((sims >= threshold) & (ids[:, None] < all_ids[None, :]))
@@ -292,8 +290,7 @@ def lsh_bucket_ids(df: DataFrame, vec_col: str = "embedding",
     def _bucket(batches):
         planes = None
         for b in batches:
-            ids = np.asarray(b.column(0).to_numpy(zero_copy_only=False),
-                             dtype=np.int64)
+            ids = row_ids(b)
             m = matrix(b.column(1),
                        None if planes is None else planes.shape[1])
             if planes is None:
@@ -395,8 +392,7 @@ def ivf_topk(df: DataFrame, queries: DataFrame, k: int = 5,
 
     def _bucket(batches):
         for b in batches:
-            ids = np.asarray(b.column(0).to_numpy(zero_copy_only=False),
-                             dtype=np.int64)
+            ids = row_ids(b)
             m = _normalize(matrix(b.column(1), dim))
             cl = np.argmax(m @ c.T, axis=1)
             yield pa.RecordBatch.from_arrays(
@@ -406,8 +402,7 @@ def ivf_topk(df: DataFrame, queries: DataFrame, k: int = 5,
 
     def _probe(batches):
         for b in batches:
-            ids = np.asarray(b.column(0).to_numpy(zero_copy_only=False),
-                             dtype=np.int64)
+            ids = row_ids(b)
             m = _normalize(matrix(b.column(1), dim))
             top = np.argsort(-(m @ c.T), axis=1)[:, :nprobe]  # (q, nprobe)
             yield pa.RecordBatch.from_arrays(
@@ -571,8 +566,7 @@ def pq_encode(df: DataFrame, codebooks: np.ndarray,
 
     def _enc(batches):
         for b in batches:
-            ids = np.asarray(b.column(0).to_numpy(zero_copy_only=False),
-                             dtype=np.int64)
+            ids = row_ids(b)
             xs = matrix(b.column(1), dim)
             codes = np.empty((len(ids), m), dtype=np.int32)
             for s in range(m):
@@ -627,8 +621,7 @@ def pq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
 
     def _scan(batches):
         for b in batches:
-            ids = np.asarray(b.column(0).to_numpy(zero_copy_only=False),
-                             dtype=np.int64)
+            ids = row_ids(b)
             cd = matrix(b.column(1), m, np.int64)
             for qi, qid in enumerate(q_ids):
                 adc = tables[qi, 0][cd[:, 0]]
@@ -699,8 +692,7 @@ def ivfpq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
 
     def _cell_and_codes(batches):
         for b in batches:
-            ids = np.asarray(b.column(0).to_numpy(zero_copy_only=False),
-                             dtype=np.int64)
+            ids = row_ids(b)
             xs = matrix(b.column(1), dim)
             cell = np.argmax(_normalize(xs) @ cents.T, axis=1)
             codes = np.empty((len(ids), m), dtype=np.int32)
@@ -730,10 +722,8 @@ def ivfpq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
 
     def _scan(batches):
         for b in batches:
-            ids = np.asarray(b.column(0).to_numpy(zero_copy_only=False),
-                             dtype=np.int64)
-            cell = np.asarray(b.column(1).to_numpy(zero_copy_only=False),
-                              dtype=np.int64)
+            ids = row_ids(b)
+            cell = row_ids(b, 1)
             cd = matrix(b.column(2), m, np.int64)
             for qi, qid in enumerate(q_ids):
                 mask = np.isin(cell, q_cells[qi])

@@ -16,6 +16,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from .._arrow import row_ids
 from ._windows import _FP_BASE, _FP_MOD, byte_kr, distinct_runs
 
 # tiny per-language stopword profiles (public common words). The synthetic
@@ -136,8 +137,7 @@ def winnow_fingerprints(df: DataFrame, text_col: str = "text",
 
     def _win(batches):
         for b in batches:
-            ids = np.asarray(b.column(0).to_numpy(zero_copy_only=False),
-                             dtype=np.int64)
+            ids = row_ids(b)
             acc, doc = byte_kr(b.column(1), window)
             if acc.size < w:
                 continue
@@ -178,8 +178,7 @@ def rolling_fingerprints(df: DataFrame, text_col: str = "text",
 
     def _fp(batches):
         for b in batches:
-            ids = np.asarray(b.column(0).to_numpy(zero_copy_only=False),
-                             dtype=np.int64)
+            ids = row_ids(b)
             a, starts, rows = distinct_runs(*byte_kr(b.column(1), window))
             if a.size == 0:
                 continue

@@ -37,8 +37,11 @@ def xxh64_u64(values: np.ndarray, seed: int = DEFAULT_SEED) -> np.ndarray:
     """XXH64 of each value's 8-byte little-endian encoding. uint64 in/out.
 
     Matches org.apache.spark.sql.catalyst.expressions.XxHash64 on LongType.
+    Any other input is read as int64 first, a float truncated toward zero.
     """
-    x = np.ascontiguousarray(values, dtype=np.uint64)
+    x = np.asarray(values)
+    if x.dtype != np.uint64:
+        x = x.astype(np.int64, copy=False).view(np.uint64)
     with np.errstate(over="ignore"):
         acc = np.uint64(seed) + _P5 + np.uint64(8)
         k1 = x * _P2

@@ -162,12 +162,12 @@ def collect_rows(df: DataFrame) -> list:
     bytes through per-row JVM->Python pickling, which measured ~2-5x slower
     than the Arrow stream at 64 x 2 MiB partials (guide §6: Arrow for driver
     transfers). Returns dict-like rows (plain dicts), which is all the merge
-    folds access."""
-    try:
-        tbl = df.toArrow()
-    except Exception:  # pragma: no cover — non-Arrow-collectable schema
+    folds access. Falls back to ``collect()`` only where ``DataFrame.toArrow``
+    does not exist (pyspark < 4.0): a job that fails must fail once, not
+    run again."""
+    if not hasattr(df, "toArrow"):
         return df.collect()
-    return tbl.to_pylist()
+    return df.toArrow().to_pylist()
 
 
 def fold_partials(rows, key: str) -> tuple[Sketch, dict]:

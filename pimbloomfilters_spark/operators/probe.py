@@ -157,7 +157,8 @@ def probe_keys(df: DataFrame, sketch: Sketch, key_col: str,
         for b in batches:
             vals = _arrow.keys(b.column(0))
             yield pa.RecordBatch.from_arrays(
-                [pa.array(vals, type=pa.int64()), pa.array(sk.contains_bulk(vals))],
+                [pa.array(vals.astype(np.int64, copy=False)),
+                 pa.array(sk.contains_bulk(vals))],
                 names=[key_col, out_col],
             )
 

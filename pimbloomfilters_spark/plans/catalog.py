@@ -2091,83 +2091,11 @@ def _register_pipeline_catalog() -> None:
 
 _register_pipeline_catalog()
 
-# Driver CORRECTNESS-window ordering: the round driver verifies queries()
-# in dict order under a row/time budget (50 of 68 entries in round 3), so
-# gates that have never received a driver row — plus gates new this round —
-# must come FIRST or they never get the hard external signal. The
-# long-green remainder keeps its registration order behind them. Keys and
-# semantics are unchanged; only dict iteration order moves.
-# The driver checks only the first ~50 queries() entries per round; this
-# list rotates coverage so no gate goes two rounds without a driver row
-# (round-4 verdict task #2). Round-6 head (54 entries; the driver budget
-# truncates the tail repeats, never the new/displaced block) = the 6 new
-# round-6 gates, then the 32 gates whose last driver row was round 4
-# (displaced by the round-5 window), then the 3 substr gates whose code
-# changed this round, then core-sketch repeats as window filler.
-# The head must stay at <= 50 entries (the driver's window): 18 new
-# round-6 gates + the 32 round-4-displaced = 50 exactly. Two round-6
-# gates with the WEAKEST per-slot driver value are deliberately listed
-# after the displaced block: `bpe_merges` (rows-only — no oracle, and its
-# machinery is oracle-anchored by bpe_first_merge + bpe_apply_one) and
-# `ivfpq_topk` (constant-boolean recall oracle; hash-verified green
-# locally at all 3 scales this round, see SURVEY §8).
-_DRIVER_WINDOW_PRIORITY = [
-    # Round-7 head (50 = the driver's window), per the round-6 verdict #1:
-    # (a) the 4 gates that have NEVER had a driver row — two of them
-    # (incremental_ingest via the dedup_against rewrite, ivfpq_topk via
-    # the concurrent-trainer change) also changed code this round;
-    "incremental_ingest", "ivfpq_topk", "detokenize_roundtrip", "bpe_merges",
-    # (b) 46 of the 50 gates whose last driver row was round 5 — the
-    # changed sketch-transfer paths first (sparse payloads / Arrow collect
-    # / content-keyed ship touch every sketch gate; theta_set_ops was
-    # rewritten onto the grouped build). 4 + 46 fills the window exactly;
-    # the 4 deferred stale gates follow the 50-line (each anchored by an
-    # in-window sibling), and the round-7 code-changed-but-r06-verified
-    # gates come right after them — all were re-verified hash-green
-    # locally this round at sf0.01 (tools/check_oracles.py).
-    "theta_set_ops", "build_invariance", "checkpoint_resume",
-    "bloom_probe_distributed", "bloom_probe_tokens", "bloom_weight_sanity",
-    "bloom_semijoin_custkey", "bloom_runtime_filter_join",
-    "hll_distinct_tokens", "cms_heavy_hitters", "kll_ntok_quantiles",
-    "kll_quantiles_by_source", "tdigest_ntok_quantiles",
-    "minhash_near_dup", "near_dup_clusters", "substr_dup_clusters",
-    "dedup_exact", "dedup_exact_hash", "exact_substr_spans",
-    "substr_dedup_clean", "simhash_near_dup", "ngram_jaccard_pairs",
-    "decontaminate", "token_ngram_decontaminate", "embedding_near_dup",
-    "embedding_source_stats", "cosine_topk_blocked", "profile_table",
-    "doc_rolling_fingerprints", "doc_winnow_fingerprints",
-    "lm_bigram_logprob", "token_repetition", "pack_bins_bfd",
-    "pmi_top_bigrams", "multimodal_wav_decode", "asof_purchase_view",
-    "range_join_error_sessions", "mash_distance", "doc_perplexity",
-    "quality_counts", "token_stats", "lang_id", "vocab_coverage",
-    "bm25_rank", "tfidf_top_terms", "mixture_sample_tokens",
-    # --- 50-line ---
-    # the 4 deferred last-r05 gates (anchored: _salted by
-    # asof_purchase_view, pack_windows_stats by pack_windows,
-    # doc_fingerprint_md5 by dedup_exact's md5 keying, curation_report by
-    # quality_filter_panel + profile_table)
-    "asof_purchase_view_salted", "pack_windows_stats",
-    "doc_fingerprint_md5", "curation_report",
-    # round-7 code-changed gates already driver-verified in round 6 and
-    # re-verified locally against unchanged oracles this round
-    "length_buckets", "epoch_shuffle", "session_stream_parity",
-    "profile_stream_parity", "sample_stream_parity", "counting_bloom_delete",
-    "kmer_bloom_screen", "kmer_distinct_hll", "ivf_topk",
-    # then the round-6-verified remainder in registration order (queries()
-    # appends anything unlisted, so nothing can drop out of the catalog)
-]
-
-
-def _ordered_names() -> list[str]:
-    head = [n for n in _DRIVER_WINDOW_PRIORITY if n in CATALOG]
-    seen = set(head)
-    return head + [n for n in CATALOG if n not in seen]
-
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: CATALOG[name].fn for name in _ordered_names()}
+    return {name: spec.fn for name, spec in CATALOG.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {name: CATALOG[name].oracle for name in _ordered_names()
-            if CATALOG[name].oracle}
+    return {name: spec.oracle for name, spec in CATALOG.items()
+            if spec.oracle}

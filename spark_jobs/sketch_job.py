@@ -34,6 +34,18 @@ if _REPO not in _pp.split(os.pathsep):
     os.environ["PYTHONPATH"] = f"{_REPO}{os.pathsep}{_pp}" if _pp else _REPO
 
 
+def _write_atomic(path: str, raw: bytes) -> None:
+    """Publish ``raw`` at ``path`` through a temp file in the same directory
+    and ``os.replace``: a crash never leaves a truncated sketch under
+    ``path``."""
+    tmp = f"{path}.tmp{os.getpid()}"
+    with open(tmp, "wb") as f:
+        f.write(raw)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     sub = ap.add_subparsers(dest="cmd", required=True)
@@ -233,8 +245,7 @@ def main() -> int:
             a.subtract(b)
         else:
             a.merge(b)
-        with open(args.out, "wb") as f:
-            f.write(a.to_bytes())
+        _write_atomic(args.out, a.to_bytes())
         print(json.dumps({"out": args.out, "kind": a.kind, "op": args.op,
                           "bytes": len(a.payload())}))
         return 0
@@ -465,8 +476,7 @@ def main() -> int:
             )
         else:
             sk, metrics = build_sketch(df, args.col, factory)
-        with open(args.out, "wb") as f:
-            f.write(sk.to_bytes())
+        _write_atomic(args.out, sk.to_bytes())
         print(json.dumps({"sketch": args.out, "kind": args.kind,
                           "bytes": len(sk.payload()), **metrics}))
     else:

@@ -611,6 +611,73 @@ def test_null_element_rule(spark, case):
             run()
 
 
+
+@pytest.mark.parametrize("case", [
+    "cosine_topk_bruteforce", "lsh_bucket_ids", "dna_kmers",
+    "winnow_fingerprints"])
+def test_null_row_id_rule(spark, case):
+    """A NULL id next to a pass's payload raises a ValueError naming its
+    column and NULL count (``_arrow.row_ids``) instead of coming back as
+    -2^63."""
+    from pimbloomfilters_spark.functions import kmer, similarity, text
+
+    vecs = spark.createDataFrame([(1, [1.0, 0.0]), (None, [0.0, 1.0])],
+                                 "vec_id long, embedding array<double>")
+    seqs = spark.createDataFrame([(1, "ACGTAC"), (None, "GGCATT")],
+                                 "seq_id long, seq string")
+    docs = spark.createDataFrame([(1, "abcdefgh"), (None, "hgfedcba")],
+                                 "doc_id long, text string")
+    run = {"cosine_topk_bruteforce": lambda: similarity.cosine_topk_bruteforce(
+               vecs, vecs.filter("vec_id IS NOT NULL"), k=1),
+           "lsh_bucket_ids": lambda: similarity.lsh_bucket_ids(vecs),
+           "dna_kmers": lambda: kmer.dna_kmers(seqs, k=3),
+           "winnow_fingerprints": lambda: text.winnow_fingerprints(
+               docs, window=3, w=2)}[case]
+    with pytest.raises(Exception, match=r"_id' holds 1 NULL ids"):
+        run().collect()
+
+
+def test_double_build_values_keep_their_fraction(spark):
+    """A KLL over a double column sees the values, not their int64
+    truncation (which reads every value in [0, 1) as 0)."""
+    df = spark.range(0, 10_000, numPartitions=3).selectExpr(
+        "CAST(id AS DOUBLE) / 10000 AS x")
+    sk, _ = build_sketch(df, "x", functools.partial(make_sketch, "kll", k=200))
+    for q in (0.25, 0.5, 0.75):
+        assert abs(sk.quantile(q) - q) <= sk.rank_error() + 1e-4
+
+
+def test_double_build_values_hash_as_int64(spark):
+    """Hash sketches read a double value as its int64 truncation, so a
+    Bloom over doubles keeps the bytes it always had."""
+    bloom = functools.partial(make_sketch, "bloom", size2=16, nb_hash=4)
+    doubles, _ = build_sketch(spark.createDataFrame(
+        [(0.25,), (1.5,), (-2.7,)], "x double"), "x", bloom)
+    longs, _ = build_sketch(spark.createDataFrame(
+        [(0,), (1,), (-2,)], "x long"), "x", bloom)
+    assert doubles.to_bytes() == longs.to_bytes()
+
+
+def test_failed_collect_runs_one_job(spark):
+    """A job that fails inside ``collect_rows`` fails once: it is not run
+    a second time through ``collect()``."""
+    from pimbloomfilters_spark.operators.build import collect_rows
+
+    def _fail(batches):
+        for _ in batches:
+            raise ValueError("collect must fail once")
+        yield from ()
+
+    sc = spark.sparkContext
+    sc.setJobGroup("collect-once", "failing collect")
+    try:
+        with pytest.raises(Exception, match="collect must fail once"):
+            collect_rows(spark.range(0, 4, numPartitions=1)
+                         .mapInArrow(_fail, "id long"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("collect-once")) == 1
+
 def test_probe_array_column_keeps_partitions_rows_and_order(spark):
     """probe_array_column keeps the caller's partitioning: an input split
     3x finer than the slots, NULL rows and NULL elements included, keeps

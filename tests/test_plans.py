@@ -554,3 +554,13 @@ def test_chunk_dedup_plan_shape(spark):
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 2, plan
     assert "Exchange SinglePartition" not in plan, plan
     assert "Join" not in plan and "CartesianProduct" not in plan, plan
+
+
+def test_driver_contract_lists_catalog_in_registration_order():
+    import __spark_entry__ as entry
+    from pimbloomfilters_spark.plans import CATALOG
+
+    names = list(entry.queries())
+    assert names == list(CATALOG)  # each name once, in registration order
+    assert set(entry.oracle_sql()) <= set(names)
+    assert callable(entry.entry)
