@@ -8,8 +8,9 @@ Layout. ``flat(col)`` gives ``(values, offsets, valid)``:
 
 - ``values``: the child values of every row back to back (a string
   column's UTF-8 bytes as uint8). Numeric and boolean children come back
-  as numpy in their own dtype, any other child (struct, nested list) as
-  the Arrow array of the same values.
+  as numpy in their own dtype (a decimal as int64 at scale 0, float64
+  otherwise), any other child (struct, nested list) as the Arrow array
+  of the same values.
 - ``offsets``: len(col) + 1 int64 row boundaries starting at 0, so row i
   is ``values[offsets[i]:offsets[i + 1]]``. A scalar column has no
   offsets (``None``): row i is ``values[i]``.
@@ -57,6 +58,8 @@ def _numpy(arr: pa.Array):
     """(values, valid) of a scalar array: numpy in its own dtype with NULL
     slots read as 0, and the validity mask (None without NULLs); any
     other array type stays Arrow."""
+    if pa.types.is_decimal(arr.type):
+        arr = arr.cast(pa.int64() if arr.type.scale == 0 else pa.float64())
     if not (pa.types.is_integer(arr.type) or pa.types.is_floating(arr.type)
             or pa.types.is_boolean(arr.type)):
         return arr, None

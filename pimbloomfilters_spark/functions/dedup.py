@@ -30,7 +30,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
-from .._arrow import flat, matrix, rewrap, row_ids
+from .._arrow import flat, rewrap
 from ..hashing import splitmix64, xxh64_u64
 from ._windows import char_grams, distinct_token_kr, token_kr, token_shingles
 
@@ -619,29 +619,14 @@ def semantic_dedup(df: DataFrame, threshold: float = 0.7,
     Reference analogue: none (SURVEY §2.4 — the reference has no corpus
     operators); this extends the LLM-pipeline dedup family
     (``minhash_near_dup_pairs``, ``embedding_near_dup_lsh``)."""
-    from .similarity import _cosine, _normalize, ivf_centroids
+    from .similarity import _cosine, _normalize, _with_cell, ivf_centroids
 
     if centroids is None:
         centroids = ivf_centroids(df, vec_col, id_col, n_clusters, iters)
     c = _normalize(np.asarray(centroids, dtype=np.float64))
-    dim = c.shape[1]
-    vec_type = dict(df.dtypes)[vec_col]
-
-    def _assign(batches):
-        for b in batches:
-            ids = row_ids(b)
-            m = _normalize(matrix(b.column(1), dim))
-            cl = np.argmax(m @ c.T, axis=1)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids), pa.array(cl.astype(np.int32)), b.column(1)],
-                names=["_id", "cluster", "_v"])
-
-    assigned = df.select(id_col, vec_col).mapInArrow(
-        _assign, f"_id long, cluster int, _v {vec_type}")
-    va = assigned.select(F.col("_id").alias("id_a"), "cluster",
-                         F.col("_v").alias("_va"))
-    vb = assigned.select(F.col("_id").alias("id_b"), "cluster",
-                         F.col("_v").alias("_vb"))
+    assigned = _with_cell(df, c, vec_col, id_col).toDF("_id", "_v", "cluster")
+    va = assigned.toDF("id_a", "_va", "cluster")
+    vb = assigned.toDF("id_b", "_vb", "cluster")
     drops = (
         va.join(vb, "cluster").filter(F.col("id_a") < F.col("id_b"))
         .withColumn("cos", _cosine("_va", "_vb"))

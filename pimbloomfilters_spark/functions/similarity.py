@@ -12,6 +12,12 @@
   within the query's bucket (and optional multi-probe neighbors). The 100 TB
   path: candidate set per query is ~corpus/2^bits, tunable; recall measured
   against brute force in tests.
+
+Each search kernel is written once: the query collect (``_collect``),
+nearest cells (``_nearest``, ``_with_cell``), PQ codes (``_pq_codes``,
+``_encode``), the ADC scan (``_adc_topk``), the cosine local top-k
+(``_cos_topk``), the bucket-join tail (``_bucket_topk``) and the
+``rank <= k`` finish (``_rank``).
 """
 
 from __future__ import annotations
@@ -23,6 +29,8 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from .._arrow import matrix, rewrap, row_ids
 from ..hashing import splitmix64
 
+_TOPK = "query_id long, neighbor_id long, rank int"
+
 
 def _rows(m: np.ndarray) -> pa.Array:
     """A (rows, width) matrix as a list column, one row per list."""
@@ -33,6 +41,65 @@ def _normalize(m: np.ndarray) -> np.ndarray:
     norms = np.linalg.norm(m, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
     return m / norms
+
+
+def _collect(df: DataFrame, id_col: str, vec_col: str):
+    """(int64 ids, float64 (rows, dim) matrix) of a small frame collected
+    to the driver, or None when it has no rows: a search over an empty
+    collected side answers an empty frame without running the search."""
+    rows = df.select(id_col, vec_col).collect()
+    if not rows:
+        return None
+    return (np.array([r[id_col] for r in rows], dtype=np.int64),
+            np.array([r[vec_col] for r in rows], dtype=np.float64))
+
+
+def _rank(local: DataFrame, k: int, score: Column) -> DataFrame:
+    """(query_id, neighbor_id, rank): the global top-k per query of
+    ``local``'s candidate rows, ordered by ``score`` and then by neighbor
+    id ascending (deterministic across engines)."""
+    w = Window.partitionBy("query_id").orderBy(score, F.asc("neighbor_id"))
+    return (local.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "neighbor_id", "rank"))
+
+
+def _cos_topk(ids: np.ndarray, dm: np.ndarray, q_ids: np.ndarray,
+              qm: np.ndarray, k: int, exclude_self: bool):
+    """(query_id, neighbor_id, cos) arrays: each query's k best rows of
+    one slice by cosine, for row-normalized ``dm`` (rows) and ``qm``
+    (queries). A query never finds itself when ``exclude_self``."""
+    sims = dm @ qm.T  # (rows, queries)
+    if exclude_self:
+        sims[ids[:, None] == q_ids[None, :]] = -np.inf
+    kk = min(k, sims.shape[0])
+    top = np.argpartition(-sims, kk - 1, axis=0)[:kk]  # (k, queries)
+    # argpartition's pick among rows exactly TIED with the kk-th value
+    # is arbitrary — it could drop the tied LOWER-id neighbor here while
+    # the global window only orders what survives. Detect queries whose
+    # boundary value has ties straddling the cut and re-select just
+    # those columns with the documented composite key (cos desc, id
+    # asc); for every other query the selected SET is already exact.
+    kth = np.take_along_axis(sims, top[kk - 1:kk], axis=0)  # (1, nq)
+    total_tied = (sims == kth).sum(axis=0)
+    sel_tied = (np.take_along_axis(sims, top, axis=0) == kth).sum(axis=0)
+    for q in np.nonzero(total_tied > sel_tied)[0]:
+        top[:, q] = np.lexsort((ids, -sims[:, q]))[:kk]
+    qcol = np.repeat(q_ids[None, :], kk, axis=0).ravel()
+    ncol = ids[top].ravel()
+    scol = np.take_along_axis(sims, top, axis=0).ravel()
+    keep = scol > -np.inf
+    return qcol[keep], ncol[keep], scol[keep]
+
+
+def _nearest(xs: np.ndarray, c: np.ndarray, nprobe: int | None = None):
+    """Nearest IVF cell of each row of ``xs`` by cosine against centroid
+    matrix ``c`` (ties -> smallest cell), or with ``nprobe`` its
+    ``nprobe`` nearest cells, best first."""
+    sims = _normalize(xs) @ c.T
+    if nprobe is None:
+        return np.argmax(sims, axis=1)
+    return np.argsort(-sims, axis=1)[:, :nprobe]
 
 
 def _cosine(a, b) -> Column:
@@ -52,48 +119,23 @@ def cosine_topk_bruteforce(df: DataFrame, queries: DataFrame, k: int = 5,
                            exclude_self: bool = True) -> DataFrame:
     """(query_id, neighbor_id, rank): exact top-k by cosine, ties broken by
     neighbor id ascending (deterministic across engines)."""
-    qrows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[id_col] for r in qrows], dtype=np.int64)
-    qm = _normalize(np.array([r[vec_col] for r in qrows], dtype=np.float64))
+    q = _collect(queries, id_col, vec_col)
+    if q is None:
+        return df.sparkSession.createDataFrame([], _TOPK)
+    q_ids, qm = q[0], _normalize(q[1])
     dim = qm.shape[1]
 
     def _topk(batches):
         for b in batches:
-            ids = row_ids(b)
-            m = _normalize(matrix(b.column(1), dim))
-            sims = m @ qm.T  # (rows, queries)
-            if exclude_self:
-                sims[ids[:, None] == q_ids[None, :]] = -np.inf
-            kk = min(k, sims.shape[0])
-            top = np.argpartition(-sims, kk - 1, axis=0)[:kk]  # (k, queries)
-            # same boundary-tie repair as cosine_topk_blocked: re-select
-            # columns where ties straddle the cut with (cos desc, id asc)
-            kth = np.take_along_axis(sims, top[kk - 1:kk], axis=0)
-            total_tied = (sims == kth).sum(axis=0)
-            sel_tied = (np.take_along_axis(sims, top, axis=0) == kth).sum(axis=0)
-            for q in np.nonzero(total_tied > sel_tied)[0]:
-                top[:, q] = np.lexsort((ids, -sims[:, q]))[:kk]
-            qcol = np.repeat(q_ids[None, :], kk, axis=0).ravel()
-            ncol = ids[top].ravel()
-            scol = np.take_along_axis(sims, top, axis=0).ravel()
-            keep = scol > -np.inf
+            cols = _cos_topk(row_ids(b), _normalize(matrix(b.column(1), dim)),
+                             q_ids, qm, k, exclude_self)
             yield pa.RecordBatch.from_arrays(
-                [pa.array(qcol[keep]), pa.array(ncol[keep]),
-                 pa.array(scol[keep])],
-                names=["query_id", "neighbor_id", "cos"],
-            )
+                [pa.array(c) for c in cols],
+                names=["query_id", "neighbor_id", "cos"])
 
     local = df.select(id_col, vec_col).mapInArrow(
-        _topk, "query_id long, neighbor_id long, cos double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id")
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+        _topk, "query_id long, neighbor_id long, cos double")
+    return _rank(local, k, F.desc("cos"))
 
 
 def cosine_pairs_blocked(df: DataFrame, vec_col: str = "embedding",
@@ -205,40 +247,15 @@ def cosine_topk_blocked(df: DataFrame, queries: DataFrame, k: int = 5,
         qids = qpdf["_qid"].to_numpy(dtype=np.int64)
         dm = _normalize(np.stack(dpdf["_dv"].to_numpy()).astype(np.float64))
         qm = _normalize(np.stack(qpdf["_qv"].to_numpy()).astype(np.float64))
-        sims = dm @ qm.T  # (rows, queries)
-        if exclude_self:
-            sims[dids[:, None] == qids[None, :]] = -np.inf
-        kk = min(k, sims.shape[0])
-        top = np.argpartition(-sims, kk - 1, axis=0)[:kk]
-        # argpartition's pick among rows exactly TIED with the kk-th value
-        # is arbitrary — it could drop the tied LOWER-id neighbor here while
-        # the global window only orders what survives. Detect queries whose
-        # boundary value has ties straddling the cut and re-select just
-        # those columns with the documented composite key (cos desc, id
-        # asc); for every other query the selected SET is already exact.
-        kth = np.take_along_axis(sims, top[kk - 1:kk], axis=0)  # (1, nq)
-        total_tied = (sims == kth).sum(axis=0)
-        sel_tied = (np.take_along_axis(sims, top, axis=0) == kth).sum(axis=0)
-        for q in np.nonzero(total_tied > sel_tied)[0]:
-            top[:, q] = np.lexsort((dids, -sims[:, q]))[:kk]
-        qcol = np.repeat(qids[None, :], kk, axis=0).ravel()
-        ncol = dids[top].ravel()
-        scol = np.take_along_axis(sims, top, axis=0).ravel()
-        keep = scol > -np.inf
-        return pd.DataFrame({"query_id": qcol[keep], "neighbor_id": ncol[keep],
-                             "cos": scol[keep]})
+        cols = _cos_topk(dids, dm, qids, qm, k, exclude_self)
+        return pd.DataFrame(dict(zip(["query_id", "neighbor_id", "cos"], cols)))
 
     local = (
         data.groupBy("_db", "_qb")
         .cogroup(qs.groupBy("_db", "_qb"))
         .applyInPandas(_gemm_topk, "query_id long, neighbor_id long, cos double")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _rank(local, k, F.desc("cos"))
 
 
 def cosine_pairs_bruteforce(df: DataFrame, vec_col: str = "embedding",
@@ -248,9 +265,11 @@ def cosine_pairs_bruteforce(df: DataFrame, vec_col: str = "embedding",
     One side is collected & normalized — SMALL-SCALE ORACLE ONLY (tests);
     production paths use ``cosine_pairs_blocked`` (exact, distributed) or
     the LSH-bucketed near-dup for high thresholds."""
-    rows = df.select(id_col, vec_col).collect()
-    all_ids = np.array([r[id_col] for r in rows], dtype=np.int64)
-    am = _normalize(np.array([r[vec_col] for r in rows], dtype=np.float64))
+    a = _collect(df, id_col, vec_col)
+    if a is None:
+        return df.sparkSession.createDataFrame(
+            [], "id_a long, id_b long, cos double")
+    all_ids, am = a[0], _normalize(a[1])
     dim = am.shape[1]
 
     def _pairs(batches):
@@ -280,10 +299,9 @@ def lsh_bucket_ids(df: DataFrame, vec_col: str = "embedding",
     def _planes(dim: int) -> np.ndarray:
         # deterministic pseudo-gaussians via Box-Muller on splitmix streams
         n = bits * dim
-        u1 = (splitmix64(np.arange(n, dtype=np.uint64) + np.uint64(seed * 1_000_003))
-              >> np.uint64(11)).astype(np.float64) / (1 << 53)
-        u2 = (splitmix64(np.arange(n, dtype=np.uint64) + np.uint64(seed * 2_000_003))
-              >> np.uint64(11)).astype(np.float64) / (1 << 53)
+        u1, u2 = ((splitmix64(np.arange(n, dtype=np.uint64) + np.uint64(seed * s))
+                   >> np.uint64(11)).astype(np.float64) / (1 << 53)
+                  for s in (1_000_003, 2_000_003))
         z = np.sqrt(-2 * np.log(np.clip(u1, 1e-12, 1))) * np.cos(2 * np.pi * u2)
         return z.reshape(bits, dim)
 
@@ -321,40 +339,47 @@ def ivf_centroids(df: DataFrame, vec_col: str = "embedding",
                  .limit(n_centroids).collect())
     cents = _normalize(np.array([r[vec_col] for r in init_rows],
                                 dtype=np.float64))
-    dim = cents.shape[1]
+
+    def _mean(pdf):
+        import pandas as pd
+
+        m = _normalize(np.stack(pdf["_v"].to_numpy()).astype(np.float64))
+        return pd.DataFrame({
+            "bucket": [int(pdf["bucket"].iloc[0])],
+            "centroid": [m.mean(axis=0).tolist()],
+        })
 
     for _ in range(iters):
-        c = cents  # rebind for closure pickling
-
-        def _assign(batches):
-            for b in batches:
-                m = _normalize(matrix(b.column(1), dim))
-                cl = np.argmax(m @ c.T, axis=1)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(cl.astype(np.int32)), b.column(1)],
-                    names=["cluster", "vec"],
-                )
-
-        assigned = df.select(id_col, vec_col).mapInArrow(
-            _assign, f"cluster int, vec {dict(df.dtypes)[vec_col]}"
-        )
-
-        def _mean(pdf):
-            import pandas as pd
-
-            m = _normalize(np.stack(pdf["vec"].to_numpy()).astype(np.float64))
-            return pd.DataFrame({
-                "cluster": [int(pdf["cluster"].iloc[0])],
-                "centroid": [m.mean(axis=0).tolist()],
-            })
-
-        rows = (assigned.groupBy("cluster").applyInPandas(
-            _mean, "cluster int, centroid array<double>").collect())
+        rows = (_with_cell(df, cents, vec_col, id_col).groupBy("bucket")
+                .applyInPandas(_mean, "bucket int, centroid array<double>")
+                .collect())
         new = cents.copy()
         for r in rows:
-            new[r["cluster"]] = r["centroid"]
+            new[r["bucket"]] = r["centroid"]
         cents = _normalize(new)
     return cents
+
+
+def _with_cell(df: DataFrame, c: np.ndarray, vec_col: str, id_col: str,
+               nprobe: int | None = None) -> DataFrame:
+    """(_id, _v, bucket): every row of ``df`` with its nearest IVF cell
+    under centroid matrix ``c``, its vector passed through; with
+    ``nprobe``, one row for each of its ``nprobe`` nearest cells."""
+    dim = c.shape[1]
+
+    def _assign(batches):
+        for b in batches:
+            ids, vecs = row_ids(b), b.column(1)
+            cl = _nearest(matrix(vecs, dim), c, nprobe)
+            if nprobe is not None:
+                rows = np.repeat(np.arange(len(ids)), cl.shape[1])
+                ids, vecs = ids[rows], vecs.take(pa.array(rows))
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(ids), vecs, pa.array(cl.ravel().astype(np.int32))],
+                names=["_id", "_v", "bucket"])
+
+    return df.select(id_col, vec_col).mapInArrow(
+        _assign, f"_id long, _v {dict(df.dtypes)[vec_col]}, bucket int")
 
 
 def save_centroids(spark, centroids: np.ndarray, path: str) -> None:
@@ -387,47 +412,22 @@ def ivf_topk(df: DataFrame, queries: DataFrame, k: int = 5,
     many)."""
     if centroids is None:
         centroids = ivf_centroids(df, vec_col, id_col, n_centroids, iters)
-    c = centroids
-    dim = c.shape[1]
+    qv = _with_cell(queries, centroids, vec_col, id_col, nprobe).toDF(
+        "query_id", "qvec", "bucket")
+    return _bucket_topk(_with_cell(df, centroids, vec_col, id_col), qv, k)
 
-    def _bucket(batches):
-        for b in batches:
-            ids = row_ids(b)
-            m = _normalize(matrix(b.column(1), dim))
-            cl = np.argmax(m @ c.T, axis=1)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids), pa.array(cl.astype(np.int32))],
-                names=["_id", "cluster"],
-            )
 
-    def _probe(batches):
-        for b in batches:
-            ids = row_ids(b)
-            m = _normalize(matrix(b.column(1), dim))
-            top = np.argsort(-(m @ c.T), axis=1)[:, :nprobe]  # (q, nprobe)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.repeat(ids, nprobe)),
-                 pa.array(top.ravel().astype(np.int32))],
-                names=["query_id", "cluster"],
-            )
-
-    data_b = df.select(id_col, vec_col).mapInArrow(
-        _bucket, "_id long, cluster int").withColumnRenamed("_id", id_col)
-    with_bucket = df.join(data_b, id_col)
-    q_b = queries.select(id_col, vec_col).mapInArrow(
-        _probe, "query_id long, cluster int")
-    qv = queries.select(F.col(id_col).alias("query_id"),
-                        F.col(vec_col).alias("qvec")).join(q_b, "query_id")
-    joined = with_bucket.join(qv, "cluster").filter(
-        F.col(id_col) != F.col("query_id")
-    ).dropDuplicates([id_col, "query_id"])
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc(id_col))
-    return (
-        joined.withColumn("cos", _cosine(vec_col, "qvec"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col(id_col).alias("neighbor_id"), "rank")
-    )
+def _bucket_topk(data: DataFrame, qv: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, rank): exact cosine top-k of each query
+    among the other rows that share one of its buckets. ``data`` is
+    (_id, _v, bucket), one bucket per row; ``qv`` is (query_id, qvec,
+    bucket), one row per probed bucket, a query's buckets distinct, so a
+    row pairs with a query at most once when ids are unique."""
+    # bucket-join: each candidate row pairs only with same-bucket queries
+    joined = data.join(qv, "bucket").filter(F.col("_id") != F.col("query_id"))
+    return _rank(joined.select("query_id", F.col("_id").alias("neighbor_id"),
+                               _cosine("_v", "qvec").alias("cos")),
+                 k, F.desc("cos"))
 
 
 def ann_lsh_topk(df: DataFrame, queries: DataFrame, k: int = 5,
@@ -438,11 +438,11 @@ def ann_lsh_topk(df: DataFrame, queries: DataFrame, k: int = 5,
     query's — the standard multiprobe-LSH recall lever, costing
     (1+bits) x bucket-size candidates at radius 1 instead of a bigger table).
     Returns (query_id, neighbor_id, rank); recall vs exact measured in tests."""
-    data_b = lsh_bucket_ids(df, vec_col, id_col, bits, seed)
-    with_bucket = df.join(data_b, id_col)
-    q_b = lsh_bucket_ids(queries, vec_col, id_col, bits, seed).withColumnRenamed(
-        id_col, "query_id"
-    )
+    data = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")).join(
+        lsh_bucket_ids(df, vec_col, id_col, bits, seed).toDF("_id", "bucket"),
+        "_id")
+    q_b = lsh_bucket_ids(queries, vec_col, id_col, bits, seed).toDF(
+        "query_id", "bucket")
     if probe_radius >= 1:
         # explode each query to its bucket + all radius-1 bit flips
         probes = F.array(
@@ -452,17 +452,7 @@ def ann_lsh_topk(df: DataFrame, queries: DataFrame, k: int = 5,
         q_b = q_b.select("query_id", F.explode(probes).alias("bucket"))
     qv = queries.select(F.col(id_col).alias("query_id"),
                         F.col(vec_col).alias("qvec")).join(q_b, "query_id")
-    # bucket-join: each candidate row pairs only with same-bucket queries
-    joined = with_bucket.join(qv, "bucket").filter(
-        F.col(id_col) != F.col("query_id")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc(id_col))
-    return (
-        joined.withColumn("cos", _cosine(vec_col, "qvec"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col(id_col).alias("neighbor_id"), "rank")
-    )
+    return _bucket_topk(data, qv, k)
 
 
 # ------------------------------------------------------ product quantization
@@ -484,6 +474,58 @@ def _sub_d2(xs: np.ndarray, cb_s: np.ndarray) -> np.ndarray:
     for ci in range(cb_s.shape[0]):
         d[:, ci] = _l2_fold(xs, cb_s[ci])
     return d
+
+
+def _pq_codes(xs: np.ndarray, cb: np.ndarray) -> np.ndarray:
+    """(rows, m) int32 PQ codes of ``xs``: per subspace, the L2-nearest
+    entry of codebooks ``cb`` (m, n_codes, dsub), ties -> smallest code
+    (the oracle's (d2, code) ordering)."""
+    m, _k, dsub = cb.shape
+    codes = np.empty((len(xs), m), dtype=np.int32)
+    for s in range(m):
+        codes[:, s] = np.argmin(
+            _sub_d2(xs[:, s * dsub:(s + 1) * dsub], cb[s]), axis=1)
+    return codes
+
+
+def _adc_topk(codes: DataFrame, q_ids: np.ndarray, qm: np.ndarray,
+              cb: np.ndarray, k: int, exclude_self: bool,
+              q_cells: np.ndarray | None = None) -> DataFrame:
+    """(query_id, neighbor_id, rank) by ADC over ``codes``' (id, codes)
+    rows, plus a cell column when ``q_cells`` (queries, nprobe) limits
+    each query to the rows of its own cells. Per query, a table of exact
+    subspace distances T[s, c]; a row's distance is its m lookups summed
+    in fixed subspace order (left fold — bit-exact vs the SQL oracle).
+    Each partition emits its local top-k by (adc, id) and a window over
+    partitions x k x queries rows finishes."""
+    m, _k, dsub = cb.shape
+    tables = np.stack([_sub_d2(qm[:, s * dsub:(s + 1) * dsub], cb[s])
+                       for s in range(m)], axis=1)  # (queries, m, n_codes)
+
+    def _scan(batches):
+        for b in batches:
+            ids = row_ids(b)
+            cd = matrix(b.column(1), m, np.int64)
+            cells = None if q_cells is None else row_ids(b, 2)
+            for qi, qid in enumerate(q_ids):
+                keep = ids != qid if exclude_self else np.ones(len(ids), bool)
+                if cells is not None:
+                    keep &= np.isin(cells, q_cells[qi])
+                cand_ids, cc = ids[keep], cd[keep]
+                if cand_ids.size == 0:
+                    continue
+                adc = tables[qi, 0][cc[:, 0]]
+                for s in range(1, m):  # fixed-order fold == the SQL oracle
+                    adc = adc + tables[qi, s][cc[:, s]]
+                top = np.lexsort((cand_ids, adc))[:k]
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(np.full(len(top), qid)),
+                     pa.array(cand_ids[top]), pa.array(adc[top])],
+                    names=["query_id", "neighbor_id", "_adc"])
+
+    local = codes.mapInArrow(
+        _scan, "query_id long, neighbor_id long, _adc double")
+    return _rank(local, k, F.asc("_adc"))
 
 
 def pq_codebooks(df: DataFrame, vec_col: str = "embedding",
@@ -517,17 +559,13 @@ def pq_codebooks(df: DataFrame, vec_col: str = "embedding",
         def _assign(batches):
             for b in batches:
                 xs = matrix(b.column(1), dim)
-                out_s, out_code, out_vec = [], [], []
-                for s in range(m):
-                    sub = xs[:, s * dsub:(s + 1) * dsub]
-                    codes = np.argmin(_sub_d2(sub, c[s]), axis=1)
-                    out_s.append(np.full(len(codes), s, np.int32))
-                    out_code.append(codes.astype(np.int32))
-                    out_vec.append(sub)
+                n = len(xs)
+                # one row per (subspace, vector), subspace-major
                 yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.concatenate(out_s)),
-                     pa.array(np.concatenate(out_code)),
-                     _rows(np.concatenate(out_vec))],
+                    [pa.array(np.repeat(np.arange(m, dtype=np.int32), n)),
+                     pa.array(_pq_codes(xs, c).T.ravel()),
+                     _rows(xs.reshape(n, m, dsub).swapaxes(0, 1)
+                           .reshape(m * n, dsub))],
                     names=["s", "code", "sub"])
 
         assigned = df.select(id_col, vec_col).mapInArrow(
@@ -560,23 +598,30 @@ def pq_encode(df: DataFrame, codebooks: np.ndarray,
     at 100 TB this is the compression pass that turns a 256-byte fp32
     vector into m bytes of codes (the ADC scan then never touches raw
     vectors)."""
-    m, _k, dsub = codebooks.shape
-    dim = m * dsub
-    cb = codebooks
+    return _encode(df, codebooks, vec_col, id_col)
+
+
+def _encode(df: DataFrame, cb: np.ndarray, vec_col: str, id_col: str,
+            cents: np.ndarray | None = None) -> DataFrame:
+    """(id_col, codes) of every row of ``df`` under codebooks ``cb``, plus
+    its nearest IVF ``cell`` under centroids ``cents`` when given, in one
+    scan."""
+    dim = cb.shape[0] * cb.shape[2]
 
     def _enc(batches):
         for b in batches:
             ids = row_ids(b)
             xs = matrix(b.column(1), dim)
-            codes = np.empty((len(ids), m), dtype=np.int32)
-            for s in range(m):
-                codes[:, s] = np.argmin(
-                    _sub_d2(xs[:, s * dsub:(s + 1) * dsub], cb[s]), axis=1)
+            cols = [pa.array(ids), _rows(_pq_codes(xs, cb))]
+            if cents is not None:
+                cols.append(pa.array(_nearest(xs, cents).astype(np.int32)))
             yield pa.RecordBatch.from_arrays(
-                [pa.array(ids), _rows(codes)], names=["_id", "codes"])
+                cols, names=["_id", "codes", "cell"][:len(cols)])
 
+    schema = ("_id long, codes array<int>"
+              + ("" if cents is None else ", cell int"))
     return df.select(id_col, vec_col).mapInArrow(
-        _enc, "_id long, codes array<int>").withColumnRenamed("_id", id_col)
+        _enc, schema).withColumnRenamed("_id", id_col)
 
 
 def pq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
@@ -600,49 +645,15 @@ def pq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
     queries rows finishes. Compose with ``ivf_centroids`` routing for
     IVF-PQ when even one full code scan is too much. Pass ``codebooks``
     to reuse a trained quantizer."""
+    q = _collect(queries, id_col, vec_col)
+    if q is None:
+        return df.sparkSession.createDataFrame([], _TOPK)
     if codebooks is None:
         codebooks = pq_codebooks(df, vec_col, id_col, m, n_codes, iters)
-    m, _k_cb, dsub = codebooks.shape
-    dim = m * dsub
     if codes is None:
         codes = pq_encode(df, codebooks, vec_col, id_col)
-    qrows = queries.select(id_col, vec_col).collect()
-    if not qrows:
-        return df.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, rank int")
-    q_ids = np.array([r[id_col] for r in qrows], dtype=np.int64)
-    qm = np.array([r[vec_col] for r in qrows], dtype=np.float64)
-    # ADC tables: T[q, s, c] = exact left-fold d2(q's subvector s, code c)
-    tables = np.stack([
-        np.stack([_sub_d2(qm[:, s * dsub:(s + 1) * dsub], codebooks[s])[qi]
-                  for s in range(m)])
-        for qi in range(len(q_ids))])
-    excl = exclude_self
-
-    def _scan(batches):
-        for b in batches:
-            ids = row_ids(b)
-            cd = matrix(b.column(1), m, np.int64)
-            for qi, qid in enumerate(q_ids):
-                adc = tables[qi, 0][cd[:, 0]]
-                for s in range(1, m):  # fixed-order fold == the SQL oracle
-                    adc = adc + tables[qi, s][cd[:, s]]
-                mask = ids != qid if excl else slice(None)
-                cand_ids, cand = ids[mask], adc[mask]
-                if cand_ids.size == 0:
-                    continue
-                top = np.lexsort((cand_ids, cand))[:k]
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.full(len(top), qid)),
-                     pa.array(cand_ids[top]), pa.array(cand[top])],
-                    names=["query_id", "neighbor_id", "_adc"])
-
-    local = codes.select(id_col, "codes").mapInArrow(
-        _scan, "query_id long, neighbor_id long, _adc double")
-    w = Window.partitionBy("query_id").orderBy("_adc", "neighbor_id")
-    return (local.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank"))
+    return _adc_topk(codes.select(id_col, "codes"), *q, codebooks, k,
+                     exclude_self)
 
 
 def ivfpq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
@@ -666,6 +677,9 @@ def ivfpq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
     once); the search scan emits per-partition local top-k per query (same
     map-side-combine shape as ``pq_topk``). Pass ``centroids`` /
     ``codebooks`` to reuse trained quantizers (train-once/query-many)."""
+    q = _collect(queries, id_col, vec_col)
+    if q is None:
+        return df.sparkSession.createDataFrame([], _TOPK)
     if centroids is None and codebooks is None:
         # the two trainers are independent Lloyd loops over the same input;
         # overlap their per-iteration jobs from two driver threads so the
@@ -685,69 +699,10 @@ def ivfpq_topk(df: DataFrame, queries: DataFrame, k: int = 5,
     if codebooks is None:
         codebooks = pq_codebooks(df, vec_col, id_col, m, n_codes,
                                  iters=iters)
-    cents = centroids
-    m, _k_cb, dsub = codebooks.shape
-    dim = m * dsub
-    cb = codebooks
-
-    def _cell_and_codes(batches):
-        for b in batches:
-            ids = row_ids(b)
-            xs = matrix(b.column(1), dim)
-            cell = np.argmax(_normalize(xs) @ cents.T, axis=1)
-            codes = np.empty((len(ids), m), dtype=np.int32)
-            for s in range(m):
-                codes[:, s] = np.argmin(
-                    _sub_d2(xs[:, s * dsub:(s + 1) * dsub], cb[s]), axis=1)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids), pa.array(cell.astype(np.int32)),
-                 _rows(codes)],
-                names=["_id", "cell", "codes"])
-
-    encoded = df.select(id_col, vec_col).mapInArrow(
-        _cell_and_codes, "_id long, cell int, codes array<int>")
-
-    qrows = queries.select(id_col, vec_col).collect()
-    if not qrows:
-        return df.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, rank int")
-    q_ids = np.array([r[id_col] for r in qrows], dtype=np.int64)
-    qm = np.array([r[vec_col] for r in qrows], dtype=np.float64)
-    q_cells = np.argsort(-(_normalize(qm) @ cents.T), axis=1)[:, :nprobe]
-    tables = np.stack([
-        np.stack([_sub_d2(qm[:, s * dsub:(s + 1) * dsub], cb[s])[qi]
-                  for s in range(m)])
-        for qi in range(len(q_ids))])
-    excl = exclude_self
-
-    def _scan(batches):
-        for b in batches:
-            ids = row_ids(b)
-            cell = row_ids(b, 1)
-            cd = matrix(b.column(2), m, np.int64)
-            for qi, qid in enumerate(q_ids):
-                mask = np.isin(cell, q_cells[qi])
-                if excl:
-                    mask &= ids != qid
-                if not mask.any():
-                    continue
-                cand_ids, cc = ids[mask], cd[mask]
-                adc = tables[qi, 0][cc[:, 0]]
-                for s in range(1, m):
-                    adc = adc + tables[qi, s][cc[:, s]]
-                top = np.lexsort((cand_ids, adc))[:k]
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.full(len(top), qid)),
-                     pa.array(cand_ids[top]), pa.array(adc[top])],
-                    names=["query_id", "neighbor_id", "_adc"])
-
-    local = encoded.mapInArrow(
-        _scan, "query_id long, neighbor_id long, _adc double")
-    w = Window.partitionBy("query_id").orderBy("_adc", "neighbor_id")
-    return (local.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank"))
-
+    encoded = _encode(df, codebooks, vec_col, id_col, centroids)
+    q_ids, qm = q
+    return _adc_topk(encoded, q_ids, qm, codebooks, k, exclude_self,
+                     _nearest(qm, centroids, nprobe))
 
 def embedding_group_stats(df: DataFrame, group_col: str = "label",
                           vec_col: str = "embedding") -> DataFrame:

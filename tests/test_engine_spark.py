@@ -1,6 +1,7 @@
 """End-to-end Spark build/probe: the flagship slice (SURVEY.md §7 Phase 1)."""
 
 import functools
+from decimal import Decimal
 
 import numpy as np
 import pytest
@@ -656,6 +657,29 @@ def test_double_build_values_hash_as_int64(spark):
     longs, _ = build_sketch(spark.createDataFrame(
         [(0,), (1,), (-2,)], "x long"), "x", bloom)
     assert doubles.to_bytes() == longs.to_bytes()
+
+
+def test_decimal_build_values_with_null(spark):
+    """Spark SQL types ``id / 10000.0`` as a decimal: a KLL over it, with
+    one NULL the build drops, sees the fractional values."""
+    df = spark.range(0, 10_000, numPartitions=3).selectExpr(
+        "IF(id = 5000, NULL, id / 10000.0) AS x")
+    assert dict(df.dtypes)["x"].startswith("decimal")
+    sk, _ = build_sketch(df, "x", functools.partial(make_sketch, "kll", k=200))
+    for q in (0.25, 0.5, 0.75):
+        assert abs(sk.quantile(q) - q) <= sk.rank_error() + 1e-4
+
+
+def test_decimal_build_values_hash_as_int64(spark):
+    """A Bloom over decimal(18,0) keys is byte-identical to the Bloom over
+    the same keys as int64."""
+    bloom = functools.partial(make_sketch, "bloom", size2=16, nb_hash=4)
+    decimals, _ = build_sketch(spark.createDataFrame(
+        [(Decimal(0),), (Decimal(1),), (Decimal(-2),)], "x decimal(18,0)"),
+        "x", bloom)
+    longs, _ = build_sketch(spark.createDataFrame(
+        [(0,), (1,), (-2,)], "x long"), "x", bloom)
+    assert decimals.to_bytes() == longs.to_bytes()
 
 
 def test_failed_collect_runs_one_job(spark):

@@ -550,6 +550,51 @@ def test_ivfpq_recall_and_quantizer_reuse(spark, emb):
     assert sorted(map(tuple, got)) == sorted(map(tuple, again))
 
 
+def test_ivfpq_probing_every_cell_is_pq(spark, emb):
+    """With the same codebooks, IVF-PQ probing every cell scans every row,
+    so it returns exactly the rows of pq_topk."""
+    from pimbloomfilters_spark.functions.similarity import (
+        ivf_centroids, ivfpq_topk, pq_codebooks, pq_topk)
+
+    queries = emb.filter("vec_id < 6")
+    cents = ivf_centroids(emb, n_centroids=8, iters=1)
+    cb = pq_codebooks(emb, m=4, n_codes=16, iters=0)
+    got = ivfpq_topk(emb, queries, k=5, nprobe=8, centroids=cents,
+                     codebooks=cb).collect()
+    want = pq_topk(emb, queries, k=5, codebooks=cb).collect()
+    assert len(want) == 30
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
+@pytest.mark.parametrize("case", [
+    "cosine_topk_bruteforce", "cosine_pairs_bruteforce", "pq_topk",
+    "ivfpq_topk"])
+def test_empty_collected_side_answers_empty(spark, emb, case):
+    """A driver-collected side with no rows (the queries, or the frame
+    itself for cosine_pairs_bruteforce) answers an empty frame in the
+    function's schema, and its collect is the only job run."""
+    none = emb.filter("vec_id < 0")
+    run = {"cosine_topk_bruteforce":
+               lambda: similarity.cosine_topk_bruteforce(emb, none),
+           "cosine_pairs_bruteforce":
+               lambda: similarity.cosine_pairs_bruteforce(none),
+           "pq_topk": lambda: similarity.pq_topk(emb, none),
+           "ivfpq_topk": lambda: similarity.ivfpq_topk(emb, none, iters=0),
+           }[case]
+    sc = spark.sparkContext
+    sc.setJobGroup(f"empty-{case}", "empty collected side")
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(f"empty-{case}")) == 1
+    assert out.collect() == []
+    assert out.schema.simpleString() == (
+        "struct<id_a:bigint,id_b:bigint,cos:double>"
+        if case == "cosine_pairs_bruteforce"
+        else "struct<query_id:bigint,neighbor_id:bigint,rank:int>")
+
+
 def test_near_dup_clusters_transitive(spark):
     """Pairs (1,2) and (2,3) are ONE component labeled by its min id;
     isolated docs stay singletons; a long chain converges too."""
